@@ -165,17 +165,3 @@ ZONE_WKTS = [
 def zones_table(spark: SparkSession) -> DataFrame:
     rows = [(fid, ZONE_EAS[fid], ZONE_WKTS[fid]) for fid in range(10)]
     return spark.createDataFrame(rows, "fid bigint, eas_id bigint, wkt string")
-
-
-def zones_rect_sql() -> str:
-    """DuckDB CTE for the 8 rectangular zones (envelope == exact), as
-    (fid, eas_id, minx, miny, maxx, maxy) — oracle side of rect joins."""
-    rows = []
-    for fid in range(8):
-        w = ZONE_WKTS[fid]
-        nums = [int(float(t)) for t in w.replace("POLYGON ((", "").replace("))", "").replace(",", " ").split()]
-        xs, ys = nums[0::2], nums[1::2]
-        rows.append(f"({fid}, {ZONE_EAS[fid]}, {min(xs)}, {min(ys)}, {max(xs)}, {max(ys)})")
-    return (
-        "(SELECT * FROM (VALUES " + ", ".join(rows) + ") AS z(fid, eas_id, minx, miny, maxx, maxy))"
-    )

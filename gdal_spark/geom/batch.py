@@ -249,24 +249,6 @@ class GeomBatchBuilder:
         self.geom_part_off.append(self.geom_part_off[-1])
         self.is_null.append(False)
 
-    def add_points_run(self, xs: np.ndarray, ys: np.ndarray) -> None:
-        """Bulk-append k POINT geometries (the vectorized fast path —
-        point-heavy batches never touch per-row Python)."""
-        k = len(xs)
-        if k == 0:
-            return
-        self.types.extend([GeomType.POINT] * k)
-        self.coord_chunks.append(np.column_stack([np.asarray(xs, np.float64), np.asarray(ys, np.float64)]))
-        c0 = self._ncoords
-        self._ncoords += k
-        self.ring_coord_off.extend(range(c0 + 1, c0 + k + 1))
-        nr = len(self.ring_coord_off) - 1  # total rings now
-        self.part_ring_off.extend(range(nr - k + 1, nr + 1))
-        self.part_types.extend([GeomType.POINT] * k)
-        np_ = len(self.part_ring_off) - 1
-        self.geom_part_off.extend(range(np_ - k + 1, np_ + 1))
-        self.is_null.extend([False] * k)
-
     def add(self, gtype: GeomType, parts: list[list[np.ndarray]]) -> None:
         """parts: [part -> [ring -> (k,2) array]]."""
         self.types.append(gtype)
@@ -312,3 +294,77 @@ class GeomBatchBuilder:
             is_null=np.asarray(self.is_null, dtype=bool),
             part_types=np.asarray(self.part_types, dtype=np.uint8),
         )
+
+
+def concat_ranges(starts: np.ndarray, ends: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenated arange(s, e) over all (s, e) ranges, plus the range
+    number each element came from — the index expansion every
+    offset-layer gather and scatter uses."""
+    lens = ends - starts
+    owner = np.repeat(np.arange(lens.size), lens)
+    first = np.repeat(starts - (np.cumsum(lens) - lens), lens)
+    return np.arange(owner.size) + first, owner
+
+
+def _offsets(counts: np.ndarray) -> np.ndarray:
+    """Exclusive-end offsets [0, c0, c0+c1, ...] of per-item counts."""
+    off = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=off[1:])
+    return off
+
+
+def single_ring_batch(gtype: GeomType, coords: np.ndarray, counts: np.ndarray) -> GeomBatch:
+    """len(counts) geometries of one part and one ring each (POINT or
+    single-ring POLYGON); geometry k owns the next counts[k] rows of
+    coords."""
+    k = len(counts)
+    return GeomBatch(
+        types=np.full(k, gtype, dtype=np.uint8),
+        geom_part_off=np.arange(k + 1, dtype=np.int64),
+        part_ring_off=np.arange(k + 1, dtype=np.int64),
+        ring_coord_off=_offsets(counts),
+        coords=np.asarray(coords, dtype=np.float64).reshape(-1, 2),
+        is_null=np.zeros(k, dtype=bool),
+        part_types=np.full(k, gtype, dtype=np.uint8),
+    )
+
+
+def interleave(n: int, pieces: list[tuple[np.ndarray, GeomBatch]]) -> GeomBatch:
+    """One n-row batch from (rows, sub-batch) pieces: result row
+    rows[k] is geometry k of that piece. Rows no piece covers are
+    NULL. Pure offset arithmetic — no per-row work."""
+    types = np.zeros(n, dtype=np.uint8)
+    is_null = np.ones(n, dtype=bool)
+    nparts = np.zeros(n, dtype=np.int64)
+    for rows, b in pieces:
+        types[rows] = b.types
+        is_null[rows] = b.is_null
+        nparts[rows] = np.diff(b.geom_part_off)
+
+    # each layer: the destination index of every piece element is its
+    # parent's destination start plus its rank inside the parent
+    gpo = _offsets(nparts)
+    dest = [concat_ranges(gpo[rows], gpo[rows + 1])[0] for rows, _ in pieces]
+    nrings = np.zeros(gpo[-1], dtype=np.int64)
+    part_types = np.zeros(gpo[-1], dtype=np.uint8)
+    for d, (_, b) in zip(dest, pieces):
+        nrings[d] = np.diff(b.part_ring_off)
+        part_types[d] = b.part_types
+    pro = _offsets(nrings)
+    dest = [concat_ranges(pro[d], pro[d + 1])[0] for d in dest]
+    ncoords = np.zeros(pro[-1], dtype=np.int64)
+    for d, (_, b) in zip(dest, pieces):
+        ncoords[d] = np.diff(b.ring_coord_off)
+    rco = _offsets(ncoords)
+    coords = np.empty((rco[-1], 2), dtype=np.float64)
+    for d, (_, b) in zip(dest, pieces):
+        coords[concat_ranges(rco[d], rco[d + 1])[0]] = b.coords
+    return GeomBatch(
+        types=types,
+        geom_part_off=gpo,
+        part_ring_off=pro,
+        ring_coord_off=rco,
+        coords=coords,
+        is_null=is_null,
+        part_types=part_types,
+    )

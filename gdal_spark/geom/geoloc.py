@@ -114,20 +114,3 @@ class GeolocTransformer:
         py = (gl + self.conv_off) * self.line_step + self.line_offset
         return px, py
 
-
-class GeolocPipeline:
-    """Warp-path adapter (same contract as GCP/RPC pipelines):
-    source 'world' == source pixel; inverse(dst world) -> src pixel."""
-
-    def __init__(self, geoloc_x, geoloc_y, geo_pipeline=None, **kw):
-        self.tr = GeolocTransformer(geoloc_x, geoloc_y, **kw)
-        self.geo = geo_pipeline
-
-    def forward(self, px, py):
-        x, y = self.tr.forward(px, py)
-        return self.geo.forward(x, y) if self.geo is not None else (x, y)
-
-    def inverse(self, X, Y):
-        if self.geo is not None:
-            X, Y = self.geo.inverse(X, Y)
-        return self.tr.inverse(X, Y)

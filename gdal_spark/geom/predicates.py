@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from gdal_spark.geom.batch import GeomBatch, GeomType
+from gdal_spark.geom.batch import GeomBatch, GeomType, concat_ranges
 
 
 # ---------------------------------------------------------------------------
@@ -82,27 +82,38 @@ def points_in_edges(px: np.ndarray, py: np.ndarray, edges, boundary: bool = True
     (the rasterizer's pixel-center rule, where centers at .5 offsets
     never hit integer edges).
     """
-    x1, y1, x2, y2 = edges
     px = np.asarray(px, dtype=np.float64).reshape(-1, 1)
     py = np.asarray(py, dtype=np.float64).reshape(-1, 1)
-    if len(x1) == 0:
+    if len(edges[0]) == 0:
         return np.zeros(px.shape[0], dtype=bool)
+    inside = (_ray_hits(px, py, edges).sum(axis=1) & 1).astype(bool)
+    if boundary:
+        inside |= _on_edge(px, py, edges).any(axis=1)
+    return inside
+
+
+def _ray_hits(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
+    """(N, E) crossings of the rightward rays from N column-shaped
+    points with E edges — the terms points_in_edges counts."""
+    x1, y1, x2, y2 = edges
     crosses = (y1 <= py) != (y2 <= py)  # (N, E)
     # x of edge at scanline py (safe: where ~crosses the value is unused)
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-    hits = crosses & (xint > px)
-    inside = (hits.sum(axis=1) & 1).astype(bool)
-    if boundary:
-        on_edge = (
-            ((x2 - x1) * (py - y1) - (y2 - y1) * (px - x1) == 0)
-            & (np.minimum(x1, x2) <= px)
-            & (px <= np.maximum(x1, x2))
-            & (np.minimum(y1, y2) <= py)
-            & (py <= np.maximum(y1, y2))
-        )
-        inside |= on_edge.any(axis=1)
-    return inside
+    return crosses & (xint > px)
+
+
+def _on_edge(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
+    """(N, E) closed point-on-segment test (collinear and inside the
+    segment's box)."""
+    x1, y1, x2, y2 = edges
+    return (
+        ((x2 - x1) * (py - y1) - (y2 - y1) * (px - x1) == 0)
+        & (np.minimum(x1, x2) <= px)
+        & (px <= np.maximum(x1, x2))
+        & (np.minimum(y1, y2) <= py)
+        & (py <= np.maximum(y1, y2))
+    )
 
 
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
@@ -129,17 +140,20 @@ def edges_intersect_any(ea, eb) -> bool:
     """True iff any edge of table ea intersects any edge of table eb
     (proper or improper, incl. collinear overlap). Vectorized over the
     full Ea×Eb pair matrix."""
+    if ea[0].size == 0 or eb[0].size == 0:
+        return False
+    return bool(_edge_pair_hits(ea, eb).any())
+
+
+def _edge_pair_hits(ea, eb) -> np.ndarray:
+    """(Ea, Eb) segment-intersection matrix of two edge tables."""
     ax1, ay1, ax2, ay2 = (v.reshape(-1, 1) for v in ea)
     bx1, by1, bx2, by2 = eb
-    if ax1.size == 0 or bx1.size == 0:
-        return False
     d1 = _cross_sign(ax1, ay1, ax2, ay2, bx1, by1)
     d2 = _cross_sign(ax1, ay1, ax2, ay2, bx2, by2)
     d3 = _cross_sign(bx1, by1, bx2, by2, ax1, ay1)
     d4 = _cross_sign(bx1, by1, bx2, by2, ax2, ay2)
     proper = (d1 * d2 < 0) & (d3 * d4 < 0)
-    if proper.any():
-        return True
 
     def on_seg(px, py, x1, y1, x2, y2):
         return (
@@ -149,13 +163,13 @@ def edges_intersect_any(ea, eb) -> bool:
             & (py <= np.maximum(y1, y2))
         )
 
-    touch = (
-        ((d1 == 0) & on_seg(bx1, by1, ax1, ay1, ax2, ay2))
+    return (
+        proper
+        | ((d1 == 0) & on_seg(bx1, by1, ax1, ay1, ax2, ay2))
         | ((d2 == 0) & on_seg(bx2, by2, ax1, ay1, ax2, ay2))
         | ((d3 == 0) & on_seg(ax1, ay1, bx1, by1, bx2, by2))
         | ((d4 == 0) & on_seg(ax2, ay2, bx1, by1, bx2, by2))
     )
-    return bool(touch.any())
 
 
 # ---------------------------------------------------------------------------
@@ -213,6 +227,142 @@ def batch_intersects_rings(batch: GeomBatch, i: int, poly_rings, poly_edges=None
             for mt, rings in batch.collection_members(i)
         )
     return geometry_intersects_rings(gtype, parts, poly_rings, poly_edges)
+
+
+# ---------------------------------------------------------------------------
+# grouped exact Intersects: many geometries x one polygon
+
+# elements per pairwise (points x edges, edges x edges) matrix chunk
+_CHUNK_CELLS = 1 << 20
+
+_POINT_TYPES = (GeomType.POINT, GeomType.MULTIPOINT)
+_LINE_TYPES = (GeomType.LINESTRING, GeomType.MULTILINESTRING)
+_POLY_TYPES = (GeomType.POLYGON, GeomType.MULTIPOLYGON)
+
+
+def _ring_edges(batch: GeomBatch, ring_idx: np.ndarray, close: bool):
+    """Edge table of the given rings, edges grouped by ring in input
+    order, plus the input position owning each edge. close=True adds
+    the implicit closing edge of unclosed rings (rings_to_edges);
+    close=False is line_to_edges. Rings under 2 vertices add none."""
+    s = batch.ring_coord_off[ring_idx]
+    e = batch.ring_coord_off[ring_idx + 1]
+    cnt = np.maximum(e - s - 1, 0)
+    if close:
+        big = np.flatnonzero(e - s >= 2)
+        unclosed = ~(batch.coords[s[big]] == batch.coords[e[big] - 1]).all(axis=1)
+        cnt[big[unclosed]] += 1
+    a, own = concat_ranges(s, s + cnt)
+    b = a + 1
+    wrap = b == e[own]
+    b[wrap] = s[own[wrap]]
+    c = batch.coords
+    return (c[a, 0], c[a, 1], c[b, 0], c[b, 1]), own
+
+
+def _chunks(n: int, width: int):
+    step = max(1, _CHUNK_CELLS // max(1, width))
+    for a in range(0, n, step):
+        yield slice(a, min(n, a + step))
+
+
+def intersects_rings_grouped(batch: GeomBatch, rows, poly_rings, poly_edges=None) -> np.ndarray:
+    """Exact Intersects(batch geometry rows[k], polygon) for every k in
+    one numpy pass — the grouped form of batch_intersects_rings, with
+    the same decomposition per part and the same per-element formulas,
+    so both agree bit for bit:
+
+      1. any vertex of a part's first ring (exterior ring of a
+         polygon part, the coordinates of a point or line part) is in
+         the polygon (points_in_edges);
+      2. polygon parts only: any vertex of the polygon's first ring is
+         in the part (even-odd over the part's rings plus boundary —
+         ray crossings and on-edge hits reduced per part by segment);
+      3. any edge of the geometry crosses a polygon edge (the
+         edges_intersect_any matrix, reduced per geometry edge).
+
+    Each stage only sees the rows the earlier ones left undecided, and
+    every pairwise matrix is built in chunks of about _CHUNK_CELLS
+    elements. GEOMETRYCOLLECTION rows take the per-row path; NULL,
+    EMPTY and unknown rows are False."""
+    rows = np.asarray(rows, dtype=np.int64)
+    out = np.zeros(rows.size, dtype=bool)
+    if rows.size == 0:
+        return out
+    if poly_edges is None:
+        poly_edges = rings_to_edges(poly_rings)
+    types = batch.types[rows]
+    for k in np.flatnonzero(types == GeomType.GEOMETRYCOLLECTION):
+        out[k] = batch_intersects_rings(batch, int(rows[k]), poly_rings, poly_edges)
+    is_poly = np.isin(types, _POLY_TYPES)
+    live = np.flatnonzero(np.isin(types, _POINT_TYPES + _LINE_TYPES) | is_poly)
+    if live.size == 0:
+        return out
+    gpo, pro = batch.geom_part_off, batch.part_ring_off
+    zone_edges = tuple(np.asarray(v, dtype=np.float64) for v in poly_edges)
+    nz = zone_edges[0].size
+
+    # 1. first-ring vertices of every part in the polygon
+    cidx, cown = _first_ring_coords(batch, rows[live])
+    hit = np.zeros(live.size, dtype=bool)
+    for sl in _chunks(cidx.size, nz):
+        c = batch.coords[cidx[sl]]
+        hit[cown[sl][points_in_edges(c[:, 0], c[:, 1], zone_edges)]] = True
+    out[live[hit]] = True
+    live = live[~hit]
+
+    # 2. a polygon first-ring vertex inside a polygon part of the row
+    poly_first = poly_rings[0] if poly_rings else np.empty((0, 2))
+    cand = live[is_poly[live]]
+    if len(poly_first) and cand.size:
+        part, pown = concat_ranges(gpo[rows[cand]], gpo[rows[cand] + 1])
+        ring, rown = concat_ranges(pro[part], pro[part + 1])
+        edges, eown = _ring_edges(batch, ring, close=True)
+        epart = rown[eown]  # part position of each edge, non-decreasing
+        if epart.size:
+            seg = np.flatnonzero(np.r_[True, epart[1:] != epart[:-1]])
+            part_in = np.zeros(part.size, dtype=bool)
+            vx = np.asarray(poly_first[:, 0], dtype=np.float64)
+            vy = np.asarray(poly_first[:, 1], dtype=np.float64)
+            for sl in _chunks(vx.size, epart.size):
+                px, py = vx[sl].reshape(-1, 1), vy[sl].reshape(-1, 1)
+                parity = np.logical_xor.reduceat(_ray_hits(px, py, edges), seg, axis=1)
+                on = np.logical_or.reduceat(_on_edge(px, py, edges), seg, axis=1)
+                part_in[epart[seg]] |= (parity | on).any(axis=0)
+            hit = np.zeros(cand.size, dtype=bool)
+            hit[pown[part_in]] = True
+            out[cand[hit]] = True
+            live = np.setdiff1d(live, cand[hit], assume_unique=True)
+
+    # 3. edge x edge: every ring of a polygon part (closed), the first
+    # ring of a line part (open); point rows have no edges
+    lines = live[np.isin(types[live], _LINE_TYPES)]
+    polys = live[is_poly[live]]
+    for cand, close in ((lines, False), (polys, True)):
+        if cand.size == 0:
+            continue
+        part, pown = concat_ranges(gpo[rows[cand]], gpo[rows[cand] + 1])
+        if close:
+            ring, rown = concat_ranges(pro[part], pro[part + 1])
+        else:
+            ring, rown = pro[part], np.arange(part.size)
+        edges, eown = _ring_edges(batch, ring, close=close)
+        hit = np.zeros(cand.size, dtype=bool)
+        for sl in _chunks(eown.size, nz):
+            crossed = _edge_pair_hits(tuple(v[sl] for v in edges), zone_edges).any(axis=1)
+            hit[pown[rown[eown[sl][crossed]]]] = True
+        out[cand[hit]] = True
+    return out
+
+
+def _first_ring_coords(batch: GeomBatch, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Coordinate indexes of the first ring of every part of the given
+    rows (exterior rings of polygons, all vertices of points and
+    lines), plus the row position owning each."""
+    gpo, pro, rco = batch.geom_part_off, batch.part_ring_off, batch.ring_coord_off
+    part, pown = concat_ranges(gpo[rows], gpo[rows + 1])
+    cidx, cown = concat_ranges(rco[pro[part]], rco[pro[part] + 1])
+    return cidx, pown[cown]
 
 
 def rings_is_rectangle(rings: list[np.ndarray]) -> bool:
@@ -276,22 +426,13 @@ def filter_geometry_batch(
         )
         out[candidates[contained]] = True
         remaining = candidates[~contained]
-        # stage 2b: any vertex (exterior ring only for polygons) in envelope
-        still = []
-        for i in remaining:
-            gtype, parts = batch.geometry(i)
-            vs = []
-            for rings in parts:
-                if gtype in (GeomType.POLYGON, GeomType.MULTIPOLYGON):
-                    vs.append(rings[0])  # exterior ring only (ogrlayer.cpp:3955)
-                else:
-                    vs.append(rings[0])
-            v = np.concatenate(vs, axis=0) if vs else np.empty((0, 2))
-            if points_in_rect(v[:, 0], v[:, 1], *f_env).any():
-                out[i] = True
-            else:
-                still.append(i)
-        remaining = np.asarray(still, dtype=np.int64)
+        # stage 2b: any vertex (exterior ring only for polygons,
+        # ogrlayer.cpp:3955) in envelope
+        cidx, cown = _first_ring_coords(batch, remaining)
+        vin = np.zeros(remaining.size, dtype=bool)
+        vin[cown[points_in_rect(batch.coords[cidx, 0], batch.coords[cidx, 1], *f_env)]] = True
+        out[remaining[vin]] = True
+        remaining = remaining[~vin]
     else:
         remaining = candidates
 
@@ -299,15 +440,5 @@ def filter_geometry_batch(
     if not exact:
         out[remaining] = True
         return out
-    # vectorized fast path: all-point batch
-    ptmask = (batch.types[remaining] == GeomType.POINT) if remaining.size else np.empty(0, dtype=bool)
-    pts_idx = remaining[ptmask]
-    if pts_idx.size:
-        first_ring = batch.part_ring_off[batch.geom_part_off[pts_idx]]
-        cidx = batch.ring_coord_off[first_ring]
-        px = batch.coords[cidx, 0]
-        py = batch.coords[cidx, 1]
-        out[pts_idx] = points_in_edges(px, py, fe)
-    for i in remaining[~ptmask] if remaining.size else []:
-        out[i] = batch_intersects_rings(batch, i, filter_rings, fe)
+    out[remaining] = intersects_rings_grouped(batch, remaining, filter_rings, fe)
     return out

@@ -65,8 +65,9 @@ class PackedRTree:
     def query_rect(self, minx: float, miny: float, maxx: float, maxy: float) -> np.ndarray:
         """Original item indices whose envelopes intersect the rect
         (inclusive overlap — touching counts, matching the strict-<
-        reject of FilterGeometry stage 1, ogrlayer.cpp:4031)."""
-        if self.num_items == 0:
+        reject of FilterGeometry stage 1, ogrlayer.cpp:4031). A rect
+        with a NaN bound matches nothing."""
+        if self.num_items == 0 or np.isnan([minx, miny, maxx, maxy]).any():
             return np.empty(0, dtype=np.int64)
         ns = self.node_size
         # walk down from root
@@ -115,3 +116,30 @@ class PackedRTree:
             out_p.append(pi + s)
             out_i.append(self.order[li])
         return np.concatenate(out_p), np.concatenate(out_i)
+
+    def query_rects(self, envs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Batch rect probe -> (row_idx, item_idx) candidate pairs, the
+        pairs query_rect returns row by row (same inclusive overlap, NaN
+        rows and NaN leaves never match, items in leaf order within a
+        row), from one chunked leaf sweep like query_points."""
+        envs = np.asarray(envs, dtype=np.float64).reshape(-1, 4)
+        if self.num_items == 0 or len(envs) == 0:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+        leaves = self.levels[0]
+        valid_leaf = ~np.isnan(leaves[:, 0])
+        rows = np.flatnonzero(~np.isnan(envs).any(axis=1))
+        out_r: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        out_i: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        chunk = max(1, int(64e6 / max(1, len(leaves))))
+        for s in range(0, rows.size, chunk):
+            e = envs[rows[s : s + chunk]]
+            m = valid_leaf & ~(
+                (leaves[None, :, 2] < e[:, 0, None])
+                | (leaves[None, :, 3] < e[:, 1, None])
+                | (e[:, 2, None] < leaves[None, :, 0])
+                | (e[:, 3, None] < leaves[None, :, 1])
+            )
+            ri, li = np.nonzero(m)
+            out_r.append(rows[s + ri])
+            out_i.append(self.order[li])
+        return np.concatenate(out_r), np.concatenate(out_i)

@@ -11,8 +11,10 @@ and the per-class importFromWkt readers. Matching behaviors:
   - invalid text is reported as an error, not silently dropped
     (FIXTURES.md F1: invalid rows routed to an error column).
 
-Parsing is per-string (strings are inherently ragged) but all number
-conversion uses np.fromstring and the output is a columnar GeomBatch;
+parse_wkt reads the two canonical shapes of document workloads
+('POINT (x y)' and a single-ring 'POLYGON ((x y,...))') a whole
+class at a time — regex extract, one np.fromstring, bulk offsets — and
+every other form per string; the output is one columnar GeomBatch and
 downstream math is fully vectorized.
 """
 
@@ -22,7 +24,7 @@ import re
 
 import numpy as np
 
-from gdal_spark.geom.batch import GeomBatch, GeomBatchBuilder, GeomType
+from gdal_spark.geom.batch import GeomBatch, GeomBatchBuilder, GeomType, interleave, single_ring_batch
 
 _TYPE_RE = re.compile(
     r"^\s*([A-Za-z]+)\s*(Z|M|ZM)?\s*(EMPTY|\(.*\))\s*$", re.IGNORECASE | re.DOTALL
@@ -330,6 +332,8 @@ def parse_wkt_m(strings) -> list:
 
 
 _FAST_POINT_RE = r"^POINT \((-?[0-9]+(?:\.[0-9]+)?(?:[eE][-+]?[0-9]+)?) (-?[0-9]+(?:\.[0-9]+)?(?:[eE][-+]?[0-9]+)?)\)$"
+_NUM = r"-?[0-9]+(?:\.[0-9]+)?"
+_FAST_POLYGON_RE = rf"POLYGON \(\({_NUM} {_NUM}(?:,{_NUM} {_NUM})*\)\)"
 
 
 def parse_wkt(strings, return_errors: bool = False):
@@ -338,10 +342,14 @@ def parse_wkt(strings, return_errors: bool = False):
     With return_errors=True also returns a list[str|None] of parse
     errors; erroring rows become NULL geometries (never dropped).
 
-    Canonical 'POINT (x y)' rows — the dominant shape in document
-    workloads — take a fully vectorized path (one C-level regex
-    extract + bulk array assembly, no per-row Python); everything
-    else falls back to the general per-string reader.
+    Two canonical shapes take a vectorized path — 'POINT (x y)' and a
+    single-ring 2-D 'POLYGON ((x y,x y,...))' without exponents,
+    the dominant shapes of document workloads: one regex pass per
+    class, one bulk number conversion per class (the polygons' joined
+    coordinate text goes through a single np.fromstring), and bulk
+    offset assembly. Every other form goes
+    through the general per-string reader. The classes are assembled
+    into one batch by row (batch.interleave), not run by run.
     """
     import pandas as pd
 
@@ -350,30 +358,44 @@ def parse_wkt(strings, return_errors: bool = False):
     n = len(s)
     errors: list[str | None] = [None] * n
     null_mask = s.isna().to_numpy()
-    ext = s.fillna("").astype(str).str.extract(_FAST_POINT_RE)
-    px = pd.to_numeric(ext[0], errors="coerce").to_numpy(dtype=np.float64)
-    py = pd.to_numeric(ext[1], errors="coerce").to_numpy(dtype=np.float64)
+    text = s.fillna("").astype(str)
+    ext = text.str.extract(_FAST_POINT_RE)
+    # astype(float), not pd.to_numeric: pandas' own string-to-double
+    # conversion is off by one ulp on ~1 in 8 17-digit values, which
+    # would break the lossless to_wkt -> parse_wkt round trip
+    px = ext[0].astype(np.float64).to_numpy()
+    py = ext[1].astype(np.float64).to_numpy()
     fast = ~null_mask & ~np.isnan(px) & ~np.isnan(py)
-    cls = np.where(null_mask, 0, np.where(fast, 1, 2)).astype(np.int8)
+    pieces = []
+    if fast.any():
+        pt_rows = np.flatnonzero(fast)
+        xy = np.column_stack([px[pt_rows], py[pt_rows]])
+        pieces.append((pt_rows, single_ring_batch(GeomType.POINT, xy, np.ones(pt_rows.size, np.int64))))
+
+    rest = np.flatnonzero(~null_mask & ~fast)
+    poly = text.iloc[rest].str.fullmatch(_FAST_POLYGON_RE).to_numpy(dtype=bool)
+    if poly.any():
+        # one buffer for the whole class: rows split by newlines, which
+        # the fullmatch rules out inside a row
+        buf = "\n".join(text.iloc[rest[poly]]).encode("ascii")
+        ch = np.frombuffer(buf, dtype=np.uint8)
+        row_of = np.cumsum(ch == ord("\n"))
+        counts = np.bincount(row_of[ch == ord(",")], minlength=int(poly.sum())) + 1
+        nums = buf.replace(b"POLYGON ((", b"").replace(b"))", b" ").replace(b",", b" ")
+        xy = np.fromstring(nums, sep=" ").reshape(-1, 2)
+        pieces.append((rest[poly], single_ring_batch(GeomType.POLYGON, xy, counts)))
+        rest = rest[~poly]
 
     builder = GeomBatchBuilder()
-    bounds = np.concatenate([[0], np.flatnonzero(np.diff(cls)) + 1, [n]])
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        c = cls[a]
-        if c == 0:
-            for _ in range(a, b):
-                builder.add_null()
-        elif c == 1:
-            builder.add_points_run(px[a:b], py[a:b])
-        else:
-            for i in range(a, b):
-                try:
-                    _parse_one(s.iloc[i], builder)
-                except WktError as exc:
-                    # route to error column, keep row (FIXTURES.md F1)
-                    builder.add_null()
-                    errors[i] = str(exc)
-    batch = builder.finish()
+    for i in rest:
+        try:
+            _parse_one(s.iloc[i], builder)
+        except WktError as exc:
+            # route to error column, keep row (FIXTURES.md F1)
+            builder.add_null()
+            errors[i] = str(exc)
+    pieces.append((rest, builder.finish()))
+    batch = interleave(n, pieces)
     if return_errors:
         return batch, errors
     return batch

@@ -114,20 +114,6 @@ def salted_key(cell_col: Column, id_col: Column, k: int = 8) -> Column:
     return F.concat_ws("_", cell_col.cast("string"), F.pmod(F.xxhash64(id_col), F.lit(k)).cast("string"))
 
 
-def repartition_by_cell(df: DataFrame, cell_col: str = "cell_h", num_partitions: int | None = None) -> DataFrame:
-    """The physical layout contract: range-partition by Hilbert cell
-    then sort within partitions — the distributed equivalent of
-    `gdal vector sort --by hilbert` (gdalalg_vector_sort.cpp:302).
-    Written this way, Parquet/Iceberg files get tight cell min/max
-    stats, so later scans prune files by cell range for free."""
-    cols = [F.col(cell_col)]
-    if num_partitions:
-        df = df.repartitionByRange(num_partitions, *cols)
-    else:
-        df = df.repartitionByRange(*cols)
-    return df.sortWithinPartitions(*cols)
-
-
 # ---------------------------------------------------------------------------
 # True spherical S2 cells (geom/s2.py) — the north star's named
 # "H3/S2 cell encoding ... repartitioning by cell prefix".

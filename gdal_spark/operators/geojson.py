@@ -159,15 +159,6 @@ def json_geometry_at(batch, i: int) -> dict | None:
             "coordinates": [[_coords_list(r, True) for r in p] for p in parts]}
 
 
-def _feature_obj(fid, wkt, props_json: str | None) -> dict:
-    f = {"type": "Feature"}
-    if fid is not None:
-        f["id"] = fid
-    f["geometry"] = wkt_to_json_geometry(wkt)
-    f["properties"] = json.loads(props_json) if props_json else {}
-    return f
-
-
 def _parse_feature(obj: dict) -> dict:
     if obj.get("type") != "Feature":
         # bare geometry lines are legal in sequences (RFC 8142 §2)

@@ -110,18 +110,6 @@ def cog_overview_dims(width: int, height: int, tile_size: int) -> list[tuple[int
     return dims
 
 
-def level_spec(spec: RasterSpec, ovr: int) -> RasterSpec:
-    """RasterSpec of overview level `ovr` (0 = full res). The GT scales
-    by 2^ovr — GDAL overview georeferencing keeps the same origin."""
-    w, h = cog_overview_dims(spec.width, spec.height, spec.tile_size)[ovr]
-    s = float(1 << ovr)
-    g0, g1, g2, g3, g4, g5 = spec.gt
-    return RasterSpec(
-        width=w, height=h, gt=(g0, g1 * s, g2 * s, g3, g4 * s, g5 * s),
-        dtype=spec.dtype, nbands=spec.nbands, tile_size=spec.tile_size,
-    )
-
-
 def downsample_level(
     tiles: DataFrame, src_spec: RasterSpec, resampling: str = "average"
 ) -> tuple[DataFrame, RasterSpec]:
@@ -196,20 +184,6 @@ def downsample_level(
 
 def tiles_across(dim: int, tile_size: int) -> int:
     return (dim + tile_size - 1) // tile_size
-
-
-def cog_tile_index(ovr: int, band: int, ty: int, tx: int, dims, tile_size: int, nbands: int) -> int:
-    """Global data-order rank of one tile: smallest overview level
-    first, full resolution last (COG rule); within a level plane-major
-    (TIFF PlanarConfiguration=2 offset order), row-major tiles."""
-    nlev = len(dims)
-    rank = 0
-    for o in range(nlev - 1, ovr, -1):
-        w, h = dims[o]
-        rank += tiles_across(w, tile_size) * tiles_across(h, tile_size) * nbands
-    w, h = dims[ovr]
-    ax, ay = tiles_across(w, tile_size), tiles_across(h, tile_size)
-    return rank + (band - 1) * ax * ay + ty * ax + tx
 
 
 # ---------------------------------------------------------------------------

@@ -41,9 +41,8 @@ from pyspark.sql.types import (
 
 from gdal_spark.geom.batch import GeomBatch, GeomType
 from gdal_spark.geom.predicates import (
-    batch_intersects_rings,
     filter_geometry_batch,
-    geometry_intersects_rings,
+    intersects_rings_grouped,
     points_in_edges,
     rings_to_edges,
 )
@@ -182,27 +181,23 @@ class ZoneIndex:
         """Exact intersects of N points vs the zone set.
         Returns (point_idx, zone_pos) pairs after ray-cast verify."""
         pi, zi = self.tree.query_points(px, py)
-        if pi.size == 0:
-            return pi, zi
         keep = np.zeros(pi.size, dtype=bool)
-        # group candidate pairs by zone -> one vectorized ray cast per zone
-        order = np.argsort(zi, kind="stable")
-        pi, zi = pi[order], zi[order]
-        bounds = np.flatnonzero(np.diff(zi)) + 1
-        for s, e in zip(np.concatenate([[0], bounds]), np.concatenate([bounds, [zi.size]])):
-            z = zi[s]
-            keep[s:e] = points_in_edges(px[pi[s:e]], py[pi[s:e]], self.edges[z])
+        # one vectorized ray cast per zone
+        for z, idx in _by_zone(zi):
+            keep[idx] = points_in_edges(px[pi[idx]], py[pi[idx]], self.edges[z])
         return pi[keep], zi[keep]
 
     def probe_batch(self, batch: GeomBatch) -> tuple[np.ndarray, np.ndarray]:
-        """Exact intersects of a mixed geometry batch vs the zone set.
-        Point rows go through the vectorized path; other rows probe the
-        R-tree by envelope then verify pairwise."""
-        n = len(batch)
+        """Exact intersects of a mixed geometry batch vs the zone set ->
+        (row, zone_pos) pairs. Point rows go through probe_points; the
+        other non-empty rows probe the R-tree with their envelopes in
+        one query_rects sweep and verify with one grouped kernel call
+        per zone (intersects_rings_grouped) — no per-row or per-pair
+        Python outside GEOMETRYCOLLECTION rows."""
         envs = batch.envelopes()
         is_pt = (batch.types == GeomType.POINT) & ~batch.is_empty
-        out_d: list[np.ndarray] = []
-        out_z: list[np.ndarray] = []
+        out_d: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        out_z: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
         pt_idx = np.flatnonzero(is_pt)
         if pt_idx.size:
             first_ring = batch.part_ring_off[batch.geom_part_off[pt_idx]]
@@ -210,50 +205,80 @@ class ZoneIndex:
             pi, zi = self.probe_points(batch.coords[cidx, 0], batch.coords[cidx, 1])
             out_d.append(pt_idx[pi])
             out_z.append(zi)
-        for i in np.flatnonzero(~is_pt & ~batch.is_empty):
-            if np.isnan(envs[i, 0]):
-                continue
-            cand = self.tree.query_rect(*envs[i])
-            if cand.size == 0:
-                continue
-            hits = [z for z in cand if batch_intersects_rings(batch, i, self.rings[z], self.edges[z])]
-            if hits:
-                out_d.append(np.full(len(hits), i, dtype=np.int64))
-                out_z.append(np.asarray(hits, dtype=np.int64))
-        if not out_d:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+        other = np.flatnonzero(~is_pt & ~batch.is_empty)
+        ri, zi = self.tree.query_rects(envs[other])
+        rows = other[ri]
+        keep = np.zeros(rows.size, dtype=bool)
+        for z, idx in _by_zone(zi):
+            keep[idx] = intersects_rings_grouped(batch, rows[idx], self.rings[z], self.edges[z])
+        out_d.append(rows[keep])
+        out_z.append(zi[keep])
         return np.concatenate(out_d), np.concatenate(out_z)
 
 
-_EDGE_STRUCT = "array<struct<x1:double,y1:double,x2:double,y2:double>>"
+def _by_zone(zpos: np.ndarray):
+    """(zone, positions) for each distinct zone of a candidate-pair
+    zone column — the grouping every per-zone verify loops over."""
+    order = np.argsort(zpos, kind="stable")
+    bounds = np.flatnonzero(np.diff(zpos[order])) + 1
+    for idx in np.split(order, bounds) if order.size else []:
+        yield int(zpos[idx[0]]), idx
 
 
-def _zones_literal(zidx: "ZoneIndex"):
-    """The zone set as one literal array<struct<fid, env, edges>> —
-    the shape the whole-stage-codegen point path filters per row.
-    Edge values come from the SAME rings_to_edges tables the numpy
-    probe uses, so both paths test identical doubles."""
+_EDGE_STRUCT = "ARRAY<STRUCT<x1: DOUBLE, y1: DOUBLE, x2: DOUBLE, y2: DOUBLE>>"
+
+
+def _sql_double(v: float) -> str:
+    """Exact double literal: repr round-trips, the D suffix keeps it a
+    DOUBLE (not DECIMAL); NaN/inf have no literal form."""
+    v = float(v)
+    return f"{v!r}D" if np.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
+def _zone_fids_sql(zidx: "ZoneIndex", px: str, py: str) -> str:
+    """SQL for the fids of the zones containing point (px, py): the
+    zone set as one literal array<struct<fid, env, edges>> filtered
+    by the even-odd ray cast. Edge values come from the SAME
+    rings_to_edges tables the numpy probe uses, and every formula
+    keeps points_in_edges' operation order, so both paths test
+    identical doubles. Built as one string and parsed once: a Column
+    object per literal costs a py4j round trip each."""
+    d = _sql_double
     zs = []
     for pos in range(len(zidx.fids)):
         x1, y1, x2, y2 = zidx.edges[pos]
-        env = zidx.envs[pos]
         if len(x1):
-            edges = F.array(*[
-                F.struct(
-                    F.lit(float(a)).alias("x1"), F.lit(float(b)).alias("y1"),
-                    F.lit(float(c)).alias("x2"), F.lit(float(d)).alias("y2"),
-                )
-                for a, b, c, d in zip(x1, y1, x2, y2)
-            ])
+            edges = "array(" + ",".join(
+                f"named_struct('x1',{d(a)},'y1',{d(b)},'x2',{d(c)},'y2',{d(e)})"
+                for a, b, c, e in zip(x1, y1, x2, y2)
+            ) + ")"
         else:
-            edges = F.array().cast(_EDGE_STRUCT)
-        zs.append(F.struct(
-            F.lit(int(zidx.fids[pos])).cast("long").alias("fid"),
-            F.lit(float(env[0])).alias("minx"), F.lit(float(env[1])).alias("miny"),
-            F.lit(float(env[2])).alias("maxx"), F.lit(float(env[3])).alias("maxy"),
-            edges.alias("edges"),
-        ))
-    return F.array(*zs)
+            edges = f"CAST(array() AS {_EDGE_STRUCT})"
+        env = zidx.envs[pos]
+        zs.append(
+            f"named_struct('fid',{int(zidx.fids[pos])}L,'minx',{d(env[0])},'miny',{d(env[1])},"
+            f"'maxx',{d(env[2])},'maxy',{d(env[3])},'edges',{edges})"
+        )
+    # division by zero is gated by CASE WHEN crosses: Spark orders NaN
+    # ABOVE all doubles, so an unguarded NaN xint would count phantom
+    # crossings numpy masks out
+    crosses = f"((_e.y1 <= {py}) != (_e.y2 <= {py}))"
+    xint = f"(_e.x1 + ((({py} - _e.y1) * (_e.x2 - _e.x1)) / (_e.y2 - _e.y1)))"
+    hit = f"({crosses} AND CASE WHEN {crosses} THEN ({xint} > {px}) ELSE false END)"
+    on = (
+        f"(((((_e.x2 - _e.x1) * ({py} - _e.y1)) - ((_e.y2 - _e.y1) * ({px} - _e.x1))) = 0)"
+        f" AND (least(_e.x1, _e.x2) <= {px}) AND ({px} <= greatest(_e.x1, _e.x2))"
+        f" AND (least(_e.y1, _e.y2) <= {py}) AND ({py} <= greatest(_e.y1, _e.y2)))"
+    )
+    env_ok = (
+        f"(({px} >= _z.minx) AND ({px} <= _z.maxx)"
+        f" AND ({py} >= _z.miny) AND ({py} <= _z.maxy))"
+    )
+    inside = (
+        f"({env_ok} AND (((size(filter(_z.edges, _e -> {hit})) % 2) = 1)"
+        f" OR exists(_z.edges, _e -> {on})))"
+    )
+    return f"transform(filter(array({','.join(zs)}), _z -> {inside}), _z -> _z.fid)"
 
 
 def spatial_join(
@@ -298,14 +323,12 @@ def spatial_join(
     # For small zone sets the entire even-odd ray cast compiles into
     # Catalyst: the zone edge tables become ONE literal
     # array<struct<fid, env, edges>> and each POINT row evaluates
-    # filter/aggregate lambdas over it — same float expression order as
-    # points_in_edges (crossing rule, strict xint > px, on-edge
-    # closure), so the match set is bit-identical — with NO Python
-    # worker, no Arrow crossing, and no serialized broadcast for the
-    # point majority. Non-points (and NULL/empty rows) keep the
-    # numpy probe. Division by zero inside the lambda is gated by a
-    # when(crosses, ...) — Spark orders NaN ABOVE all doubles, so an
-    # unguarded NaN xint would count phantom crossings numpy masks out.
+    # filter/exists lambdas over it (_zone_fids_sql) — same float
+    # expression order as points_in_edges (crossing rule, strict
+    # xint > px, on-edge closure), so the match set is bit-identical —
+    # with NO Python worker, no Arrow crossing, and no serialized
+    # broadcast for the point majority. Non-points (and NULL/empty
+    # rows) keep the numpy probe.
     total_edges = sum(len(e[0]) for e in zidx.edges)
     use_jvm_points = (
         has_env and 0 < total_edges <= 2048 and len(zidx.fids) > 0
@@ -319,32 +342,7 @@ def spatial_join(
         pt_docs = docs.filter(pt_cond)
         docs = docs.filter(~F.coalesce(pt_cond, F.lit(False)))
         out_cols_jvm = list(project) if project is not None else list(docs.columns)
-        px, py = F.col("env_minx"), F.col("env_miny")
-
-        def _inside(z):
-            env_ok = (
-                (px >= z["minx"]) & (px <= z["maxx"])
-                & (py >= z["miny"]) & (py <= z["maxy"])
-            )
-            def _hit(e):
-                crosses = (e["y1"] <= py) != (e["y2"] <= py)
-                xint = e["x1"] + (py - e["y1"]) * (e["x2"] - e["x1"]) / (e["y2"] - e["y1"])
-                return crosses & F.when(crosses, xint > px).otherwise(F.lit(False))
-            parity = F.size(F.filter(z["edges"], _hit)) % 2 == 1
-            def _on(e):
-                return (
-                    ((e["x2"] - e["x1"]) * (py - e["y1"])
-                     - (e["y2"] - e["y1"]) * (px - e["x1"]) == 0)
-                    & (F.least(e["x1"], e["x2"]) <= px)
-                    & (px <= F.greatest(e["x1"], e["x2"]))
-                    & (F.least(e["y1"], e["y2"]) <= py)
-                    & (py <= F.greatest(e["y1"], e["y2"]))
-                )
-            return env_ok & (parity | F.exists(z["edges"], _on))
-
-        fids = F.transform(
-            F.filter(_zones_literal(zidx), _inside), lambda z: z["fid"]
-        )
+        fids = F.expr(_zone_fids_sql(zidx, "`env_minx`", "`env_miny`"))
         if first_match:
             zf = F.array_min(fids).alias("zone_fid")
             jvm_out = pt_docs.select(*out_cols_jvm, zf)
@@ -867,7 +865,9 @@ def spatial_join_cells(
             # group by zone: build each zone's edge table once; the
             # point-geometry majority goes through ONE vectorized ray
             # cast per zone (same path as the broadcast join,
-            # probe_points), only non-point rows verify pairwise
+            # probe_points), the non-point rows through ONE grouped
+            # kernel call per zone (intersects_rings_grouped, same as
+            # probe_batch)
             pending = pdf.loc[~acc, ["_zfid", "_zwkt"]]
             for _zfid, grp in pending.groupby("_zfid", sort=False):
                 zbatch = parse_wkt(grp["_zwkt"].iloc[:1])
@@ -893,10 +893,9 @@ def spatial_join_cells(
                         xs[rel] = dbatch.coords[cidx, 0]
                         ys[rel] = dbatch.coords[cidx, 1]
                     keep[pts] = points_in_edges(xs, ys, edges)
-                for i in idx[~is_pt_row]:
-                    keep[int(i)] = batch_intersects_rings(
-                        dbatch, int(sub_of[int(i)]), rings, edges
-                    )
+                rest = idx[~is_pt_row]
+                if rest.size:
+                    keep[rest] = intersects_rings_grouped(dbatch, sub_of[rest], rings, edges)
             res = pdf.loc[keep]
             yield pd.DataFrame({"doc_id": res["_did"].to_numpy(np.int64), "zone_fid": res["_zfid"].to_numpy(np.int64)})
 

@@ -145,11 +145,6 @@ def det_sign_layer(
     return np.where(valid, det, 0.0), sign, valid
 
 
-def rgb_to_luminosity(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """ConvertRGBToLuminosity (gdal_simplesurf.cpp:112-180)."""
-    return (0.21 * r.astype(np.float64) + 0.72 * g + 0.07 * b) / 255.0
-
-
 # ---------------------------------------------------------------------------
 # distributed integral image (two strip cumsums)
 

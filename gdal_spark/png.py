@@ -74,7 +74,7 @@ def decode_png(payload: bytes) -> np.ndarray:
         (length,) = struct.unpack_from(">I", payload, pos)
         tag = payload[pos + 4 : pos + 8]
         data = payload[pos + 8 : pos + 8 + length]
-        if len(data) != length:
+        if len(data) != length or pos + 12 + length > len(payload):
             raise PngError("truncated chunk")
         (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
         if crc != (zlib.crc32(tag + data) & 0xFFFFFFFF):

@@ -134,6 +134,13 @@ class TestErrors:
         with pytest.raises(PngError):
             decode_png(good[: len(good) // 2] + b"")
 
+    def test_truncated_inside_crc(self):
+        good = encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
+        # IHDR data fully present, its 4-byte CRC cut after 2 bytes
+        cut = good[: 8 + 8 + 13 + 2]
+        with pytest.raises(PngError, match="truncated"):
+            decode_png(cut)
+
 
 class TestMediaIntegration:
     def test_payload_is_real_png_of_synth_pixels(self, spark):

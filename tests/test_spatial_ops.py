@@ -456,3 +456,50 @@ class TestSpatialJoinProject:
         # no-geom row: env null (pyarrow maps the parser's NaN to null),
         # not an error — same as before the fast path
         assert by_id[7].env_minx is None and by_id[7].geom_error is None
+
+
+class TestJvmPointPath:
+    """spatial_join's Catalyst point predicate (_zone_fids_sql) against
+    the numpy probe_points on the points where the ray cast is most
+    fragile: on edges, on vertices, inside holes, at non-integer
+    coordinates (0.1 steps and 17-significant-digit values)."""
+
+    ZONES = [
+        "POLYGON ((0.1 0.1,0.1 2.3,2.3 2.3,2.3 0.1,0.1 0.1),(0.7 0.7,0.7 1.3,1.3 1.3,1.3 0.7,0.7 0.7))",
+        "POLYGON ((0.30000000000000004 0.2,2.9000000000000004 0.2,1.6 2.7000000000000002,"
+        "0.30000000000000004 0.2))",
+        "POLYGON ((1.1 -0.5,3.3 0.6,1.1 1.7,1.1 -0.5))",
+        "POLYGON EMPTY",
+    ]
+
+    def test_sql_predicate_matches_probe_points(self, spark):
+        from gdal_spark.operators.spatial import ZoneIndex, _zone_fids_sql
+
+        zidx = ZoneIndex(np.arange(len(self.ZONES)) + 100, self.ZONES)
+        grid = np.round(np.arange(-0.2, 3.5, 0.1), 1)
+        gx, gy = np.meshgrid(grid, grid)
+        pts = [np.column_stack([gx.ravel(), gy.ravel()])]
+        for x1, y1, x2, y2 in (e for e in zidx.edges if len(e[0])):
+            pts.append(np.column_stack([x1, y1]))  # vertices
+            for t in (0.5, 1 / 3, 0.1):  # on (or within an ulp of) the edge
+                pts.append(np.column_stack([x1 + t * (x2 - x1), y1 + t * (y2 - y1)]))
+        pts.append(np.array([[1.0, 1.0], [0.1 + 0.2, 0.1 + 0.2], [1 / 3, 2 / 3]]))
+        xy = np.concatenate(pts)
+        pi, zi = zidx.probe_points(xy[:, 0], xy[:, 1])
+        want = {(int(p), int(zidx.fids[z])) for p, z in zip(pi, zi)}
+
+        df = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+            "i long, env_minx double, env_miny double",
+        )
+        got = {
+            (r.i, int(f))
+            for r in df.select("i", F.expr(_zone_fids_sql(zidx, "env_minx", "env_miny")).alias("f")).collect()
+            for f in r.f
+        }
+        assert got == want
+        # the probe must see every kind of contact
+        fids = {f for _, f in want}
+        assert {100, 101, 102} <= fids
+        hole_center = int(np.flatnonzero((xy[:, 0] == 1.0) & (xy[:, 1] == 1.0))[0])
+        assert (hole_center, 100) not in want
