@@ -141,15 +141,15 @@ def main() -> None:
     )
 
     # q1b: big x big cell-partitioned join (the 100 TB-shaped path:
-    # no broadcast — explode both sides to covering cells, ids-only
-    # (cell, salt) equi-join + pair dedup, geometry re-joined by id
-    # for the exact verify). Same zones, so the result equals q1's.
+    # explode both sides to covering cells, ids-only cell equi-join +
+    # pair dedup, geometry re-joined by id for the exact verify).
+    # Same zones, so the result equals q1's.
     def _join_cells() -> None:
         from gdal_spark.operators.cells import BYTE20_GRID
         from gdal_spark.operators.spatial import spatial_join_cells
 
         spatial_join_cells(
-            geom.filter(F.col("geom_error").isNull()), zones, BYTE20_GRID, salt=8
+            geom.filter(F.col("geom_error").isNull()), zones, BYTE20_GRID
         ).groupBy("zone_fid").count().collect()
 
     timed("spatial_join_cells", _join_cells)

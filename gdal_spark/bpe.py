@@ -128,9 +128,11 @@ def bpe_apply(
     tokens left-join back onto `docs`, coalesced to []), instead of
     silently dropping out of the result. Pass `id_col` naming a
     UNIQUE key to regroup by it alone; without one the regroup keys
-    on ALL columns, so fully-duplicate doc rows collapse to one
-    grouped row whose interleaved token array then fans back to each
-    duplicate — give an id column when exact duplicates matter.
+    on ALL columns (matched back null-safely, so a NULL in any
+    column keeps the row's tokens), and fully-duplicate doc rows
+    collapse to one grouped row whose interleaved token array then
+    fans back to each duplicate — give an id column when exact
+    duplicates matter.
 
     Note: applies merges in table order (the fast "apply like you
     trained" rule); reference BPE encoders that re-rank pairs at
@@ -153,8 +155,15 @@ def bpe_apply(
         F.flatten(F.array_sort(F.collect_list(F.struct("_i", "_toks")))["_toks"])
         .alias(out_col)
     )
-    return docs.join(grouped, key, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.array().cast("array<string>"))
+    # null-safe per-key match: a NULL key column (e.g. a nullable lang
+    # when id_col is omitted) must still find its own grouped row
+    gk = [f"_bpe_k{i}" for i in range(len(key))]
+    grouped = grouped.select(*[F.col(k).alias(a) for k, a in zip(key, gk)], out_col)
+    cond = [F.col(k).eqNullSafe(F.col(a)) for k, a in zip(key, gk)]
+    rest = [c for c in docs.columns if c not in key]
+    return docs.join(grouped, cond, "left").select(
+        *key, *rest,
+        F.coalesce(F.col(out_col), F.array().cast("array<string>")).alias(out_col),
     )
 
 

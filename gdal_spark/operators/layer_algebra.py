@@ -396,7 +396,7 @@ def layer_algebra_cells(
     """Layer algebra for method layers too large to broadcast: the
     big x big scale path. Both sides explode to covering grid cells
     (JVM-side from envelope columns), equi-join on the cell id (the
-    explicit repartition-by-cell contract — salt-able, AQE-skew-safe),
+    explicit repartition-by-cell contract — AQE-skew-safe),
     dedupe (input, method) pairs, then run the overlay kernel per
     pair. op: intersection (pieces, one row per intersecting pair) or
     erase (input minus the union of its matched method features).
@@ -422,9 +422,8 @@ def layer_algebra_cells(
     # method side FIRST, doc side LAST: the final exchange keys the
     # downstream mapInPandas stages, and doc_id is the high-cardinality
     # key — ending on method_fid would cap parallelism at the distinct
-    # method-feature count (the same trap spatial_join_cells' verify
-    # stage needed a salt for; here the kernels are row-wise/per-doc,
-    # so key order alone fixes it). The erase groupBy(doc_id) below
+    # method-feature count (the kernels here are row-wise/per-doc, so
+    # key order alone avoids it). The erase groupBy(doc_id) below
     # also becomes exchange-free this way.
     joined = (
         pairs.withColumnRenamed("zone_fid", "method_fid")

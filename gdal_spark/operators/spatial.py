@@ -29,7 +29,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -225,60 +225,15 @@ def _by_zone(zpos: np.ndarray):
         yield int(zpos[idx[0]]), idx
 
 
-_EDGE_STRUCT = "ARRAY<STRUCT<x1: DOUBLE, y1: DOUBLE, x2: DOUBLE, y2: DOUBLE>>"
-
-
-def _sql_double(v: float) -> str:
-    """Exact double literal: repr round-trips, the D suffix keeps it a
-    DOUBLE (not DECIMAL); NaN/inf have no literal form."""
-    v = float(v)
-    return f"{v!r}D" if np.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
-
-
-def _zone_fids_sql(zidx: "ZoneIndex", px: str, py: str) -> str:
-    """SQL for the fids of the zones containing point (px, py): the
-    zone set as one literal array<struct<fid, env, edges>> filtered
-    by the even-odd ray cast. Edge values come from the SAME
-    rings_to_edges tables the numpy probe uses, and every formula
-    keeps points_in_edges' operation order, so both paths test
-    identical doubles. Built as one string and parsed once: a Column
-    object per literal costs a py4j round trip each."""
-    d = _sql_double
-    zs = []
-    for pos in range(len(zidx.fids)):
-        x1, y1, x2, y2 = zidx.edges[pos]
-        if len(x1):
-            edges = "array(" + ",".join(
-                f"named_struct('x1',{d(a)},'y1',{d(b)},'x2',{d(c)},'y2',{d(e)})"
-                for a, b, c, e in zip(x1, y1, x2, y2)
-            ) + ")"
-        else:
-            edges = f"CAST(array() AS {_EDGE_STRUCT})"
-        env = zidx.envs[pos]
-        zs.append(
-            f"named_struct('fid',{int(zidx.fids[pos])}L,'minx',{d(env[0])},'miny',{d(env[1])},"
-            f"'maxx',{d(env[2])},'maxy',{d(env[3])},'edges',{edges})"
-        )
-    # division by zero is gated by CASE WHEN crosses: Spark orders NaN
-    # ABOVE all doubles, so an unguarded NaN xint would count phantom
-    # crossings numpy masks out
-    crosses = f"((_e.y1 <= {py}) != (_e.y2 <= {py}))"
-    xint = f"(_e.x1 + ((({py} - _e.y1) * (_e.x2 - _e.x1)) / (_e.y2 - _e.y1)))"
-    hit = f"({crosses} AND CASE WHEN {crosses} THEN ({xint} > {px}) ELSE false END)"
-    on = (
-        f"(((((_e.x2 - _e.x1) * ({py} - _e.y1)) - ((_e.y2 - _e.y1) * ({px} - _e.x1))) = 0)"
-        f" AND (least(_e.x1, _e.x2) <= {px}) AND ({px} <= greatest(_e.x1, _e.x2))"
-        f" AND (least(_e.y1, _e.y2) <= {py}) AND ({py} <= greatest(_e.y1, _e.y2)))"
+def _point_rows(wkt_col: str) -> Column:
+    """Column: the row is a POINT whose envelope columns hold its
+    coordinates (degenerate envelope, POINT WKT). Both joins test such
+    rows from the envelope alone, so neither needs their WKT."""
+    return (
+        (F.col("env_minx") == F.col("env_maxx"))
+        & (F.col("env_miny") == F.col("env_maxy"))
+        & F.col(wkt_col).startswith("POINT")
     )
-    env_ok = (
-        f"(({px} >= _z.minx) AND ({px} <= _z.maxx)"
-        f" AND ({py} >= _z.miny) AND ({py} <= _z.maxy))"
-    )
-    inside = (
-        f"({env_ok} AND (((size(filter(_z.edges, _e -> {hit})) % 2) = 1)"
-        f" OR exists(_z.edges, _e -> {on})))"
-    )
-    return f"transform(filter(array({','.join(zs)}), _z -> {inside}), _z -> _z.fid)"
 
 
 def spatial_join(
@@ -319,40 +274,6 @@ def spatial_join(
 
     has_env = all(c in docs.columns for c in ("env_minx", "env_miny", "env_maxx", "env_maxy"))
 
-    # -- whole-stage-codegen point path -------------------------------
-    # For small zone sets the entire even-odd ray cast compiles into
-    # Catalyst: the zone edge tables become ONE literal
-    # array<struct<fid, env, edges>> and each POINT row evaluates
-    # filter/exists lambdas over it (_zone_fids_sql) — same float
-    # expression order as points_in_edges (crossing rule, strict
-    # xint > px, on-edge closure), so the match set is bit-identical —
-    # with NO Python worker, no Arrow crossing, and no serialized
-    # broadcast for the point majority. Non-points (and NULL/empty
-    # rows) keep the numpy probe.
-    total_edges = sum(len(e[0]) for e in zidx.edges)
-    use_jvm_points = (
-        has_env and 0 < total_edges <= 2048 and len(zidx.fids) > 0
-    )
-    if use_jvm_points:
-        pt_cond = (
-            (F.col("env_minx") == F.col("env_maxx"))
-            & (F.col("env_miny") == F.col("env_maxy"))
-            & F.col(wkt_col).startswith("POINT")
-        )
-        pt_docs = docs.filter(pt_cond)
-        docs = docs.filter(~F.coalesce(pt_cond, F.lit(False)))
-        out_cols_jvm = list(project) if project is not None else list(docs.columns)
-        fids = F.expr(_zone_fids_sql(zidx, "`env_minx`", "`env_miny`"))
-        if first_match:
-            zf = F.array_min(fids).alias("zone_fid")
-            jvm_out = pt_docs.select(*out_cols_jvm, zf)
-            if how != "left":
-                jvm_out = jvm_out.filter(F.col("zone_fid").isNotNull())
-        else:
-            ex = F.explode_outer(fids) if how == "left" else F.explode(fids)
-            jvm_out = pt_docs.select(*out_cols_jvm, ex.alias("zone_fid"))
-    else:
-        jvm_out = None
     if project is not None:
         missing = [c for c in project if c not in docs.columns]
         if missing:
@@ -363,14 +284,11 @@ def spatial_join(
         if has_env and wkt_col not in project:
             # JVM-side WKT strip for points: their exact test is pure
             # envelope (probe_points); null is near-free in Arrow
-            pt_jvm = (
-                (F.col("env_minx") == F.col("env_maxx"))
-                & (F.col("env_miny") == F.col("env_maxy"))
-                & F.col(wkt_col).startswith("POINT")
-            )
             docs = docs.select(
                 *need,
-                F.when(pt_jvm, F.lit(None).cast("string")).otherwise(F.col(wkt_col)).alias(wkt_col),
+                F.when(_point_rows(wkt_col), F.lit(None).cast("string"))
+                .otherwise(F.col(wkt_col))
+                .alias(wkt_col),
             )
         elif wkt_col not in need:
             docs = docs.select(*need, wkt_col)
@@ -409,8 +327,7 @@ def spatial_join(
                 matched = pd.concat([matched, un], ignore_index=True)
             yield matched
 
-    probed = docs.mapInPandas(_probe, out_schema)
-    return probed if jvm_out is None else probed.unionByName(jvm_out)
+    return docs.mapInPandas(_probe, out_schema)
 
 
 def _probe_with_env(zi: "ZoneIndex", pdf: pd.DataFrame, wkt_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -455,14 +372,15 @@ def _probe_with_env(zi: "ZoneIndex", pdf: pd.DataFrame, wkt_col: str) -> tuple[n
 
 
 def attach_zone_attrs(joined: DataFrame, zones: DataFrame, fid_col: str = "fid", prefix: str = "zone_") -> DataFrame:
-    """Attach zone attributes post-join via a Catalyst broadcast
-    equi-join on fid (the reference prefixes colliding names with
+    """Attach zone attributes post-join via a Catalyst equi-join on
+    fid; Spark (and AQE at runtime) broadcasts the zone side when it
+    is small (the reference prefixes colliding names with
     input_/method_, ogrlayer.cpp:5200-5230 — we prefix zone attrs)."""
     z = zones
     for c in z.columns:
         if c != fid_col:
             z = z.withColumnRenamed(c, f"{prefix}{c}")
-    return joined.join(F.broadcast(z), joined["zone_fid"] == z[fid_col], "left").drop(fid_col)
+    return joined.join(z, joined["zone_fid"] == z[fid_col], "left").drop(fid_col)
 
 
 # ---------------------------------------------------------------------------
@@ -615,47 +533,38 @@ def spatial_join_cells(
     zone_wkt_col: str = "wkt",
     wkt_col: str = "wkt",
     salt: int = 0,
-    verify_salt: int = 8,
-    broadcast_zones: bool | None = None,
-    broadcast_zone_limit: int = 100_000,
 ) -> DataFrame:
     """Spatial join for zone sets too large to broadcast: both sides
     are exploded to covering grid cells, equi-joined on cell id, and
     exact-verified per pair; duplicate (doc, zone) pairs from
-    multi-cell overlaps are dropped with one dropDuplicates.
+    multi-cell overlaps collapse in one groupBy.
 
-    This is the explicit repartition-by-cell contract of the north
-    rule: the shuffle key is the cell id (optionally salted for hot
-    cells), zones with huge envelopes fan out to their covering
-    cells, and each task sees only its cell's candidates. Docs with
-    envelope columns explode JVM-side (sequence/explode); the exact
-    verify is the same numpy batch kernel as the broadcast join.
+    One plan, with no hints on the zone side and no hand salting:
+      candidates = docs' cells JOIN zones' classified cells ON cell
+      pairs      = candidates.repartition(_did).groupBy(_did, _zfid)
+      paired     = pairs LEFT JOIN non-point doc WKTs ON _did
+                         JOIN zone WKTs ON _zfid
+      result     = paired.mapInPandas(_verify)
+    Both zone joins are plain equi-joins, and AQE (on in session.py)
+    picks their physical form at runtime from the measured sizes of
+    the shuffled sides: a broadcast hash join when either side is
+    small (every bench and test input), a sort-merge join otherwise. AQE's
+    skew join splits a hot cell or hot zone partition of a sort-merge
+    join across tasks. Both plans give the same pair set
+    (tests/test_spatial_ops.py checks both).
 
-    Shuffle diet (same rule as lsh_pairs, dedup.py): the (cell, salt)
-    exchange and the pair dedup carry ONLY (cell, _did, _zfid) plus
-    two booleans — at 10^12 docs this is the heaviest exchange in the
-    big x big path and WKT strings must not ride it (a zone's WKT
-    would otherwise be duplicated once per candidate pair).
-    Geometries re-join by id AFTER the dedup, zone side last on a
-    salted key (_zfid, hash(_did) % verify_salt) so the verify stage
-    parallelism is zones x verify_salt, not capped at the distinct
-    zone count (the verify kernel groups by _zfid inside each Arrow
-    batch, so it needs no co-partitioning for correctness).
+    `salt` is ignored: AQE's skew join spreads hot cells, so no join
+    key is salted. The keyword stays only so callers that still pass
+    it (perfbench/workloads.py) keep working.
 
-    Exchange-count adaptivity (broadcast_zones: None = probe): when
-    the zone table is small enough to broadcast (a limit-probe
-    count, CollectLimit-bounded like graph.py's guard), the plan
-    collapses to ONE exchange on the fat path — the classified zone
-    cells and the zone WKTs broadcast, the candidate stream
-    repartitions by _did alone (hash(_did) satisfies the
-    groupBy(_did, _zfid) clustering AND the doc-WKT left join's key,
-    so neither adds an exchange), and no verify salt is needed
-    because the verify stage inherits hash(_did) parallelism. With
-    genuinely huge zone sets (probe over the limit, or
-    broadcast_zones=False) the shuffle plan above applies, still
-    with the repartition-by-_did reuse for the doc-WKT join. At
-    2M docs x 10 zones the broadcast plan measures 4.5 s vs 7.9 s at
-    local[8] and removes the flat-above-8-cores exchange chain.
+    Shuffle diet (same rule as lsh_pairs, dedup.py): the cell exchange
+    and the pair dedup carry ONLY (cell, _did, _zfid), one boolean and
+    the point coordinates — at 10^12 docs this is the heaviest
+    exchange in the big x big path and WKT strings must not ride it (a
+    zone's WKT would otherwise be duplicated once per candidate pair).
+    Geometries re-join by id AFTER the dedup. The verify kernel groups
+    by _zfid inside each Arrow batch, so it needs no co-partitioning by
+    zone for correctness.
 
     Interior-cell fast accept (the prepared-geometry "containment
     shortcut" of the reference's R-tree joins, done at grid
@@ -671,8 +580,6 @@ def spatial_join_cells(
     the grid refines) pay for geometry.
 
     Returns (doc_id, zone_fid) pairs."""
-    from gdal_spark.operators.cells import Grid  # noqa: F401 (type)
-
     # docs side: cell ids from envelope columns (JVM-side). The
     # exchange carries ids + the point's coordinates (2 doubles — a
     # POINT's coords ARE its envelope): the point majority then needs
@@ -680,11 +587,6 @@ def spatial_join_cells(
     # non-point minority joins its WKT back. Shipping 16 extra bytes
     # per candidate row removes an entire shuffle of the full doc
     # table from the verify stage.
-    pt_jvm = (
-        (F.col("env_minx") == F.col("env_maxx"))
-        & (F.col("env_miny") == F.col("env_maxy"))
-        & F.col(wkt_col).startswith("POINT")
-    )
     d = docs.select(
         F.col(doc_id_col).alias("_did"),
         "env_minx", "env_miny", "env_maxx", "env_maxy",
@@ -727,33 +629,6 @@ def spatial_join_cells(
         _zone_cell_classifier(grid), "cell long, _zfid long, _boundary boolean"
     )
 
-    # broadcast probe: CollectLimit-bounded, so a 10^6-zone table
-    # costs one short scan, not a full count
-    if broadcast_zones is None:
-        broadcast_zones = (
-            zones.limit(broadcast_zone_limit + 1).count() <= broadcast_zone_limit
-        )
-
-    if salt > 1 and not broadcast_zones:
-        # hot-cell skew mitigation: the doc side takes a deterministic
-        # per-row salt, the (small-per-cell) zone side replicates across
-        # all salt values — the join key becomes (cell, salt) so a hot
-        # cell's candidates spread over `salt` tasks. (Moot when the
-        # zone cells broadcast: a broadcast join has no hot partition.)
-        # pmod, not abs(hash) % n: abs(Integer.MIN_VALUE) stays negative in
-        # non-ANSI mode and Spark % keeps the dividend's sign — a doc
-        # hashing to MIN_VALUE would get a salt matching no replicated
-        # zone row and silently vanish from the join
-        d = d.withColumn("_salt", F.pmod(F.hash("_did"), F.lit(salt)).cast("int"))
-        z = z.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(s).cast("int") for s in range(salt)]))
-        )
-        joined = d.join(z, ["cell", "_salt"])
-    elif broadcast_zones:
-        joined = d.join(F.broadcast(z), "cell")
-    else:
-        joined = d.join(z, "cell")
-
     # pair dedup doubles as the accept/verify split: a pair is
     # accepted outright if ANY of its candidate cells is an interior
     # cell that contains the doc's envelope. The accepted pairs stay
@@ -768,8 +643,9 @@ def spatial_join_cells(
     # in one partition) AND for the doc-WKT left join's _did key, so
     # the aggregate and that join both run exchange-free on top of it
     # — one fat exchange where the r4 plan paid three
-    agg = (
-        joined.select(
+    pairs = (
+        d.join(z, "cell")
+        .select(
             "_did", "_zfid",
             (F.col("_cont") & ~F.col("_boundary")).alias("_acc"),
             "_px", "_py",
@@ -787,49 +663,27 @@ def spatial_join_cells(
     # geometry payloads re-join by id post-dedup, and cross the Arrow
     # boundary ONLY for the boundary-cell candidates: each surviving
     # doc/zone WKT crosses the wire once per unverified pair (not once
-    # per covering cell x salt, and not at all for interior accepts —
-    # the post-join projection nulls their WKT JVM-side, so the join
-    # key stays the plain id with no NULL-key hot partition while the
-    # Arrow payload for accepted rows is two nulls). The zone join key
-    # is (_zfid, verify-salt): partitioning the verify stage by _zfid
-    # alone caps its parallelism at the number of DISTINCT ZONES
-    # TOUCHED — with a handful of hot zones most cores idle (measured:
-    # 14.3 s at local[8] vs 14.6 s at local[32], zero 8->32 scaling).
-    # Salting by hash(_did) % verify_salt fans each zone's candidates
-    # over verify_salt tasks; the (small per-zone) WKT replicates
-    # verify_salt times, and the verify kernel never depended on
-    # co-partitioning (it rebuilds edge tables per (_zfid) group per
-    # Arrow batch), so correctness is unchanged.
+    # per covering cell, and not at all for interior accepts — the
+    # post-join projection nulls their WKT JVM-side, so the join key
+    # stays the plain id with no NULL-key hot partition while the
+    # Arrow payload for accepted rows is two nulls). When AQE
+    # broadcasts the zone WKTs, the verify stage keeps the hash(_did)
+    # partitioning end to end; otherwise the sort-merge join on _zfid
+    # relies on AQE's skew join to split hot zones.
     # Only the NON-POINT minority re-joins its WKT (a POINT's verify
     # coordinates already rode the candidate exchange as _px/_py, the
-    # same rule as the broadcast join's project path :275-283). The
-    # left join null-extends _dwkt for point pairs — the verify keys
-    # its parse-free path off exactly that NULL.
-    pairs = agg
+    # same rule as spatial_join's project path). The left join
+    # null-extends _dwkt for point pairs — the verify keys its
+    # parse-free path off exactly that NULL.
     # SHUFFLE_HASH, not the default sort-merge: SMJ would sort the
     # ENTIRE pair stream by _did just to probe the non-point subset;
     # hash-building the bounded dwn slice per partition costs
     # O(|non-point|/nparts) memory and no sort of the fat side
-    dwn = docs.filter(~pt_jvm).select(
+    dwn = docs.filter(~_point_rows(wkt_col)).select(
         F.col(doc_id_col).alias("_did"), F.col(wkt_col).alias("_dwkt")
     ).hint("SHUFFLE_HASH")
     zw = zones.select(F.col(zone_fid_col).alias("_zfid"), F.col(zone_wkt_col).alias("_zwkt"))
-    if broadcast_zones:
-        # zone WKTs broadcast -> the verify stage keeps the hash(_did)
-        # partitioning end-to-end: full parallelism, no verify salt,
-        # zero additional exchanges on the pair stream
-        paired = pairs.join(dwn, "_did", "left").join(F.broadcast(zw), "_zfid")
-    elif verify_salt > 1:
-        pairs = pairs.withColumn(
-            "_vs", F.pmod(F.hash("_did"), F.lit(verify_salt)).cast("int")
-        )
-        zw = zw.withColumn(
-            "_vs",
-            F.explode(F.array(*[F.lit(s).cast("int") for s in range(verify_salt)])),
-        )
-        paired = pairs.join(dwn, "_did", "left").join(zw, ["_zfid", "_vs"]).drop("_vs")
-    else:
-        paired = pairs.join(dwn, "_did", "left").join(zw, "_zfid")
+    paired = pairs.join(dwn, "_did", "left").join(zw, "_zfid")
     # interior-accepted pairs need no geometry at all: null both WKTs
     # AFTER the joins (plain-id join keys — no NULL-key hot partition)
     # so the Arrow exchange ships them as (ids, flag, 2 nulls)

@@ -5538,18 +5538,19 @@ ORACLES["tile_reference_checksum"] = _o_tile_reference_checksum()
 
 def q_spatial_join_cells(spark, sf_dir):
     """Big x big cell-partitioned spatial join (operators/spatial.py
-    spatial_join_cells): the no-broadcast 100 TB-shaped path — both
-    sides exploded to covering grid cells, ids-only (cell, salt)
-    equi-join, interior-cell fast accept (boundary/interior zone-cell
-    classification, no WKT shuffle and no Python verify for accepted
-    pairs), exact verify only for boundary-cell candidates. Must
+    spatial_join_cells): the 100 TB-shaped path — both sides
+    exploded to covering grid cells, ids-only cell equi-join (AQE
+    picks broadcast or sort-merge), interior-cell fast accept
+    (boundary/interior zone-cell classification, no WKT shuffle and
+    no Python verify for accepted pairs), exact verify only for
+    boundary-cell candidates. Must
     produce the identical pair set as the broadcast R-tree join, so
     it shares spatial_join's oracle."""
     from gdal_spark.operators.cells import BYTE20_GRID
     from gdal_spark.operators.spatial import spatial_join_cells
 
     g = docs_geom(spark, sf_dir).filter(F.col("geom_error").isNull())
-    j = spatial_join_cells(g, zones_table(spark), BYTE20_GRID, salt=4)
+    j = spatial_join_cells(g, zones_table(spark), BYTE20_GRID)
     eas = F.element_at(F.array(*[F.lit(e) for e in ZONE_EAS]), F.col("zone_fid").cast("int") + 1)
     return j.select(
         "doc_id",

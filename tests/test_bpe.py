@@ -119,3 +119,18 @@ class TestBpeApply:
                 for w in ["".join(w2)]}
         expect = segs["banana"] + segs["bananas"] + segs["banana"]
         assert out[0] == expect
+
+    def test_null_column_keeps_tokens_without_id_col(self, spark):
+        # without id_col the regroup keys on every doc column; a NULL in
+        # a non-text column must still match its own grouped tokens
+        docs = spark.createDataFrame(
+            [(0, None, "low lower"), (1, "en", "new newer"), (2, None, "")],
+            "doc_id long, lang string, text string",
+        )
+        merges = bpe_train(docs, 3)
+        out = {r.doc_id: r for r in bpe_apply(docs, merges).collect()}
+        assert len(out) == 3
+        assert "".join(out[0].bpe_tokens) == "lowlower"
+        assert out[0].lang is None
+        assert "".join(out[1].bpe_tokens) == "newnewer"
+        assert list(out[2].bpe_tokens) == []

@@ -244,9 +244,9 @@ class TestCellPartitionedJoin:
 
     def test_cell_exchange_carries_ids_only(self, spark):
         """Shuffle-diet plan assertion (same property as the LSH band
-        join, test_lsh_candidates_prune_shingles): the (cell, salt)
+        join, test_lsh_candidates_prune_shingles): the cell
         equi-join and the pair dedup Aggregate must carry ONLY
-        (cell, salt, _did, _zfid) — no WKT string may ride the
+        ids (cell, _did, _zfid) — no WKT string may ride the
         heaviest exchange of the big x big path. Geometry re-joins by
         id after the dedup."""
         from gdal_spark.datagen import docs_table, zones_table
@@ -256,7 +256,7 @@ class TestCellPartitionedJoin:
         g = extract_geom(docs_table(spark, n=50)).select(
             "_id", "wkt", "env_minx", "env_miny", "env_maxx", "env_maxy", "geom_error"
         )
-        out = spatial_join_cells(g, zones_table(spark), BYTE20_GRID, salt=4)
+        out = spatial_join_cells(g, zones_table(spark), BYTE20_GRID)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         lines = plan.splitlines()
         # the pair dedup is the only Aggregate in the plan — ids only
@@ -282,7 +282,7 @@ class TestCellPartitionedJoin:
         g = extract_geom(docs_table(spark, n=50)).select(
             "_id", "wkt", "env_minx", "env_miny", "env_maxx", "env_maxy", "geom_error"
         )
-        out = spatial_join_cells(g, zones_table(spark), BYTE20_GRID, salt=4)
+        out = spatial_join_cells(g, zones_table(spark), BYTE20_GRID)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         lines = plan.splitlines()
         # the pair aggregate carries the point coords (and never wkt)
@@ -324,22 +324,23 @@ class TestSpanIntegrity:
         assert audit_span_integrity(docs, tampered) == 50
 
 
-class TestCellJoinSalt:
-    def test_salted_equals_unsalted(self, spark):
-        """spatial_join_cells(salt=k) must return the identical pair
-        set (the salt only spreads hot cells across tasks)."""
+class TestCellJoinPlans:
+    def test_same_pairs_broadcast_and_sort_merge(self, spark):
+        """spatial_join_cells has one logical plan; AQE picks broadcast
+        or sort-merge joins at runtime. Both physical plans must return
+        spatial_join's pair set."""
         import numpy as np
         from pyspark.sql import functions as F2
 
         from gdal_spark.operators.cells import Grid
-        from gdal_spark.operators.spatial import extract_geom, spatial_join_cells
+        from gdal_spark.operators.spatial import extract_geom, spatial_join, spatial_join_cells
 
         rng = np.random.default_rng(8)
-        docs = spark.createDataFrame(
-            [(int(i), f"POINT ({rng.uniform(0,100):.3f} {rng.uniform(0,100):.3f})")
-             for i in range(200)],
-            "_id bigint, wkt string",
-        )
+        rows = [(int(i), f"POINT ({rng.uniform(0,100):.3f} {rng.uniform(0,100):.3f})")
+                for i in range(200)]
+        rows += [(1000, "POLYGON ((55 55,58 55,58 58,55 58,55 55))"),
+                 (1001, "LINESTRING (5 5,95 95)")]
+        docs = spark.createDataFrame(rows, "_id bigint, wkt string")
         docs = extract_geom(
             docs.withColumn("spans", F2.array(F2.struct(
                 F2.lit("geom").alias("kind"), F2.col("wkt").alias("text"),
@@ -351,26 +352,35 @@ class TestCellJoinSalt:
             "fid bigint, wkt string",
         )
         grid = Grid(0, 0, 100, 100, nx=5, ny=5)
-        plain = {(r.doc_id, r.zone_fid) for r in spatial_join_cells(docs, zones, grid).collect()}
-        salted = {(r.doc_id, r.zone_fid) for r in spatial_join_cells(docs, zones, grid, salt=4).collect()}
-        assert plain == salted and len(plain) > 0
-        # the shuffle plan (the 10^6-zone shape the probe would pick at
-        # scale) must return the identical set: broadcast_zones only
-        # changes exchanges, never results
-        shuffled = {
-            (r.doc_id, r.zone_fid)
-            for r in spatial_join_cells(
-                docs, zones, grid, salt=4, broadcast_zones=False
-            ).collect()
-        }
-        assert shuffled == plain
-        no_vsalt = {
-            (r.doc_id, r.zone_fid)
-            for r in spatial_join_cells(
-                docs, zones, grid, broadcast_zones=False, verify_salt=1
-            ).collect()
-        }
-        assert no_vsalt == plain
+        want = {(r._id, r.zone_fid) for r in spatial_join(docs, zones).select("_id", "zone_fid").collect()}
+        assert len(want) > 0 and {(1000, 1), (1001, 0), (1001, 1)} <= want
+
+        def run():
+            out = spatial_join_cells(docs, zones, grid)
+            got = {(r.doc_id, r.zone_fid) for r in out.collect()}
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            return got, plan.split("== Initial Plan ==")[0]
+
+        got, final = run()
+        assert got == want
+        assert "isFinalPlan=true" in final
+        assert "BroadcastHashJoin [cell#" in final and "BroadcastHashJoin [_zfid#" in final
+
+        keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+        saved = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, "-1")
+            got, final = run()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert got == want
+        assert "SortMergeJoin [cell#" in final and "SortMergeJoin [_zfid#" in final
+        assert "BroadcastHashJoin" not in final
 
 
 class TestSpatialJoinProject:
@@ -458,11 +468,12 @@ class TestSpatialJoinProject:
         assert by_id[7].env_minx is None and by_id[7].geom_error is None
 
 
-class TestJvmPointPath:
-    """spatial_join's Catalyst point predicate (_zone_fids_sql) against
-    the numpy probe_points on the points where the ray cast is most
-    fragile: on edges, on vertices, inside holes, at non-integer
-    coordinates (0.1 steps and 17-significant-digit values)."""
+class TestFragilePoints:
+    """spatial_join(project=...) end to end, where point rows cross into
+    the probe with their WKT stripped, against ZoneIndex.probe_points
+    on the points where the ray cast is most fragile: on edges, on
+    vertices, inside holes, at non-integer coordinates (0.1 steps and
+    17-significant-digit values)."""
 
     ZONES = [
         "POLYGON ((0.1 0.1,0.1 2.3,2.3 2.3,2.3 0.1,0.1 0.1),(0.7 0.7,0.7 1.3,1.3 1.3,1.3 0.7,0.7 0.7))",
@@ -472,10 +483,11 @@ class TestJvmPointPath:
         "POLYGON EMPTY",
     ]
 
-    def test_sql_predicate_matches_probe_points(self, spark):
-        from gdal_spark.operators.spatial import ZoneIndex, _zone_fids_sql
+    def test_project_join_matches_probe_points(self, spark):
+        from gdal_spark.operators.spatial import ZoneIndex, extract_geom, spatial_join
 
-        zidx = ZoneIndex(np.arange(len(self.ZONES)) + 100, self.ZONES)
+        fids = np.arange(len(self.ZONES)) + 100
+        zidx = ZoneIndex(fids, self.ZONES)
         grid = np.round(np.arange(-0.2, 3.5, 0.1), 1)
         gx, gy = np.meshgrid(grid, grid)
         pts = [np.column_stack([gx.ravel(), gy.ravel()])]
@@ -488,18 +500,22 @@ class TestJvmPointPath:
         pi, zi = zidx.probe_points(xy[:, 0], xy[:, 1])
         want = {(int(p), int(zidx.fids[z])) for p, z in zip(pi, zi)}
 
-        df = spark.createDataFrame(
-            [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
-            "i long, env_minx double, env_miny double",
+        # repr round-trips every double, so the parsed envelope is xy
+        docs = spark.createDataFrame(
+            [(i, [("geom", f"POINT ({float(x)!r} {float(y)!r})", None, 0)])
+             for i, (x, y) in enumerate(xy)],
+            "i long, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
         )
-        got = {
-            (r.i, int(f))
-            for r in df.select("i", F.expr(_zone_fids_sql(zidx, "env_minx", "env_miny")).alias("f")).collect()
-            for f in r.f
-        }
+        zones = spark.createDataFrame(
+            [(int(f), w) for f, w in zip(fids, self.ZONES)], "fid long, wkt string"
+        )
+        geom = extract_geom(docs)
+        got = {(r.i, r.zone_fid) for r in spatial_join(geom, zones, project=["i"]).collect()}
         assert got == want
+        full = spatial_join(geom, zones).select("i", "zone_fid").collect()
+        assert {(r.i, r.zone_fid) for r in full} == want
         # the probe must see every kind of contact
-        fids = {f for _, f in want}
-        assert {100, 101, 102} <= fids
+        hit = {f for _, f in want}
+        assert {100, 101, 102} <= hit
         hole_center = int(np.flatnonzero((xy[:, 0] == 1.0) & (xy[:, 1] == 1.0))[0])
         assert (hole_center, 100) not in want
