@@ -86,42 +86,13 @@ class PackedRTree:
                 return np.empty(0, dtype=np.int64)
         return self.order[live]
 
-    def query_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Batch point probe -> (point_idx, item_idx) candidate pairs.
-
-        Points are bucketed by leaf via searchsorted on leaf envelope
-        runs only when the tree is large; for typical broadcast sizes a
-        vectorized leaf sweep wins. Returns envelope-level candidates;
-        caller applies the exact predicate.
-        """
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        if self.num_items == 0 or px.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        leaves = self.levels[0]
-        # (N_pts, N_leaves) mask in chunks to bound memory
-        out_p: list[np.ndarray] = []
-        out_i: list[np.ndarray] = []
-        # chunk so the bool matrix stays ~64MB
-        chunk = max(1, int(64e6 / max(1, len(leaves))))
-        for s in range(0, px.size, chunk):
-            e = slice(s, min(px.size, s + chunk))
-            m = (
-                (px[e, None] >= leaves[None, :, 0])
-                & (px[e, None] <= leaves[None, :, 2])
-                & (py[e, None] >= leaves[None, :, 1])
-                & (py[e, None] <= leaves[None, :, 3])
-            )
-            pi, li = np.nonzero(m)
-            out_p.append(pi + s)
-            out_i.append(self.order[li])
-        return np.concatenate(out_p), np.concatenate(out_i)
-
     def query_rects(self, envs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Batch rect probe -> (row_idx, item_idx) candidate pairs, the
         pairs query_rect returns row by row (same inclusive overlap, NaN
         rows and NaN leaves never match, items in leaf order within a
-        row), from one chunked leaf sweep like query_points."""
+        row), from one chunked leaf sweep: a (N, leaves) mask per chunk,
+        sized to stay about 64 MB. A point probes with its degenerate
+        envelope (x, y, x, y)."""
         envs = np.asarray(envs, dtype=np.float64).reshape(-1, 4)
         if self.num_items == 0 or len(envs) == 0:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)

@@ -35,7 +35,9 @@ def connected_components(
     """(node, component) with component = min node id reachable
     (GNMGraph::ConnectedComponents, gnm/gnmgraph.cpp:427). Classic
     min-label propagation: labels converge in O(diameter) rounds; each
-    round is one join + one groupBy (all shuffles on the node key)."""
+    round is one join + one groupBy (all shuffles on the node key).
+    Raises RuntimeError if labels still change in round max_iterations,
+    rather than return unconverged components."""
     e = symmetrize(edges.select(src, dst), src, dst)
     nodes = (
         e.select(F.col(src).alias("node"))
@@ -69,8 +71,8 @@ def connected_components(
         )
         labels = new
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(f"connected_components did not converge within max_iterations={max_iterations} rounds")
 
 
 def shortest_path_tree(

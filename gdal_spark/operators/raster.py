@@ -649,7 +649,8 @@ def rasterize(
                     [pdf[c].to_numpy(dtype=np.float64) for c in env_cols]
                 )
             else:
-                env = parse_wkt(pdf[wkt_col]).envelopes()
+                batch = parse_wkt(pdf[wkt_col])
+                env = batch.envelopes()
             # world envelope -> pixel-space bbox via ALL FOUR corners:
             # with a rotated geotransform (gt[2]/gt[4] != 0) the two
             # diagonal corners alone under-cover the pixel bbox and
@@ -685,16 +686,14 @@ def rasterize(
                 sgx = np.full(si.size, np.nan)
                 sgy = np.full(si.size, np.nan)
                 if point_fast:
-                    # degenerate envelope AND an actual POINT: a
-                    # zero-area POLYGON/LINESTRING also has minx==maxx
-                    # but must parse — its scanline/Bresenham burn is
-                    # NOT a point burn (a zero-area polygon covers no
-                    # pixel center and burns nothing)
-                    deg = (
-                        (env[si, 0] == env[si, 2])
-                        & (env[si, 1] == env[si, 3])
-                        & pdf[wkt_col].iloc[si].str.startswith("POINT").fillna(False).to_numpy()
-                    )
+                    # env_cols is None here (with envelope columns, ADD
+                    # explodes in Catalyst below), so `batch` holds the
+                    # parsed rows. An actual POINT, not any degenerate
+                    # envelope: a zero-area POLYGON/LINESTRING must
+                    # parse — its scanline/Bresenham burn is NOT a
+                    # point burn (a zero-area polygon covers no pixel
+                    # center and burns nothing)
+                    deg = ((batch.types == GeomType.POINT) & ~batch.is_empty)[si]
                     sgx[deg] = env[si, 0][deg]
                     sgy[deg] = env[si, 1][deg]
                     wkts = wkts.copy()

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gdal_spark.geom.batch import GeomBatch, GeomType
+from gdal_spark.geom.batch import GeomBatch, GeomType, interleave, single_ring_batch
 from gdal_spark.geom.predicates import (
     filter_geometry_batch,
     intersects_rings_grouped,
@@ -177,43 +177,16 @@ class ZoneIndex:
         pdf = zones.select(fid_col, wkt_col).toPandas()
         return cls(pdf[fid_col].to_numpy(), pdf[wkt_col].tolist())
 
-    def probe_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Exact intersects of N points vs the zone set.
-        Returns (point_idx, zone_pos) pairs after ray-cast verify."""
-        pi, zi = self.tree.query_points(px, py)
-        keep = np.zeros(pi.size, dtype=bool)
-        # one vectorized ray cast per zone
-        for z, idx in _by_zone(zi):
-            keep[idx] = points_in_edges(px[pi[idx]], py[pi[idx]], self.edges[z])
-        return pi[keep], zi[keep]
-
     def probe_batch(self, batch: GeomBatch) -> tuple[np.ndarray, np.ndarray]:
-        """Exact intersects of a mixed geometry batch vs the zone set ->
-        (row, zone_pos) pairs. Point rows go through probe_points; the
-        other non-empty rows probe the R-tree with their envelopes in
-        one query_rects sweep and verify with one grouped kernel call
-        per zone (intersects_rings_grouped) — no per-row or per-pair
-        Python outside GEOMETRYCOLLECTION rows."""
-        envs = batch.envelopes()
-        is_pt = (batch.types == GeomType.POINT) & ~batch.is_empty
-        out_d: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
-        out_z: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
-        pt_idx = np.flatnonzero(is_pt)
-        if pt_idx.size:
-            first_ring = batch.part_ring_off[batch.geom_part_off[pt_idx]]
-            cidx = batch.ring_coord_off[first_ring]
-            pi, zi = self.probe_points(batch.coords[cidx, 0], batch.coords[cidx, 1])
-            out_d.append(pt_idx[pi])
-            out_z.append(zi)
-        other = np.flatnonzero(~is_pt & ~batch.is_empty)
-        ri, zi = self.tree.query_rects(envs[other])
-        rows = other[ri]
-        keep = np.zeros(rows.size, dtype=bool)
-        for z, idx in _by_zone(zi):
-            keep[idx] = intersects_rings_grouped(batch, rows[idx], self.rings[z], self.edges[z])
-        out_d.append(rows[keep])
-        out_z.append(zi[keep])
-        return np.concatenate(out_d), np.concatenate(out_z)
+        """Exact intersects of a geometry batch vs the zone set ->
+        (row, zone_pos) pairs: every row's envelope probes the R-tree in
+        one query_rects sweep (a point's envelope is degenerate, NULL
+        and EMPTY rows have none), and verify_pairs decides the
+        candidates with one grouped kernel call per zone — the same
+        path for every geometry type."""
+        rows, zpos = self.tree.query_rects(batch.envelopes())
+        keep = verify_pairs(batch, rows, zpos, self.rings, self.edges)
+        return rows[keep], zpos[keep]
 
 
 def _by_zone(zpos: np.ndarray):
@@ -223,6 +196,26 @@ def _by_zone(zpos: np.ndarray):
     bounds = np.flatnonzero(np.diff(zpos[order])) + 1
     for idx in np.split(order, bounds) if order.size else []:
         yield int(zpos[idx[0]]), idx
+
+
+def verify_pairs(batch: GeomBatch, rows: np.ndarray, zpos: np.ndarray, rings, edges) -> np.ndarray:
+    """Keep mask of the candidate pairs (batch row rows[k], zone
+    zpos[k]), given each zone position's rings and edge table: one
+    intersects_rings_grouped call per zone. The one exact verify of
+    both spatial joins; a POINT or MULTIPOINT row only runs its first
+    stage, the ray cast of its coordinates."""
+    keep = np.zeros(rows.size, dtype=bool)
+    for z, idx in _by_zone(zpos):
+        keep[idx] = intersects_rings_grouped(batch, rows[idx], rings[z], edges[z])
+    return keep
+
+
+def _doc_batch(n: int, pt_rows: np.ndarray, px, py, rest_rows: np.ndarray, wkts) -> GeomBatch:
+    """One n-row doc batch: rows pt_rows are the points (px, py), built
+    without a parse; rows rest_rows parse from wkts (one WKT per
+    rest row); every other row is NULL."""
+    pts = single_ring_batch(GeomType.POINT, np.column_stack([px, py]), np.ones(len(pt_rows), np.int64))
+    return interleave(n, [(pt_rows, pts), (rest_rows, parse_wkt(wkts))])
 
 
 def _point_rows(wkt_col: str) -> Column:
@@ -262,52 +255,44 @@ def spatial_join(
 
     project: optional output column list (mapInPandas is opaque to
     Catalyst, so downstream column pruning can't reach the probe —
-    this is the manual pruning knob). When project excludes the WKT
-    column and envelope columns are present, POINT rows additionally
-    ship a NULL instead of their WKT through the Arrow crossing (the
-    probe needs only their envelope): at 10^12 docs the crossing then
-    carries 4 doubles + ids per point, no strings either way.
+    this is the manual pruning knob).
+
+    When envelope columns are present, the JVM flags POINT rows
+    (_point_rows) and the probe builds them from their envelope with
+    no WKT read; every row then goes through the same probe_batch.
+    When project also excludes the WKT column, that flag nulls the
+    point rows' WKT before the Arrow crossing: at 10^12 docs the
+    crossing then carries 4 doubles, a flag and ids per point, no
+    strings.
     """
     spark = docs.sparkSession
     zidx = ZoneIndex.from_df(zones, fid_col=fid_col, wkt_col=zone_wkt_col)
     bc = spark.sparkContext.broadcast(zidx)
 
-    has_env = all(c in docs.columns for c in ("env_minx", "env_miny", "env_maxx", "env_maxy"))
-
+    env_cols = ["env_minx", "env_miny", "env_maxx", "env_maxy"]
+    has_env = all(c in docs.columns for c in env_cols)
     if project is not None:
         missing = [c for c in project if c not in docs.columns]
         if missing:
             raise ValueError(f"project columns not in docs: {missing}")
-        need = list(dict.fromkeys(list(project) + (
-            ["env_minx", "env_miny", "env_maxx", "env_maxy"] if has_env else []
-        )))
-        if has_env and wkt_col not in project:
-            # JVM-side WKT strip for points: their exact test is pure
-            # envelope (probe_points); null is near-free in Arrow
-            docs = docs.select(
-                *need,
-                F.when(_point_rows(wkt_col), F.lit(None).cast("string"))
-                .otherwise(F.col(wkt_col))
-                .alias(wkt_col),
-            )
-        elif wkt_col not in need:
-            docs = docs.select(*need, wkt_col)
-        else:
-            docs = docs.select(*need)
-        out_cols = list(project)
-    else:
-        out_cols = list(docs.columns)
+    out_cols = list(docs.columns if project is None else project)
+    need = list(dict.fromkeys(out_cols + (env_cols if has_env else [])))
+    # the point flag, computed once JVM-side: _env_doc_batch builds
+    # these rows from their envelope, so when the output drops the WKT
+    # theirs crosses into Arrow as a near-free NULL
+    pt = F.coalesce(_point_rows(wkt_col), F.lit(False))
+    extra = [pt.alias("_pt")] if has_env else []
+    if wkt_col not in need:
+        extra.append((F.when(~pt, F.col(wkt_col)) if has_env else F.col(wkt_col)).alias(wkt_col))
+    docs = docs.select(*need, *extra)
 
     out_schema = StructType([docs.schema[c] for c in out_cols] + [StructField("zone_fid", LongType())])
 
     def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         zi: ZoneIndex = bc.value
         for pdf in batches:
-            if has_env:
-                di, zpos = _probe_with_env(zi, pdf, wkt_col)
-            else:
-                batch = parse_wkt(pdf[wkt_col])
-                di, zpos = zi.probe_batch(batch)
+            batch = _env_doc_batch(pdf, wkt_col) if has_env else parse_wkt(pdf[wkt_col])
+            di, zpos = zi.probe_batch(batch)
             if first_match and di.size:
                 # lowest secondary fid per doc row
                 fids = zi.fids[zpos]
@@ -330,45 +315,18 @@ def spatial_join(
     return docs.mapInPandas(_probe, out_schema)
 
 
-def _probe_with_env(zi: "ZoneIndex", pdf: pd.DataFrame, wkt_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """Probe using precomputed envelope columns: POINT rows go through
-    the vectorized R-tree+ray-cast path with NO WKT parsing at all;
-    only non-point rows (typically a small minority) are parsed. This
-    keeps the 10^12-doc hot loop entirely in numpy.
-
-    A row with a VALID degenerate envelope but NULL wkt is a point
-    whose WKT was stripped JVM-side by spatial_join(project=...) —
-    envelopes derive from wkt, so that combination cannot occur
-    naturally (null wkt => NaN envelope => invalid)."""
-    minx = pdf["env_minx"].to_numpy(dtype=np.float64)
-    miny = pdf["env_miny"].to_numpy(dtype=np.float64)
-    maxx = pdf["env_maxx"].to_numpy(dtype=np.float64)
-    maxy = pdf["env_maxy"].to_numpy(dtype=np.float64)
-    valid = ~np.isnan(minx)
-    wkt_s = pdf[wkt_col]
-    is_pt = (
-        valid
-        & (minx == maxx)
-        & (miny == maxy)
-        & (wkt_s.str.startswith("POINT").fillna(False) | wkt_s.isna()).to_numpy()
-    )
-    out_d: list[np.ndarray] = []
-    out_z: list[np.ndarray] = []
-    pt_idx = np.flatnonzero(is_pt)
-    if pt_idx.size:
-        pi, zpos = zi.probe_points(minx[pt_idx], miny[pt_idx])
-        out_d.append(pt_idx[pi])
-        out_z.append(zpos)
-    other_idx = np.flatnonzero(valid & ~is_pt)
-    if other_idx.size:
-        batch = parse_wkt(pdf[wkt_col].iloc[other_idx])
-        di, zpos = zi.probe_batch(batch)
-        out_d.append(other_idx[di])
-        out_z.append(zpos)
-    if not out_d:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    return np.concatenate(out_d), np.concatenate(out_z)
+def _env_doc_batch(pdf: pd.DataFrame, wkt_col: str) -> GeomBatch:
+    """spatial_join's doc batch when envelope columns are present: rows
+    flagged _pt (JVM-side, _point_rows) are points built from
+    (env_minx, env_miny) with no WKT read at all, the other rows with
+    an envelope parse their WKT, and rows without one (NULL or invalid
+    WKT) stay NULL."""
+    pt = pdf["_pt"].to_numpy(bool)
+    minx = pdf["env_minx"].to_numpy(np.float64)
+    pt_rows = np.flatnonzero(pt)
+    rest_rows = np.flatnonzero(~pt & ~np.isnan(minx))
+    py = pdf["env_miny"].to_numpy(np.float64)[pt_rows]
+    return _doc_batch(len(pdf), pt_rows, minx[pt_rows], py, rest_rows, pdf[wkt_col].iloc[rest_rows])
 
 
 def attach_zone_attrs(joined: DataFrame, zones: DataFrame, fid_col: str = "fid", prefix: str = "zone_") -> DataFrame:
@@ -562,9 +520,14 @@ def spatial_join_cells(
     the point coordinates — at 10^12 docs this is the heaviest
     exchange in the big x big path and WKT strings must not ride it (a
     zone's WKT would otherwise be duplicated once per candidate pair).
-    Geometries re-join by id AFTER the dedup. The verify kernel groups
-    by _zfid inside each Arrow batch, so it needs no co-partitioning by
-    zone for correctness.
+    Geometries re-join by id AFTER the dedup.
+
+    The verify builds one doc batch per Arrow batch (points from the
+    _px/_py that rode the exchange, the other rows parsed from their
+    re-joined WKT), parses each distinct zone of the batch once and
+    decides every pair with verify_pairs, the same verify as
+    spatial_join. It groups by _zfid inside the batch, so it needs no
+    co-partitioning by zone for correctness.
 
     Interior-cell fast accept (the prepared-geometry "containment
     shortcut" of the reference's R-tree joins, done at grid
@@ -672,9 +635,9 @@ def spatial_join_cells(
     # relies on AQE's skew join to split hot zones.
     # Only the NON-POINT minority re-joins its WKT (a POINT's verify
     # coordinates already rode the candidate exchange as _px/_py, the
-    # same rule as spatial_join's project path). The left join
-    # null-extends _dwkt for point pairs — the verify keys its
-    # parse-free path off exactly that NULL.
+    # same rule as spatial_join's point flag). The left join
+    # null-extends _dwkt for point pairs — the verify builds exactly
+    # those rows from _px/_py.
     # SHUFFLE_HASH, not the default sort-merge: SMJ would sort the
     # ENTIRE pair stream by _did just to probe the non-point subset;
     # hash-building the bounded dwn slice per partition costs
@@ -699,59 +662,26 @@ def spatial_join_cells(
         for pdf in batches:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
             acc = pdf["_acc"].to_numpy(bool)
             # Interior-accepted rows (both WKTs nulled JVM-side) keep
-            # unconditionally and touch nothing below. Of the rest,
-            # NULL _dwkt rows are the JVM-stripped points: their
-            # coordinates ride as _px/_py and nothing parses. Only the
-            # non-point minority builds a GeomBatch (positions mapped
-            # through `sub_of`).
+            # unconditionally and stay NULL in the doc batch. Of the
+            # rest, a NULL _dwkt is a point built from _px/_py; only
+            # the non-point minority parses.
             parsed = pdf["_dwkt"].notna().to_numpy()
-            stripped = ~parsed & ~acc
-            px = pdf["_px"].to_numpy(np.float64)
-            py = pdf["_py"].to_numpy(np.float64)
-            sub_of = np.cumsum(parsed) - 1  # pdf idx -> dbatch idx
-            dbatch = parse_wkt(pdf.loc[parsed, "_dwkt"]) if parsed.any() else None
-            if dbatch is not None:
-                parsed_pt = (dbatch.types == GeomType.POINT) & ~dbatch.is_empty
+            pt_rows = np.flatnonzero(~parsed & ~acc)
+            rest_rows = np.flatnonzero(parsed)
+            px = pdf["_px"].to_numpy(np.float64)[pt_rows]
+            py = pdf["_py"].to_numpy(np.float64)[pt_rows]
+            batch = _doc_batch(len(pdf), pt_rows, px, py, rest_rows, pdf["_dwkt"].iloc[rest_rows])
+            # each distinct zone of the batch parses once
+            rows = np.flatnonzero(~acc)
+            zfid = pdf["_zfid"].to_numpy(np.int64)
+            _, first, zpos = np.unique(zfid[rows], return_index=True, return_inverse=True)
+            zbatch = parse_wkt(pdf["_zwkt"].iloc[rows[first]])
+            rings = [zbatch.polygon_rings(i) for i in range(len(zbatch))]
             keep = acc.copy()
-            # group by zone: build each zone's edge table once; the
-            # point-geometry majority goes through ONE vectorized ray
-            # cast per zone (same path as the broadcast join,
-            # probe_points), the non-point rows through ONE grouped
-            # kernel call per zone (intersects_rings_grouped, same as
-            # probe_batch)
-            pending = pdf.loc[~acc, ["_zfid", "_zwkt"]]
-            for _zfid, grp in pending.groupby("_zfid", sort=False):
-                zbatch = parse_wkt(grp["_zwkt"].iloc[:1])
-                rings = zbatch.polygon_rings(0)
-                edges = rings_to_edges(rings)
-                idx = grp.index.to_numpy()
-                # points: JVM-stripped ones + any parsed POINT rows
-                is_pt_row = stripped[idx]
-                if dbatch is not None:
-                    is_pt_row = is_pt_row | (
-                        parsed[idx] & parsed_pt[sub_of[idx]]
-                    )
-                pts = idx[is_pt_row]
-                if pts.size:
-                    xs = px[pts].copy()
-                    ys = py[pts].copy()
-                    parsed_pts = pts[~stripped[pts]]
-                    if parsed_pts.size:
-                        si = sub_of[parsed_pts]
-                        first_ring = dbatch.part_ring_off[dbatch.geom_part_off[si]]
-                        cidx = dbatch.ring_coord_off[first_ring]
-                        rel = ~stripped[pts]
-                        xs[rel] = dbatch.coords[cidx, 0]
-                        ys[rel] = dbatch.coords[cidx, 1]
-                    keep[pts] = points_in_edges(xs, ys, edges)
-                rest = idx[~is_pt_row]
-                if rest.size:
-                    keep[rest] = intersects_rings_grouped(dbatch, sub_of[rest], rings, edges)
-            res = pdf.loc[keep]
-            yield pd.DataFrame({"doc_id": res["_did"].to_numpy(np.int64), "zone_fid": res["_zfid"].to_numpy(np.int64)})
+            keep[rows] = verify_pairs(batch, rows, zpos, rings, [rings_to_edges(r) for r in rings])
+            yield pd.DataFrame({"doc_id": pdf["_did"].to_numpy(np.int64)[keep], "zone_fid": zfid[keep]})
 
     # the groupBy made pairs unique and every pair flows through the
     # one verify stage (accepted rows as a pass-through flag) — a

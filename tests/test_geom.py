@@ -179,7 +179,8 @@ class TestRTree:
         envs = np.column_stack([envs, envs + rng.uniform(1, 5, (200, 2))])
         t = PackedRTree(envs)
         px, py = rng.uniform(0, 100, 500), rng.uniform(0, 100, 500)
-        pi, ii = t.query_points(px, py)
+        # a point probes with its degenerate envelope
+        pi, ii = t.query_rects(np.column_stack([px, py, px, py]))
         # oracle: brute force
         m = (
             (px[:, None] >= envs[None, :, 0])

@@ -24,6 +24,13 @@ class TestConnectedComponents:
         assert set(out.values()) == {0}
         assert len(out) == 13
 
+    def test_iteration_cap_raises(self, spark):
+        # the same chain needs 12 rounds; stopping at 3 must not return
+        # unconverged labels
+        edges = spark.createDataFrame([Row(src=i, dst=i + 1) for i in range(12)])
+        with pytest.raises(RuntimeError, match="max_iterations=3"):
+            connected_components(edges, max_iterations=3)
+
 
 class TestShortestPaths:
     def test_weighted_diamond(self, spark):

@@ -635,7 +635,8 @@ class TestRasterizeCatalystExplode:
     def test_degenerate_polygon_is_not_a_point(self, spark):
         """A zero-area POLYGON has a degenerate envelope but burns
         NOTHING under the center rule — the point fast paths must not
-        stamp a pixel for it (they key on the POINT prefix, not on the
+        stamp a pixel for it (the Catalyst explode keys on the POINT
+        prefix, the numpy explode on the parsed type, neither on the
         envelope alone). Regression for the deg rule in both the
         Catalyst and the numpy explode."""
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4, dtype="int32")

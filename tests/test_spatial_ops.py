@@ -338,8 +338,13 @@ class TestCellJoinPlans:
         rng = np.random.default_rng(8)
         rows = [(int(i), f"POINT ({rng.uniform(0,100):.3f} {rng.uniform(0,100):.3f})")
                 for i in range(200)]
+        # one row of every parsed class, so both joins verify each
+        # through verify_pairs; zone 1 lies inside 1004's hole
         rows += [(1000, "POLYGON ((55 55,58 55,58 58,55 58,55 55))"),
-                 (1001, "LINESTRING (5 5,95 95)")]
+                 (1001, "LINESTRING (5 5,95 95)"),
+                 (1002, "MULTIPOINT ((3 3),(30 30))"),
+                 (1003, "GEOMETRYCOLLECTION (POINT (97 97),LINESTRING (70 40,70 60))"),
+                 (1004, "POLYGON ((45 45,99 45,99 99,45 99,45 45),(48 48,97 48,97 97,48 97,48 48))")]
         docs = spark.createDataFrame(rows, "_id bigint, wkt string")
         docs = extract_geom(
             docs.withColumn("spans", F2.array(F2.struct(
@@ -353,7 +358,8 @@ class TestCellJoinPlans:
         )
         grid = Grid(0, 0, 100, 100, nx=5, ny=5)
         want = {(r._id, r.zone_fid) for r in spatial_join(docs, zones).select("_id", "zone_fid").collect()}
-        assert len(want) > 0 and {(1000, 1), (1001, 0), (1001, 1)} <= want
+        assert len(want) > 0 and {(1000, 1), (1001, 0), (1001, 1), (1002, 0), (1003, 1), (1004, 0)} <= want
+        assert not {(1002, 1), (1003, 0), (1004, 1)} & want
 
         def run():
             out = spatial_join_cells(docs, zones, grid)
@@ -470,9 +476,10 @@ class TestSpatialJoinProject:
 
 class TestFragilePoints:
     """spatial_join(project=...) end to end, where point rows cross into
-    the probe with their WKT stripped, against ZoneIndex.probe_points
-    on the points where the ray cast is most fragile: on edges, on
-    vertices, inside holes, at non-integer coordinates (0.1 steps and
+    the probe with their WKT stripped, against the per-row predicate
+    (geometry_intersects_rings, as TestSpatialJoin._oracle) on the
+    points where the ray cast is most fragile: on edges, on vertices,
+    inside holes, at non-integer coordinates (0.1 steps and
     17-significant-digit values)."""
 
     ZONES = [
@@ -483,7 +490,7 @@ class TestFragilePoints:
         "POLYGON EMPTY",
     ]
 
-    def test_project_join_matches_probe_points(self, spark):
+    def test_project_join_matches_per_row_oracle(self, spark):
         from gdal_spark.operators.spatial import ZoneIndex, extract_geom, spatial_join
 
         fids = np.arange(len(self.ZONES)) + 100
@@ -497,8 +504,12 @@ class TestFragilePoints:
                 pts.append(np.column_stack([x1 + t * (x2 - x1), y1 + t * (y2 - y1)]))
         pts.append(np.array([[1.0, 1.0], [0.1 + 0.2, 0.1 + 0.2], [1 / 3, 2 / 3]]))
         xy = np.concatenate(pts)
-        pi, zi = zidx.probe_points(xy[:, 0], xy[:, 1])
-        want = {(int(p), int(zidx.fids[z])) for p, z in zip(pi, zi)}
+        want = {
+            (p, int(fid))
+            for p in range(len(xy))
+            for fid, rings in zip(fids, zidx.rings)
+            if geometry_intersects_rings(GeomType.POINT, [[xy[p : p + 1]]], rings)
+        }
 
         # repr round-trips every double, so the parsed envelope is xy
         docs = spark.createDataFrame(
