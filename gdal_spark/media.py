@@ -94,13 +94,16 @@ def _decode_image(payload: bytes) -> np.ndarray:
     """The real decode dispatch: PNG and baseline grayscale JPEG
     payloads (the signature tests any container sniffer runs) parse
     through the own-written codecs (gdal_spark/png.py /
-    gdal_spark/jpeg.py); everything else falls back to the
-    deterministic stub."""
+    gdal_spark/jpeg.py) into (h, w, 3) RGB; everything else falls back
+    to the deterministic stub."""
     from gdal_spark.jpeg import JPEG_SIG, decode_jpeg_gray
     from gdal_spark.png import PNG_SIG, decode_png
 
     if payload[:8] == PNG_SIG:
-        return decode_png(bytes(payload))
+        img = decode_png(bytes(payload))
+        # RGB like the JPEG branch: drop alpha, repeat gray
+        rgb = img[:, :, :3] if img.shape[2] >= 3 else img[:, :, :1]
+        return np.repeat(rgb, 3 // rgb.shape[2], axis=2)
     if payload[:3] == JPEG_SIG:
         g = decode_jpeg_gray(bytes(payload))
         return np.repeat(g[:, :, None], 3, axis=2)

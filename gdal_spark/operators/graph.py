@@ -85,7 +85,8 @@ def shortest_path_tree(
 ) -> DataFrame:
     """(node, dist, parent) single-source shortest-path tree —
     Bellman-Ford relaxation keeping the argmin predecessor (struct-min
-    per dst). parent is NULL at the source."""
+    per dst). parent is NULL at the source. Raises RuntimeError if a
+    distance still improves in round max_iterations."""
     e = edges.select(src, dst, weight)
     node_t = e.schema[src].dataType.simpleString()
     dist = e.sparkSession.createDataFrame(
@@ -129,8 +130,8 @@ def shortest_path_tree(
         )
         dist = new
         if improved == 0:
-            break
-    return dist
+            return dist
+    raise RuntimeError(f"shortest_path_tree did not converge within max_iterations={max_iterations} rounds")
 
 
 def shortest_path_trees_batch(
@@ -151,7 +152,8 @@ def shortest_path_trees_batch(
     banned_edges: [(sid, u, v)]. The per-spur edge view is the edge
     table replicated per sid (broadcast of the tiny sid list) minus
     the broadcast ban lists — per-spur filters never touch the driver
-    loop. Returns (sid, node, dist, parent)."""
+    loop. Returns (sid, node, dist, parent); raises RuntimeError if a
+    distance still improves in round max_iterations."""
     spark = edges.sparkSession
     e = edges.select(src, dst, weight)
     node_t = e.schema[src].dataType.simpleString()
@@ -216,8 +218,8 @@ def shortest_path_trees_batch(
         )
         dist = new
         if improved == 0:
-            break
-    return dist
+            return dist
+    raise RuntimeError(f"shortest_path_trees_batch did not converge within max_iterations={max_iterations} rounds")
 
 
 def k_shortest_paths(
@@ -387,8 +389,9 @@ def shortest_paths(
     (GNMGraph::DijkstraShortestPath, gnm/gnmgraph.cpp:185).
     Distributed Bellman-Ford relaxation: each round relaxes every edge
     once (join on the frontier, groupBy(dst) min); terminates when no
-    distance improves. Unreachable nodes are absent from the result
-    (the reference returns an empty path for them)."""
+    distance improves, and raises RuntimeError if one still improves
+    in round max_iterations. Unreachable nodes are absent from the
+    result (the reference returns an empty path for them)."""
     e = edges.select(src, dst, weight)
     dist = e.sparkSession.createDataFrame(
         [(source, 0.0)], f"node {e.schema[src].dataType.simpleString()}, dist double"
@@ -422,5 +425,5 @@ def shortest_paths(
         )
         dist = new
         if improved == 0:
-            break
-    return dist
+            return dist
+    raise RuntimeError(f"shortest_paths did not converge within max_iterations={max_iterations} rounds")

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 
 from gdal_spark.geom.batch import GeomType
 from gdal_spark.geom.wkt import _fmt_d, parse_wkt, parse_wkt_z
+from gdal_spark.operators.spatial import ENVELOPE_SCHEMA, envelope_udf
 
 CHECKSUM_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
 
@@ -512,6 +513,17 @@ def rasterize_local(
 # ---------------------------------------------------------------------------
 # distributed rasterize: explode shapes to tiles -> burn per tile
 
+# ADD's first phase groups shapes by (tile, ord % _ADD_SALT), so a hot
+# tile's burn spreads over this many tasks before the per-tile merge
+_ADD_SALT = 8
+
+# one Arrow pass per plan: Catalyst pushes rasterize's `inside` filter
+# below the projection of a deterministic UDF by inlining the UDF into
+# it, so each WKT would parse twice (two ArrowEvalPython nodes). A
+# separate nondeterministic copy keeps it to one pass without changing
+# the shared envelope_udf (asNondeterministic mutates its UDF object).
+_envelope_once = F.pandas_udf(envelope_udf.func, ENVELOPE_SCHEMA).asNondeterministic()
+
 TILE_SCHEMA = StructType(
     [
         StructField("band", IntegerType()),
@@ -588,205 +600,100 @@ def rasterize(
     order_col: str | None = "fid",
     merge_alg: str = "replace",
     all_touched: bool = False,
-    salt: int | None = None,
     env_cols: tuple[str, str, str, str] | None = None,
     burn_value_from_z: bool = False,
 ) -> DataFrame:
     """Distributed gdal_rasterize: returns the tile table.
 
-    Plan shape (all Catalyst-visible):
-      shapes -> [Arrow UDF] explode to candidate (ty,tx) by pixel
-      envelope -> shuffle on tile key (groupBy) -> [applyInPandas]
-      burn shapes in `order_col` order per tile -> tile rows.
+    Plan shape (one for every call):
+      shapes -> world envelope -> 4-corner inverse geotransform ->
+      candidate tile range -> Catalyst sequence()-explode to (ty,tx)
+      -> shuffle on tile key (groupBy) -> [applyInPandas] burn shapes
+      in `order_col` order per tile -> tile rows.
     At scale the shuffle moves only (shape x touched-tile) pairs —
     geometry never fans out beyond its envelope's tiles, the same
     work-partitioning as the reference's chunked burn
-    (gdalrasterize.cpp:933) but across executors.
+    (gdalrasterize.cpp:933) but across executors. No shape row runs
+    per-row Python before the shuffle.
 
-    salt (ADD mode only; default 8 for ADD, off for REPLACE): skew
-    mitigation for hot tiles — shapes shuffle on (ty,tx,ord%salt),
-    partial float64 burns merge per tile by summation. ADD is
-    associative+commutative so the result is bit-identical to the
-    unsalted path (one final dtype round/clamp). REPLACE is
-    order-dependent and stays single-pass per tile.
+    Envelopes: env_cols names (minx, miny, maxx, maxy) columns the
+    caller already carries (extract_geom output does); without them
+    one Arrow pass of spatial.envelope_udf derives them from the WKT.
+    Rows with a NULL/unparseable geometry or an envelope off the
+    raster never reach the shuffle. Without order_col, features burn
+    in input order (monotonically_increasing_id).
 
-    env_cols: optional (minx, miny, maxx, maxy) column names. When the
-    caller already carries geometry envelopes (extract_geom output
-    does), the explode stage maps shapes to tiles from those columns
-    with pure numpy — no WKT parse before the shuffle. In ADD mode,
-    degenerate envelopes (minx==maxx, miny==maxy → POINT) additionally
-    ship as two doubles (gx, gy) with a NULL wkt, so the burn stage
-    bincounts them without ever parsing — bit-identical to the parsed
-    path (same world_to_pixel + bounds rule). REPLACE keeps the WKT
-    (strict feature-order burns need the full geometry).
+    REPLACE is order-dependent and burns each tile in one pass. ADD
+    always runs two phases to spread hot tiles: shapes shuffle on
+    (ty, tx, ord % 8), partial float64 burns merge per tile by
+    summation, and the dtype round/clamp happens once in the merge.
+
+    Point partials (ADD with env_cols, no burn_value_from_z): rows
+    whose envelope is degenerate and whose WKT is a POINT skip the
+    row-per-shape shuffle. One map-side pass folds each input
+    partition's points into per-tile partials from the envelope
+    coordinates, without a parse, and only those partials reach the
+    merge. In every other case points keep their WKT and burn in the
+    per-tile stage's vectorized point path.
     """
     ts = spec.tile_size
-    if salt is None:
-        salt = 8 if merge_alg == "add" else 0
-    if salt and merge_alg != "add":
-        raise ValueError("salting requires the associative ADD merge")
+    add = merge_alg == "add"
+    # the map-side point combine reads coordinates from the caller's
+    # envelope columns; Z burns need the parsed Z, REPLACE the order
+    pt_partials = add and env_cols is not None and not burn_value_from_z
 
-    explode_schema = StructType(
-        [
-            StructField("ty", IntegerType()),
-            StructField("tx", IntegerType()),
-            StructField("salt", IntegerType()),
-            StructField("wkt", StringType()),
-            StructField("gx", DoubleType()),
-            StructField("gy", DoubleType()),
-            StructField("burn", ArrayType(DoubleType())),  # per-band values
-            StructField("ord", LongType()),
-        ]
+    if env_cols is None:
+        shapes = shapes.select(
+            "*", _envelope_once(F.col(wkt_col)).alias("_env")
+        )
+        env_cols = ("_env.minx", "_env.miny", "_env.maxx", "_env.maxy")
+    base = shapes.select(
+        F.col(wkt_col).alias("_wkt"),
+        *[F.col(c).alias(a) for c, a in zip(env_cols, ("_mnx", "_mny", "_mxx", "_mxy"))],
+        F.transform(F.col(burn_col), lambda v: v.cast("double")).alias("burn"),
+        (F.col(order_col).cast("long") if order_col else F.monotonically_increasing_id()).alias("ord"),
     )
-    # parse-free point fast paths ship only (gx, gy) — they lose the
-    # Z coordinate, so BURN_VALUE_FROM=Z keeps WKT through the shuffle
-    point_fast = merge_alg == "add" and not burn_value_from_z
 
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if env_cols is not None:
-                env = np.column_stack(
-                    [pdf[c].to_numpy(dtype=np.float64) for c in env_cols]
-                )
-            else:
-                batch = parse_wkt(pdf[wkt_col])
-                env = batch.envelopes()
-            # world envelope -> pixel-space bbox via ALL FOUR corners:
-            # with a rotated geotransform (gt[2]/gt[4] != 0) the two
-            # diagonal corners alone under-cover the pixel bbox and
-            # shapes could silently miss tiles
-            pxs, pys = zip(
-                *(
-                    spec.world_to_pixel(env[:, cx], env[:, cy])
-                    for cx, cy in ((0, 1), (0, 3), (2, 1), (2, 3))
-                )
-            )
-            pminx = np.minimum.reduce(pxs)
-            pmaxx = np.maximum.reduce(pxs)
-            pminy = np.minimum.reduce(pys)
-            pmaxy = np.maximum.reduce(pys)
-            tx0 = np.clip(np.floor(pminx / ts), 0, spec.ntiles_x - 1).astype(np.int64)
-            tx1 = np.clip(np.floor(pmaxx / ts), 0, spec.ntiles_x - 1).astype(np.int64)
-            ty0 = np.clip(np.floor(pminy / ts), 0, spec.ntiles_y - 1).astype(np.int64)
-            ty1 = np.clip(np.floor(pmaxy / ts), 0, spec.ntiles_y - 1).astype(np.int64)
-            orders = pdf[order_col].to_numpy(dtype=np.int64) if order_col else np.arange(len(pdf), dtype=np.int64)
-            burns = pdf[burn_col]
-            inside = ~np.isnan(env[:, 0]) & ~(
-                (pmaxx < 0) | (pminx >= spec.width) | (pmaxy < 0) | (pminy >= spec.height)
-            )
-            salts = (orders % salt).astype(np.int32) if salt else np.zeros(len(pdf), dtype=np.int32)
-            blist_all = burns.map(lambda v: [float(x) for x in v])
+    # world envelope -> pixel-space bbox via ALL FOUR corners: with a
+    # rotated geotransform (gt[2]/gt[4] != 0) the two diagonal corners
+    # alone under-cover the pixel bbox and shapes could silently miss
+    # tiles. Same float64 operation order as RasterSpec.world_to_pixel.
+    g0, g1, g2, g3, g4, g5 = spec.gt
+    det = g1 * g5 - g2 * g4
 
-            # vectorized fast path: shapes covering exactly one tile
-            single = inside & (tx0 == tx1) & (ty0 == ty1)
-            frames = []
-            si = np.flatnonzero(single)
-            if si.size:
-                wkts = pdf[wkt_col].iloc[si].to_numpy(dtype=object)
-                sgx = np.full(si.size, np.nan)
-                sgy = np.full(si.size, np.nan)
-                if point_fast:
-                    # env_cols is None here (with envelope columns, ADD
-                    # explodes in Catalyst below), so `batch` holds the
-                    # parsed rows. An actual POINT, not any degenerate
-                    # envelope: a zero-area POLYGON/LINESTRING must
-                    # parse — its scanline/Bresenham burn is NOT a
-                    # point burn (a zero-area polygon covers no pixel
-                    # center and burns nothing)
-                    deg = ((batch.types == GeomType.POINT) & ~batch.is_empty)[si]
-                    sgx[deg] = env[si, 0][deg]
-                    sgy[deg] = env[si, 1][deg]
-                    wkts = wkts.copy()
-                    wkts[deg] = None
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "ty": ty0[si].astype(np.int32),
-                            "tx": tx0[si].astype(np.int32),
-                            "salt": salts[si],
-                            "wkt": wkts,
-                            "gx": sgx,
-                            "gy": sgy,
-                            "burn": blist_all.iloc[si].to_numpy(dtype=object),
-                            "ord": orders[si],
-                        }
-                    )
-                )
-            multi = np.flatnonzero(inside & ~single)
-            if multi.size:
-                out = {"ty": [], "tx": [], "salt": [], "wkt": [], "burn": [], "ord": []}
-                for i in multi:
-                    for tyy in range(int(ty0[i]), int(ty1[i]) + 1):
-                        for txx in range(int(tx0[i]), int(tx1[i]) + 1):
-                            out["ty"].append(tyy)
-                            out["tx"].append(txx)
-                            out["salt"].append(int(salts[i]))
-                            out["wkt"].append(pdf[wkt_col].iloc[i])
-                            out["burn"].append(blist_all.iloc[i])
-                            out["ord"].append(int(orders[i]))
-                mdf = pd.DataFrame(out)
-                mdf["gx"] = np.nan
-                mdf["gy"] = np.nan
-                frames.append(mdf[["ty", "tx", "salt", "wkt", "gx", "gy", "burn", "ord"]])
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def _cpx(x, y):
+        return (F.lit(g5) * (x - F.lit(g0)) - F.lit(g2) * (y - F.lit(g3))) / F.lit(det)
 
-    pt_partial_src = None  # set by the Catalyst branch's map-side combine
-    if env_cols is not None and merge_alg == "add" and not burn_value_from_z:
-        # -- pure-Catalyst explode (JVM-side, no Arrow crossing) --
-        # With envelope columns already present and an order-free merge,
-        # the whole explode stage is plain column arithmetic: the same
-        # 4-corner inverse-geotransform -> tile-range math as _explode
-        # above, written as Catalyst expressions with IDENTICAL float64
-        # operation order (so tile assignment is bit-identical to the
-        # numpy path), plus sequence()-explode for multi-tile shapes —
-        # the tile_keys pattern. Shape rows never cross into Python
-        # before the shuffle; only the grouped burn stage does. This
-        # mirrors the spatial_join(project=) crossing-diet: the explode
-        # half of rasterize disappears from the Python cost entirely.
-        g0, g1, g2, g3, g4, g5 = spec.gt
-        det = g1 * g5 - g2 * g4
+    def _cpy(x, y):
+        return (F.lit(-g4) * (x - F.lit(g0)) + F.lit(g1) * (y - F.lit(g3))) / F.lit(det)
 
-        def _cpx(x, y):
-            return (F.lit(g5) * (x - F.lit(g0)) - F.lit(g2) * (y - F.lit(g3))) / F.lit(det)
+    corners = [
+        (F.col("_mnx"), F.col("_mny")),
+        (F.col("_mnx"), F.col("_mxy")),
+        (F.col("_mxx"), F.col("_mny")),
+        (F.col("_mxx"), F.col("_mxy")),
+    ]
+    pxs = [_cpx(x, y) for x, y in corners]
+    pys = [_cpy(x, y) for x, y in corners]
+    pminx, pmaxx = F.least(*pxs), F.greatest(*pxs)
+    pminy, pmaxy = F.least(*pys), F.greatest(*pys)
+    inside = (~F.isnan(F.col("_mnx"))) & ~(
+        (pmaxx < F.lit(0.0))
+        | (pminx >= F.lit(float(spec.width)))
+        | (pmaxy < F.lit(0.0))
+        | (pminy >= F.lit(float(spec.height)))
+    )
+    tsf = F.lit(float(ts))
 
-        def _cpy(x, y):
-            return (F.lit(-g4) * (x - F.lit(g0)) + F.lit(g1) * (y - F.lit(g3))) / F.lit(det)
+    def _trange(pmin, pmax, n):
+        lo = F.greatest(F.least(F.floor(pmin / tsf), F.lit(n - 1).cast("long")), F.lit(0).cast("long"))
+        hi = F.greatest(F.least(F.floor(pmax / tsf), F.lit(n - 1).cast("long")), F.lit(0).cast("long"))
+        return lo.cast("int"), hi.cast("int")
 
-        base = shapes.select(
-            F.col(wkt_col).alias("_wkt"),
-            F.col(env_cols[0]).alias("_mnx"),
-            F.col(env_cols[1]).alias("_mny"),
-            F.col(env_cols[2]).alias("_mxx"),
-            F.col(env_cols[3]).alias("_mxy"),
-            F.transform(F.col(burn_col), lambda v: v.cast("double")).alias("burn"),
-            (F.col(order_col).cast("long") if order_col else F.monotonically_increasing_id()).alias("ord"),
-        )
-        corners = [
-            (F.col("_mnx"), F.col("_mny")),
-            (F.col("_mnx"), F.col("_mxy")),
-            (F.col("_mxx"), F.col("_mny")),
-            (F.col("_mxx"), F.col("_mxy")),
-        ]
-        pxs = [_cpx(x, y) for x, y in corners]
-        pys = [_cpy(x, y) for x, y in corners]
-        pminx, pmaxx = F.least(*pxs), F.greatest(*pxs)
-        pminy, pmaxy = F.least(*pys), F.greatest(*pys)
-        inside = (~F.isnan(F.col("_mnx"))) & ~(
-            (pmaxx < F.lit(0.0))
-            | (pminx >= F.lit(float(spec.width)))
-            | (pmaxy < F.lit(0.0))
-            | (pminy >= F.lit(float(spec.height)))
-        )
-        tsf = F.lit(float(ts))
-
-        def _trange(pmin, pmax, n):
-            lo = F.greatest(F.least(F.floor(pmin / tsf), F.lit(n - 1).cast("long")), F.lit(0).cast("long"))
-            hi = F.greatest(F.least(F.floor(pmax / tsf), F.lit(n - 1).cast("long")), F.lit(0).cast("long"))
-            return lo.cast("int"), hi.cast("int")
-
-        tx0c, tx1c = _trange(pminx, pmaxx, spec.ntiles_x)
-        ty0c, ty1c = _trange(pminy, pmaxy, spec.ntiles_y)
+    tx0c, tx1c = _trange(pminx, pmaxx, spec.ntiles_x)
+    ty0c, ty1c = _trange(pminy, pmaxy, spec.ntiles_y)
+    explode_src = base.where(inside)
+    if pt_partials:
         # degenerate envelope AND an actual POINT (a zero-area polygon
         # also has minx==maxx but burns nothing under the center rule —
         # it must keep its WKT and parse)
@@ -795,90 +702,27 @@ def rasterize(
             & (F.col("_mny") == F.col("_mxy"))
             & F.col("_wkt").startswith("POINT")
         )
-        explode_src = base.where(inside)
-        if salt:
-            # map-side point pre-combine (below) takes the points; only
-            # non-point shapes ride the row-per-shape shuffle
-            explode_src = explode_src.where(~deg)
-        exploded = (
-            explode_src
-            .select("*", F.explode(F.sequence(ty0c, ty1c)).alias("ty"))
-            .select("*", F.explode(F.sequence(tx0c, tx1c)).alias("tx"))
-            .select(
-                "ty",
-                "tx",
-                ((F.col("ord") % F.lit(salt)).cast("int") if salt else F.lit(0)).alias("salt"),
-                F.when(deg, F.lit(None).cast("string")).otherwise(F.col("_wkt")).alias("wkt"),
-                F.when(deg, F.col("_mnx")).alias("gx"),
-                F.when(deg, F.col("_mny")).alias("gy"),
-                "burn",
-                "ord",
-            )
+        explode_src = explode_src.where(~deg)
+    exploded = (
+        explode_src
+        .select("*", F.explode(F.sequence(ty0c, ty1c)).alias("ty"))
+        .select("*", F.explode(F.sequence(tx0c, tx1c)).alias("tx"))
+        .select(
+            "ty",
+            "tx",
+            *([(F.col("ord") % F.lit(_ADD_SALT)).cast("int").alias("salt")] if add else []),
+            F.col("_wkt").alias("wkt"),
+            "burn",
+            "ord",
         )
-        if salt:
-            # the point majority never enters the row-per-shape shuffle:
-            # per input partition, one Arrow pass bincounts every point
-            # into per-tile float64 partials (the classic map-side
-            # combine — ADD is the associative aggregate), and ONLY
-            # those partials (<= n_partitions x touched tiles rows, COO
-            # when sparse) reach the merge groupBy. The shuffle shrinks
-            # from one row per point to one row per (partition, tile).
-            # burn values cross as ONE PLAIN DOUBLE COLUMN PER BAND —
-            # an array<double> column materializes a Python object per
-            # row on the Arrow crossing (measured ~2x the whole
-            # stage's cost at 2M rows); scalars stay zero-copy numpy
-            # a missing band value must error like the array paths'
-            # IndexError, not silently poison the partial sums as the
-            # NULL->NaN element_at would (a NaN VALUE still passes —
-            # burning NaN into a float raster is legitimate)
-            def _band_burn(b: int):
-                el = F.element_at("burn", b + 1)
-                return F.when(
-                    el.isNull(),
-                    F.raise_error(F.lit(
-                        f"burn_values has no value for band {b + 1}"
-                    )).cast("double"),
-                ).otherwise(el).alias(f"_b{b}")
-
-            pt_partial_src = base.where(inside & deg).select(
-                F.col("_mnx").alias("gx"),
-                F.col("_mny").alias("gy"),
-                *[_band_burn(b) for b in range(spec.nbands)],
-            )
-    else:
-        exploded = shapes.mapInPandas(_explode, explode_schema)
+    )
 
     def _accumulate(pdf: pd.DataFrame, h: int, w: int, oy: int, ox: int, base: float) -> np.ndarray:
         """Burn all shapes of one (tile[, salt]) group into a float64
-        accumulator starting at `base` (spec.init for the single-pass
-        path, 0.0 for salted partials)."""
+        accumulator starting at `base` (spec.init for REPLACE's
+        single pass, 0.0 for ADD's partials)."""
         pdf = pdf.sort_values("ord", kind="stable")
         arr = np.full((spec.nbands, h, w), float(base))
-
-        # pre-parsed point rows (ADD-mode explode ships coords, no WKT):
-        # burn directly by bincount — same world_to_pixel + bounds rule
-        # as the parsed path below, so results are bit-identical
-        gxv = pdf["gx"].to_numpy(dtype=np.float64)
-        gmask = np.isfinite(gxv)
-        if gmask.any():
-            gyv = pdf["gy"].to_numpy(dtype=np.float64)
-            px, py = spec.world_to_pixel(gxv[gmask], gyv[gmask])
-            ok = (px >= 0) & (px < spec.width) & (py >= 0) & (py < spec.height)
-            lx = px.astype(np.int64) - ox
-            ly = py.astype(np.int64) - oy
-            ok &= (lx >= 0) & (lx < w) & (ly >= 0) & (ly < h)
-            sel = np.flatnonzero(ok)
-            if sel.size:
-                flat = ly[sel] * w + lx[sel]
-                gidx = np.flatnonzero(gmask)[sel]
-                burns = np.array(list(pdf["burn"].iloc[gidx]), dtype=np.float64)
-                for b in range(spec.nbands):
-                    arr[b] += np.bincount(
-                        flat, weights=burns[:, b], minlength=h * w
-                    ).reshape(h, w)
-            pdf = pdf[~gmask]
-            if not len(pdf):
-                return arr
 
         batch = parse_wkt(pdf["wkt"])
 
@@ -891,7 +735,7 @@ def rasterize(
         # order (a later polygon may overwrite an earlier point);
         # ADD is order-free, all-point tiles are order-safe too.
         # Z-burn always takes the generic loop (per-point variants).
-        if burn_value_from_z or not (merge_alg == "add" or is_single_pt.all()):
+        if burn_value_from_z or not (add or is_single_pt.all()):
             is_single_pt[:] = False
         pt_rows = np.flatnonzero(is_single_pt)
         if pt_rows.size:
@@ -907,7 +751,7 @@ def rasterize(
                 flat = ly[sel] * w + lx[sel]
                 burns = np.array(list(pdf["burn"].iloc[pt_rows[sel]]), dtype=np.float64)
                 for b in range(spec.nbands):
-                    if merge_alg == "add":
+                    if add:
                         arr[b] += np.bincount(flat, weights=burns[:, b], minlength=h * w).reshape(h, w)
                     else:
                         a = arr[b].ravel()
@@ -952,12 +796,12 @@ def rasterize(
             )
         return pd.DataFrame(rows)
 
-    if not salt:
+    if not add:
         return exploded.groupBy("ty", "tx").applyInPandas(_burn, TILE_SCHEMA)
 
-    # -- salted two-phase ADD: partial float64 burns per (tile, salt),
-    # then one merge per tile (sum is associative; dtype round/clamp
-    # happens exactly once, so results are bit-identical to unsalted)
+    # -- two-phase ADD: partial float64 burns per (tile, salt), then one
+    # merge per tile (sum is associative; the dtype round/clamp happens
+    # exactly once, in the merge)
     def _burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tyy, txx = int(key[0]), int(key[1])
         h, w = spec.tile_shape(tyy, txx)
@@ -1063,8 +907,35 @@ def rasterize(
             yield pd.DataFrame(rows)
 
     partial = exploded.groupBy("ty", "tx", "salt").applyInPandas(_burn_partial, TILE_SCHEMA)
-    if pt_partial_src is not None:
-        partial = partial.unionByName(pt_partial_src.mapInPandas(_pt_partials, TILE_SCHEMA))
+    if pt_partials:
+        # the point majority never enters the row-per-shape shuffle:
+        # per input partition, one Arrow pass bincounts every point
+        # into per-tile float64 partials (the classic map-side combine
+        # — ADD is the associative aggregate), and ONLY those partials
+        # (<= n_partitions x touched tiles rows, COO when sparse) reach
+        # the merge groupBy. Burn values cross as ONE PLAIN DOUBLE
+        # COLUMN PER BAND — an array<double> column materializes a
+        # Python object per row on the Arrow crossing (measured ~2x
+        # the whole stage's cost at 2M rows); scalars stay zero-copy.
+        # A missing band value must error like the array paths'
+        # IndexError, not silently poison the partial sums as the
+        # NULL->NaN element_at would (a NaN VALUE still passes —
+        # burning NaN into a float raster is legitimate)
+        def _band_burn(b: int):
+            el = F.element_at("burn", b + 1)
+            return F.when(
+                el.isNull(),
+                F.raise_error(F.lit(
+                    f"burn_values has no value for band {b + 1}"
+                )).cast("double"),
+            ).otherwise(el).alias(f"_b{b}")
+
+        pt_src = base.where(inside & deg).select(
+            F.col("_mnx").alias("gx"),
+            F.col("_mny").alias("gy"),
+            *[_band_burn(b) for b in range(spec.nbands)],
+        )
+        partial = partial.unionByName(pt_src.mapInPandas(_pt_partials, TILE_SCHEMA))
     return partial.groupBy("band", "ty", "tx").applyInPandas(_merge_partials, TILE_SCHEMA)
 
 

@@ -6,7 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
-from gdal_spark.operators.graph import connected_components, shortest_paths, symmetrize
+from gdal_spark.operators.graph import (
+    connected_components,
+    shortest_path_tree,
+    shortest_path_trees_batch,
+    shortest_paths,
+    symmetrize,
+)
 
 
 class TestConnectedComponents:
@@ -33,6 +39,20 @@ class TestConnectedComponents:
 
 
 class TestShortestPaths:
+    def test_iteration_cap_raises(self, spark):
+        # a 60-node chain needs 59 relaxation rounds; stopping at 10
+        # must not return the 11 nodes reached so far as the answer
+        edges = spark.createDataFrame(
+            [Row(src=i, dst=i + 1, weight=1.0) for i in range(59)]
+        )
+        for run in (
+            lambda: shortest_paths(edges, 0, max_iterations=10),
+            lambda: shortest_path_tree(edges, 0, max_iterations=10),
+            lambda: shortest_path_trees_batch(edges, [(0, 0)], [], [], max_iterations=10),
+        ):
+            with pytest.raises(RuntimeError, match="max_iterations=10"):
+                run()
+
     def test_weighted_diamond(self, spark):
         #     1 --2-- 3
         #  0 <          > 4      direct 0->4 weight 10

@@ -272,6 +272,31 @@ class TestMedia:
             assert 16 <= r.width <= 32 and 16 <= r.height <= 32 and r.channels == 3
             assert 0 <= r.mean_luma_x1000 <= 255_000
 
+    def test_image_features_normalize_png_channels(self, spark):
+        # gray, gray+alpha and RGBA PNGs must read as the RGB image with
+        # the gray repeated and the alpha dropped, as JPEG payloads do
+        from gdal_spark.png import encode_png
+
+        rng = np.random.default_rng(7)
+        gray = rng.integers(0, 256, (20, 24), dtype=np.uint8)
+        alpha = rng.integers(0, 256, (20, 24, 1), dtype=np.uint8)
+        rgb = rng.integers(0, 256, (20, 24, 3), dtype=np.uint8)
+        cases = {
+            "g": (gray, np.repeat(gray[:, :, None], 3, axis=2)),
+            "ga": (np.concatenate([gray[:, :, None], alpha], axis=2), np.repeat(gray[:, :, None], 3, axis=2)),
+            "rgba": (np.concatenate([rgb, alpha], axis=2), rgb),
+        }
+        rows = []
+        for name, (img, want) in cases.items():
+            rows.append((name, name, bytearray(encode_png(img))))
+            rows.append((name + "_rgb", name, bytearray(encode_png(want))))
+        media = spark.createDataFrame(rows, "doc_id string, media_ref string, payload binary")
+        feats = {r.doc_id: r for r in image_features(media).collect()}
+        for name in cases:
+            got, want = feats[name], feats[name + "_rgb"]
+            assert (got.width, got.height, got.channels) == (24, 20, 3)
+            assert (got.mean_luma_x1000, got.phash) == (want.mean_luma_x1000, want.phash)
+
     def test_features_deterministic(self, spark):
         from gdal_spark.datagen import docs_table
 

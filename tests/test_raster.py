@@ -110,9 +110,10 @@ class TestRasterizeDistributed:
         assert checksum_df(tiles, F4_SPEC, band=2) == 6443
 
     def test_env_cols_point_fast_path_bit_identical(self, spark):
-        # ADD-mode env_cols path (numpy explode + parsed-free point
-        # burn) must match the default WKT-parsing path bit for bit,
-        # with points and a multi-tile polygon mixed in one input
+        # ADD-mode env_cols path (map-side point partials from the
+        # envelope columns, no parse) must match the envelope_udf path
+        # (points parsed and burned per tile) bit for bit, with points
+        # and a multi-tile polygon mixed in one input
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4)
         rows = []
         for i in range(20):
@@ -139,6 +140,23 @@ class TestRasterizeDistributed:
             [(0, w[0], [1.0]), (1, w[1], [2.0])], "fid bigint, wkt string, burn_values array<double>"
         )
         assert materialize_full(rasterize(shapes, spec), spec).max() == 2
+
+    def test_replace_without_order_col_burns_in_input_order(self, spark):
+        # no order_col: features must still burn in input order, even
+        # when one partition crosses into Arrow as several batches
+        spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4, dtype="int32")
+        w = "POLYGON((0 0,0 8,8 8,8 0,0 0))"
+        shapes = spark.createDataFrame(
+            [(w, [1.0]), (w, [1.0]), (w, [2.0])], "wkt string, burn_values array<double>"
+        ).coalesce(1)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "2")
+        try:
+            out = materialize_full(rasterize(shapes, spec, order_col=None), spec)
+        finally:
+            spark.conf.set(key, prev)
+        assert (out == 2).all()
 
 
 class TestWarpKernels:
@@ -605,9 +623,10 @@ def test_bilinear_border_no_padding_bias(spark):
 
 
 class TestRasterizeCatalystExplode:
-    """env_cols + ADD now explodes JVM-side (no Arrow before the
-    shuffle): parity with the numpy explode on rotated grids, NaN
-    envelopes, and off-raster shapes; plan carries no Python eval."""
+    """Every rasterize explodes JVM-side (no per-row Python before the
+    shuffle): parity between envelope columns and envelope_udf on
+    rotated grids, NaN envelopes and off-raster shapes; the plan
+    carries one envelope pass and no Python explode."""
 
     def _shapes(self, spark):
         rows = []
@@ -628,17 +647,22 @@ class TestRasterizeCatalystExplode:
         spec = RasterSpec(8, 8, (0.0, 0.9, 0.2, 8.0, 0.1, -0.8), tile_size=4, dtype="int32")
         shapes = self._shapes(spark)
         env = ("env_minx", "env_miny", "env_maxx", "env_maxy")
-        fast = materialize_full(rasterize(shapes, spec, merge_alg="add", env_cols=env), spec)
-        slow = materialize_full(rasterize(shapes, spec, merge_alg="add"), spec)
-        assert (fast == slow).all() and fast.sum() > 0
+        rows = shapes.orderBy("fid").collect()
+        for merge_alg in ("add", "replace"):
+            fast = materialize_full(rasterize(shapes, spec, merge_alg=merge_alg, env_cols=env), spec)
+            slow = materialize_full(rasterize(shapes, spec, merge_alg=merge_alg), spec)
+            local = rasterize_local(
+                [r.wkt for r in rows], [r.burn_values for r in rows], spec, merge_alg=merge_alg
+            )[0]
+            assert (fast == slow).all() and (fast == local).all() and fast.sum() > 0, merge_alg
 
     def test_degenerate_polygon_is_not_a_point(self, spark):
         """A zero-area POLYGON has a degenerate envelope but burns
-        NOTHING under the center rule — the point fast paths must not
-        stamp a pixel for it (the Catalyst explode keys on the POINT
-        prefix, the numpy explode on the parsed type, neither on the
-        envelope alone). Regression for the deg rule in both the
-        Catalyst and the numpy explode."""
+        NOTHING under the center rule — the point paths must not stamp
+        a pixel for it (the map-side point partials key on the POINT
+        prefix, the per-tile point burn on the parsed type, neither on
+        the envelope alone). Regression for both, with and without
+        envelope columns."""
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4, dtype="int32")
         rows = [
             (0, "POLYGON((2.5 2.5,2.5 2.5,2.5 2.5,2.5 2.5))",
@@ -660,15 +684,21 @@ class TestRasterizeCatalystExplode:
     def test_explode_plan_is_jvm_side(self, spark):
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4)
         shapes = self._shapes(spark)
-        env = ("env_minx", "env_miny", "env_maxx", "env_maxy")
-        tiles = rasterize(shapes, spec, merge_alg="add", env_cols=env)
-        plan = tiles._jdf.queryExecution().executedPlan().toString()
-        # the burn/merge group stages cross into Python, plus exactly
-        # ONE MapInPandas: the map-side point pre-combine, which emits
-        # per-(partition, tile) partials instead of row-per-point — the
-        # shape explode itself must stay JVM-side (a second MapInPandas
-        # would betray a Python explode regression)
-        assert plan.count("FlatMapGroupsInPandas") == 2
-        assert plan.count("MapInPandas") == 1
-        # the non-point branch's tile fan-out is a JVM Generate
-        assert "Generate explode" in plan
+        for merge_alg in ("add", "replace"):
+            for env in (("env_minx", "env_miny", "env_maxx", "env_maxy"), None):
+                tiles = rasterize(shapes, spec, merge_alg=merge_alg, env_cols=env)
+                plan = tiles._jdf.queryExecution().executedPlan().toString()
+                case = (merge_alg, env is not None)
+                # the tile fan-out is a JVM Generate for every call
+                assert "Generate explode" in plan, case
+                # the only MapInPandas is the map-side point pre-combine
+                # (ADD with envelope columns), which emits
+                # per-(partition, tile) partials instead of
+                # row-per-point; any other would betray a Python explode
+                pt_partials = merge_alg == "add" and env is not None
+                assert plan.count("MapInPandas") == int(pt_partials), case
+                # without envelope columns ONE envelope_udf pass (not one
+                # per projection reading its fields); with them none
+                assert plan.count("ArrowEvalPython") == int(env is None), case
+                # burn (+ merge for ADD's two phases) group stages
+                assert plan.count("FlatMapGroupsInPandas") == (2 if merge_alg == "add" else 1), case
