@@ -300,11 +300,21 @@ def decode_jpeg_gray(payload: bytes) -> np.ndarray:
     hufs: dict[tuple[int, int], dict] = {}
     h = w = None
     scan = None
-    while pos + 4 <= len(payload):
+    while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise JpegError("marker sync lost")
         marker = payload[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         if marker == 0xD9:
+            break
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM, RSTn: no length
+            pos += 2
+            continue
+        if marker == 0xDD:
+            raise JpegError("restart intervals (DRI) are not supported")
+        if pos + 4 > len(payload):
             break
         (ln,) = struct.unpack_from(">H", payload, pos + 2)
         data = payload[pos + 4 : pos + 2 + ln]

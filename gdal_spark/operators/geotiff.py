@@ -36,9 +36,11 @@ The archive itself is one sequential file, so the sink makes two
 passes over the persisted compressed-tile table: (1) collect only
 (level, band, ty, tx, nbytes) — a few dozen bytes per tile, the same
 order of size as the TileOffsets arrays any TIFF writer must hold —
-to lay out IFDs and offsets; (2) stream payloads in file order via
-sorted toLocalIterator, so driver memory stays bounded by one
-partition, never the raster.
+to lay out IFDs and offsets; (2) stream payloads via toLocalIterator
+in whatever order the partitions hold them and seek each to the
+offset the layout already gave it: no sort, so no range-sampling job
+and no shuffle of the compressed payloads. Driver memory stays bounded
+by one partition, never the raster.
 """
 
 from __future__ import annotations
@@ -292,7 +294,10 @@ def write_cog(
     the DF are spec.init-valued (the rasterize contract) and share one
     deduplicated fill blob in the file. Returns {path, levels, tiles,
     sparse, bytes, bigtiff}. Overview reduction + padding + DEFLATE are
-    distributed; the driver streams the sorted payload iterator."""
+    distributed; the driver streams the payloads unsorted and writes
+    each at its laid-out offset, so the file does not depend on the
+    table's partitioning. Raises ValueError naming the tile key when a
+    key occurs twice or a payload's length drifts from pass 1."""
     if compress not in ("deflate", "none"):
         raise ValueError(f"unsupported compress={compress!r}")
     if spec.dtype not in _DTYPE_TIFF:
@@ -403,13 +408,13 @@ def write_cog(
             offsets[key] = p
             n = meta[key]
             p += n + (n & 1)  # word-align tiles
-        return order, ifds, starts, over_at, data_start, offsets, p
+        return ifds, starts, over_at, data_start, offsets, p
 
     big = bool(bigtiff) if bigtiff != "auto" else False
-    order, ifds, starts, over_at, data_start, offsets, total = _layout(big)
+    ifds, starts, over_at, data_start, offsets, total = _layout(big)
     if bigtiff == "auto" and total >= 2**32 - 16:
         big = True
-        order, ifds, starts, over_at, data_start, offsets, total = _layout(big)
+        ifds, starts, over_at, data_start, offsets, total = _layout(big)
 
     # patch real offsets/bytecounts into the IFDs
     for ovr, (w, h) in enumerate(dims):
@@ -425,42 +430,42 @@ def write_cog(
         b.add(TAG_TILE_OFFSETS, TYPE_LONG8 if big else TYPE_LONG, offs)
         b.add(TAG_TILE_BYTE_COUNTS, TYPE_LONG, cnts)
 
-    with open(path, "wb") as f:
-        if big:
-            f.write(struct.pack("<2sHHHQ", b"II", 43, 8, 0, starts[0]))
-        else:
-            f.write(struct.pack("<2sHI", b"II", 42, starts[0]))
-        for i, b in enumerate(ifds):
-            nxt = starts[i + 1] if i + 1 < len(ifds) else 0
-            body, over = b.render(nxt, over_at[i])
-            assert len(body) == b.size() and len(over) == b.overflow()
-            f.seek(starts[i])
-            f.write(body)
-            f.seek(over_at[i])
-            f.write(over)
-        if f.tell() < data_start:
-            f.write(b"\0" * (data_start - f.tell()))
-        pos = data_start
-        if missing:
-            f.write(fill_blob)
-            pos += len(fill_blob)
-            if pos & 1:
-                f.write(b"\0")
-                pos += 1
-        # pass 2: stream payloads in file order. The COG data order IS
-        # (ovr desc, band, ty, tx) — one range shuffle, no rank table.
-        ordered = allt.orderBy(F.desc("ovr"), "band", "ty", "tx").select(
-            "ovr", "band", "ty", "tx", "blob"
-        )
-        for row in ordered.toLocalIterator():
-            key = (row["ovr"], row["band"], row["ty"], row["tx"])
-            assert offsets[key] == pos, f"layout drift at {key}"
-            f.write(row["blob"])
-            pos += len(row["blob"])
-            if pos & 1:
-                f.write(b"\0")
-                pos += 1
-    allt.unpersist()
+    try:
+        with open(path, "wb") as f:
+            if big:
+                f.write(struct.pack("<2sHHHQ", b"II", 43, 8, 0, starts[0]))
+            else:
+                f.write(struct.pack("<2sHI", b"II", 42, starts[0]))
+            for i, b in enumerate(ifds):
+                nxt = starts[i + 1] if i + 1 < len(ifds) else 0
+                body, over = b.render(nxt, over_at[i])
+                assert len(body) == b.size() and len(over) == b.overflow()
+                f.seek(starts[i])
+                f.write(body)
+                f.seek(over_at[i])
+                f.write(over)
+            if missing:
+                f.seek(data_start)
+                f.write(fill_blob)
+            # pass 2: every offset is laid out, so payloads arrive in any
+            # order and land by seek; the gaps (word-align pads) read as 0
+            written = set()
+            for row in allt.select("ovr", "band", "ty", "tx", "blob").toLocalIterator():
+                key = (row["ovr"], row["band"], row["ty"], row["tx"])
+                blob = row["blob"]
+                if key in written:
+                    raise ValueError(f"tile {key} occurs more than once in the tile table")
+                if len(blob) != meta.get(key):
+                    raise ValueError(f"layout drift at {key}: {len(blob)} bytes, laid out {meta.get(key)}")
+                written.add(key)
+                f.seek(offsets[key])
+                f.write(blob)
+            if len(written) != len(meta):
+                raise ValueError(f"tile {min(set(meta) - written)} was laid out but never streamed")
+            # a trailing pad byte after the last tile still counts
+            f.truncate(total)
+    finally:
+        allt.unpersist()
     return {"path": path, "levels": len(dims), "tiles": len(meta),
             "sparse": len(missing), "bytes": total, "bigtiff": big}
 

@@ -250,9 +250,11 @@ def k_shortest_paths(
     cannot fit on the driver. The in-memory relaxation replicates the
     distributed rounds exactly (same strict-improvement rule, same
     min-(dist, parent) tie-break), so both paths return identical
-    trees."""
+    trees, and both raise RuntimeError when a distance still improves
+    in their last round (a negative cycle never stops improving)."""
 
     LOCAL_EDGE_GUARD = 100_000
+    LOCAL_ROUND_CAP = 10_000
 
     local_edges: list | None = None
     # the guard probe: an explicit caller hint skips the job entirely;
@@ -268,7 +270,7 @@ def k_shortest_paths(
 
     def _spt_local(elist, start) -> tuple[float, list, list] | None:
         dist: dict = {start: (0.0, None)}
-        for _ in range(10_000):
+        for _ in range(LOCAL_ROUND_CAP):
             best: dict = {}
             for (u, v, w) in elist:
                 if u in dist:
@@ -282,6 +284,10 @@ def k_shortest_paths(
                     improved = True
             if not improved:
                 break
+        else:
+            raise RuntimeError(
+                f"k_shortest_paths' in-memory relaxation did not converge within {LOCAL_ROUND_CAP} rounds"
+            )
         if target not in dist:
             return None
         path = [target]

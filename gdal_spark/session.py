@@ -3,8 +3,10 @@
 Arrow execution on (the reference itself streams features as Arrow
 batches of 65,536 — ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp:2079 —
 so columnar batch execution is the semantically-endorsed path), AQE on
-for runtime skew handling, shuffle partitions sized for local testing
-but overridable for cluster runs via env.
+for runtime skew handling and partition coalescing (of cached and
+persisted plans too, so their task count follows their data), shuffle
+partitions sized for local testing but overridable for cluster runs
+via env.
 """
 
 from __future__ import annotations
@@ -42,6 +44,17 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Without this, AQE leaves a persisted plan's output at
+        # spark.sql.shuffle.partitions, and every later stage over it runs
+        # one task (one Python worker round trip, ~60 ms) per partition,
+        # empty or not: the 4-tile persisted burn table of perfbench's
+        # tile_raster sat in 32 partitions, and cog_write ran 289 tasks
+        # for a 6 KB file (7 with this on, 1 partition; 4-CPU host).
+        # Coalescing only merges adjacent small partitions, to a target
+        # size of at most total / defaultParallelism (parallelismFirst),
+        # so large cached tables keep their parallelism, and it
+        # concatenates partitions in order, so row order holds.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # 100 TB scale: files are split into ~128MB tasks by default;
         # keep the default but make it explicit and overridable.
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))

@@ -189,6 +189,61 @@ class TestRoundTrip:
         assert (ovr[128:, 128:] == 7).all()
 
 
+class TestUnsortedStream:
+    """Pass 2 writes each payload at its laid-out offset in whatever
+    order the partitions deliver it, so the file must not depend on how
+    the tile table is partitioned or ordered."""
+
+    SPEC = RasterSpec(width=1000, height=900, gt=(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+                      dtype="uint8", nbands=2, tile_size=256)
+
+    def _sparse(self, spark):
+        from pyspark.sql import functions as F
+
+        df, rows = _tile_df(spark, self.SPEC)
+        sparse = df.filter((F.col("ty") * 3 + F.col("tx") + F.col("band")) % 4 != 0)
+        return sparse, [r for r in rows if (r["ty"] * 3 + r["tx"] + r["band"]) % 4 != 0]
+
+    def test_partitioning_does_not_change_bytes(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        sparse, rows = self._sparse(spark)
+        layouts = {
+            "one": sparse.coalesce(1),
+            "hash7": sparse.repartition(7, "band", "ty", "tx"),
+            "rand7": sparse.orderBy(F.rand(11)).repartition(7),
+        }
+        files = {}
+        for name, df in layouts.items():
+            assert df.rdd.getNumPartitions() == (1 if name == "one" else 7)
+            p = str(tmp_path / f"{name}.tif")
+            info = write_cog(df, self.SPEC, p, nodata=0.0)
+            assert info["levels"] == 3 and info["sparse"] > 0
+            with open(p, "rb") as f:
+                files[name] = f.read()
+        assert files["one"] == files["hash7"] == files["rand7"]
+        lv = read_geotiff(str(tmp_path / "rand7.tif"))["levels"][0]
+        have = {(r["band"], r["ty"], r["tx"]): r for r in rows}
+        for (band, ty, tx), arr in lv["tiles"].items():
+            r = have.get((band, ty, tx))
+            if r is None:
+                assert not arr.any()
+                continue
+            exp = np.frombuffer(r["payload"], dtype="uint8").reshape(r["h"], r["w"])
+            np.testing.assert_array_equal(arr[: r["h"], : r["w"]], exp)
+            assert not arr[r["h"]:, :].any() and not arr[:, r["w"]:].any()
+        assert len(lv["tiles"]) == 2 * 4 * 4
+
+    def test_duplicate_tile_key_raises(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        sparse, _ = self._sparse(spark)
+        dup = sparse.unionByName(sparse.filter((F.col("band") == 1) & (F.col("ty") == 0)
+                                               & (F.col("tx") == 0)))
+        with pytest.raises(ValueError, match=r"\(0, 1, 0, 0\)"):
+            write_cog(dup, self.SPEC, str(tmp_path / "dup.tif"), overviews=False)
+
+
 class TestOverviewSemantics:
     def test_average_matches_scalar_replica(self, spark):
         """Edge-aware AVERAGE: dest pixel i averages src [2i, min(2i+2, n))

@@ -126,6 +126,19 @@ class TestKShortestPaths:
         out = k_shortest_paths(edges, "a", "b", 5)
         assert len(out) == 1 and out[0] == (1.0, ["a", "b"])
 
+    def test_local_round_cap_raises(self, spark):
+        # 1->2->1 is a negative cycle, so the in-memory relaxation still
+        # improves in its last round; that must raise like the
+        # distributed path does, not return [] as if 3 were unreachable
+        from gdal_spark.operators.graph import k_shortest_paths
+
+        edges = spark.createDataFrame(
+            [(0, 1, 1.0), (1, 2, -3.0), (2, 1, 1.0), (5, 3, 1.0)],
+            "src bigint, dst bigint, weight double",
+        )
+        with pytest.raises(RuntimeError, match="10000 rounds"):
+            k_shortest_paths(edges, 0, 3, 2)
+
 
 class TestYenDistributedBatch:
     def test_distributed_branch_matches_local(self, spark):

@@ -109,6 +109,34 @@ class TestFraming:
         with pytest.raises(JpegError, match="baseline"):
             decode_jpeg_gray(bytes(enc))
 
+    @staticmethod
+    def _insert_before(enc: bytes, marker: int, extra: bytes) -> bytes:
+        """Insert `extra` before the header segment with this marker,
+        found by walking the segment lengths (not by a byte search)."""
+        pos = 2
+        while enc[pos + 1] != marker:
+            pos += 2 + struct.unpack_from(">H", enc, pos + 2)[0]
+        return enc[:pos] + extra + enc[pos:]
+
+    def test_fill_bytes_and_standalone_markers(self):
+        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
+        # marker; TEM (0x01) and RSTn (0xD0-0xD7) carry no length
+        img = (np.arange(24 * 16).reshape(24, 16) % 251).astype(np.uint8)
+        enc = encode_jpeg_gray(img)
+        want = decode_jpeg_gray(enc)
+        # SOS first: the walk to DQT then never crosses inserted fill
+        filled = self._insert_before(enc, 0xDA, b"\xff\xff")
+        filled = self._insert_before(filled, 0xDB, b"\xff\xff")
+        standalone = self._insert_before(enc, 0xDA, b"\xff\x01\xff\xd3")
+        for stream in (filled, standalone):
+            np.testing.assert_array_equal(decode_jpeg_gray(stream), want)
+
+    def test_reject_restart_intervals(self):
+        enc = encode_jpeg_gray(np.zeros((16, 16), dtype=np.uint8))
+        dri = self._insert_before(enc, 0xDA, b"\xff\xdd\x00\x04\x00\x01")
+        with pytest.raises(JpegError, match="restart interval"):
+            decode_jpeg_gray(dri)
+
 
 class TestMediaDispatch:
     def test_jpeg_payload_routes_to_codec(self):

@@ -143,20 +143,48 @@ class TestRasterizeDistributed:
 
     def test_replace_without_order_col_burns_in_input_order(self, spark):
         # no order_col: features must still burn in input order, even
-        # when one partition crosses into Arrow as several batches
+        # when one partition crosses into Arrow as several batches, and
+        # when the input is a persisted shuffle whose cached plan AQE
+        # coalesced (the k-sorted rows burn k, so the last one is 11)
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4, dtype="int32")
         w = "POLYGON((0 0,0 8,8 8,8 0,0 0))"
-        shapes = spark.createDataFrame(
+        batched = spark.createDataFrame(
             [(w, [1.0]), (w, [1.0]), (w, [2.0])], "wkt string, burn_values array<double>"
         ).coalesce(1)
+        ks = [5, 11, 0, 7, 2, 9, 1, 10, 3, 8, 4, 6]
+        sorted_ = (
+            spark.createDataFrame([(k, w, [float(k)]) for k in ks],
+                                  "k int, wkt string, burn_values array<double>")
+            .orderBy("k").persist()
+        )
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         prev = spark.conf.get(key)
         spark.conf.set(key, "2")
         try:
-            out = materialize_full(rasterize(shapes, spec, order_col=None), spec)
+            assert sorted_.count() == 12
+            assert sorted_.rdd.getNumPartitions() < int(spark.conf.get("spark.sql.shuffle.partitions"))
+            for shapes, last in ((batched, 2), (sorted_, 11)):
+                out = materialize_full(rasterize(shapes, spec, order_col=None), spec)
+                assert (out == last).all()
         finally:
             spark.conf.set(key, prev)
-        assert (out == 2).all()
+            sorted_.unpersist()
+
+    def test_persisted_burn_partitions_follow_tiles(self, spark):
+        # a persisted 4-tile burn table is coalesced by AQE to at most
+        # one partition per tile, not left at spark.sql.shuffle.partitions
+        # (8 here), so every later stage over it runs that many tasks
+        spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4)
+        shapes = spark.createDataFrame(
+            [(i, "POLYGON((0 0,0 8,8 8,8 0,0 0))", [1.0]) for i in range(3)],
+            "fid bigint, wkt string, burn_values array<double>",
+        )
+        burn = rasterize(shapes, spec, merge_alg="add").persist()
+        try:
+            assert burn.count() == 4
+            assert burn.rdd.getNumPartitions() <= 4
+        finally:
+            burn.unpersist()
 
 
 class TestWarpKernels:
