@@ -73,6 +73,12 @@ def get_spark(
         # lost inference changes no result (the 190+-query DuckDB gate
         # pins that) and no pushdown this engine relies on.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # Whole-stage codegen caches compiled classes by source, 100 by
+        # default. The engine's plans need more than that: in perfbench's
+        # tile_raster loop the default cache recompiled 21 classes with
+        # Janino on every pass, 0 with this (4-CPU host). A class is a
+        # few KB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -709,6 +709,19 @@ class TestRasterizeCatalystExplode:
             assert out.sum() == 3  # only the POINT burned
             assert out[2, 5] == 3  # row 8-1-5.5 -> y=2; x=5
 
+    def test_sql_double_literals_are_exact(self, spark):
+        """The explode math is SQL text; its literals must read back as
+        the very doubles of the geotransform."""
+        import struct
+
+        from gdal_spark.operators.raster import _sql_double
+
+        vals = [0.0, -0.0, 0.1, -440720.0, 1200.0 / 512, 1e-300, 5e-324, 1.7976931348623157e308,
+                -2.5e-7, float("inf"), float("-inf"), float("nan"), np.float64(3751320.0)]
+        row = spark.sql("SELECT " + ", ".join(f"{_sql_double(v)} AS c{i}" for i, v in enumerate(vals))).first()
+        bits = lambda v: struct.pack("<d", float(v))  # noqa: E731 — tells -0.0 from 0.0, compares NaN
+        assert [bits(row[i]) for i in range(len(vals))] == [bits(v) for v in vals]
+
     def test_explode_plan_is_jvm_side(self, spark):
         spec = RasterSpec(8, 8, (0, 1, 0, 8, 0, -1), tile_size=4)
         shapes = self._shapes(spark)
