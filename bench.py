@@ -1,7 +1,7 @@
 """Benchmark entry point (driver-run per round).
 
 Runs the headline pipelines at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+/root/testdata/sf0.1) on get_spark's local master and prints ONE
 JSON line: {"metric", "value" (total sec), "unit": "sec",
 "queries": {name: sec}, "sf", ...extras}.
 
@@ -354,7 +354,7 @@ def main() -> None:
         "queries": times,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "bench_docs": n_docs,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": spark.sparkContext.defaultParallelism,
         "jvm_control_s": jvm_control,
     }
     if "spatial_join" in times:

@@ -6,18 +6,60 @@ so columnar batch execution is the semantically-endorsed path), AQE on
 for runtime skew handling and partition coalescing (of cached and
 persisted plans too, so their task count follows their data), shuffle
 partitions sized for local testing but overridable for cluster runs
-via env.
+via env. On a local master the Python workers fork from
+``gdal_spark.worker_daemon``, which skips the per-task re-read of
+``pyspark.zip``'s directory while the archive is unchanged (see
+``worker_conf``).
 """
 
 from __future__ import annotations
 
 import os
+import re
+import site
 
 from pyspark.sql import SparkSession
 
 # Arrow batch size matches the reference's default feature batch
 # (ogrlayerarrow.cpp:2079: 65,536 features per batch).
 ARROW_BATCH_SIZE = 65_536
+
+
+def worker_conf(master: str) -> dict[str, str]:
+    """The Python worker conf for ``master``.
+
+    Every Python task calls importlib.invalidate_caches(), which on
+    Python 3.11 re-reads pyspark.zip's directory once per zip importer:
+    81-159 ms a task (median 91) inside a live worker on a 4-CPU host,
+    0.09-0.12 ms with the gdal_spark.worker_daemon gate (CPython 3.13
+    makes the call lazy itself). Local masters only: their workers start from this
+    process's environment and already import gdal_spark to unpickle
+    every UDF, while on a cluster --py-files reach the path only per
+    task, after the daemon has had to be imported. Cluster users can
+    pass the same conf when gdal_spark is installed on the executors.
+    A local spark-submit --py-files run outside the checkout has the
+    cluster's problem (every Python task would fail to start), so the
+    daemon is also left out when a worker could not import it.
+    """
+    if re.fullmatch(r"local(\[.*\])?", master) and _importable_at_worker_start():
+        return {"spark.python.daemon.module": "gdal_spark.worker_daemon"}
+    return {}
+
+
+def _importable_at_worker_start() -> bool:
+    """Whether this gdal_spark is found by a Python worker started from
+    this process's working directory and PYTHONPATH, or installed. A
+    package imported from a zip counts as not found: spark-submit puts
+    --py-files zips on the driver's PYTHONPATH only."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+            *site.getsitepackages(), site.getusersitepackages()]
+    return os.path.isdir(root) and any(os.path.realpath(d) == root for d in dirs if d)
+
+
+def _default_master() -> str:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
 
 
 def get_spark(
@@ -30,8 +72,10 @@ def get_spark(
 
     On a real cluster this is driven by spark-submit; master/conf here
     only apply when no session exists yet (local dev / tests / bench).
+    Without a master it runs ``local[n]`` over the CPUs this process may
+    use, unless SPARK_GRAFT_MASTER or SPARK_GRAFT_CPUS say otherwise.
     """
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or _default_master()
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
@@ -80,7 +124,6 @@ def get_spark(
         # few KB of metaspace.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**worker_conf(master), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
