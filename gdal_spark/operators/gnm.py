@@ -19,7 +19,7 @@ both sides shuffle once on the cell key. Endpoint extraction is one
 Arrow-batched WKT parse over the line layer.
 
 The resulting connection rows feed the existing graph operators
-(operators/graph.py: connected_components / shortest_path /
+(operators/graph.py: connected_components / shortest_paths /
 k_shortest_paths == GNMGraph's Dijkstra/Yen/components) through
 `network_edges`, which expands direction + inv_cost into the
 (src, dst, weight) directed-edge contract — GNM_EDGE_DIR_BOTH becomes

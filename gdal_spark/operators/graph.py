@@ -1,14 +1,18 @@
 """Graph network operators (the GNM subsystem, gnm/gnmgraph.cpp):
-DijkstraShortestPath (:185,242), ConnectedComponents (:427) re-expressed
-as iterative DataFrame fixpoints (the GraphFrames/Pregel shape).
+DijkstraShortestPath (:185,242), KShortestPaths (:247) and
+ConnectedComponents (:427) re-expressed as iterative DataFrame
+fixpoints (the GraphFrames/Pregel shape).
 
-Both operators loop on the driver but every iteration is a pure
-distributed join + groupBy; the driver only checks a convergence
-count. Iteration counts are bounded by the graph diameter — at scale
-add `.localCheckpoint()` every few rounds to cut lineage (noted
-inline). Edges are (src, dst, weight) rows; graphs are treated as
-DIRECTED (pass both directions for undirected semantics, matching
-GNMGraph's explicit direction handling).
+Every round is a pure distributed join + groupBy, checkpointed with
+`.localCheckpoint()` to cut lineage; the driver only checks a
+convergence count. All shortest-path operators share one Bellman-Ford
+loop (`shortest_path_trees_batch`) whose round count the graph bounds:
+without a negative cycle no distance improves after |V| - 1 rounds, so
+the loop runs at most |V| + 1 rounds and raises RuntimeError naming a
+negative cycle if a distance still improves in the last one. Edges are
+(src, dst, weight) rows; graphs are treated as DIRECTED (pass both
+directions for undirected semantics, matching GNMGraph's explicit
+direction handling).
 """
 
 from __future__ import annotations
@@ -75,63 +79,16 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge within max_iterations={max_iterations} rounds")
 
 
-def shortest_path_tree(
-    edges: DataFrame,
-    source,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """(node, dist, parent) single-source shortest-path tree —
-    Bellman-Ford relaxation keeping the argmin predecessor (struct-min
-    per dst). parent is NULL at the source. Raises RuntimeError if a
-    distance still improves in round max_iterations."""
-    e = edges.select(src, dst, weight)
-    node_t = e.schema[src].dataType.simpleString()
-    dist = e.sparkSession.createDataFrame(
-        [(source, 0.0, None)], f"node {node_t}, dist double, parent {node_t}"
+# above this many edges Yen's spur trees stay distributed; at or below
+# it the edge table is collected once and every spur relaxes in memory
+LOCAL_EDGE_GUARD = 100_000
+
+
+def _negative_cycle(rounds: int) -> RuntimeError:
+    return RuntimeError(
+        f"a distance still improved in round {rounds} = |V| + 1: "
+        "the graph has a negative cycle reachable from the source"
     )
-    for _ in range(max_iterations):
-        relax = (
-            e.join(dist, e[src] == dist["node"])
-            .select(
-                F.col(dst).alias("node"),
-                F.struct(
-                    (F.col("dist") + F.col(weight).cast("double")).alias("d"),
-                    F.col(src).alias("p"),
-                ).alias("cand"),
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new = (
-            dist.join(relax, "node", "full")
-            .select(
-                "node",
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand.d") < F.col("dist"))),
-                    F.col("cand.d"),
-                ).otherwise(F.col("dist")).alias("dist"),
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand.d") < F.col("dist"))),
-                    F.col("cand.p"),
-                ).otherwise(F.col("parent")).alias("parent"),
-            )
-        )
-        new = new.localCheckpoint(eager=True)
-        improved = (
-            new.alias("n")
-            .join(dist.alias("o"), "node", "left")
-            .filter(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
-            .count()
-        )
-        dist = new
-        if improved == 0:
-            return dist
-    raise RuntimeError(f"shortest_path_tree did not converge within max_iterations={max_iterations} rounds")
 
 
 def shortest_path_trees_batch(
@@ -142,21 +99,25 @@ def shortest_path_trees_batch(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    max_iterations: int = 50,
 ) -> DataFrame:
-    """All of one Yen iteration's spur shortest-path trees in ONE
-    Bellman-Ford loop, keyed (sid, node) — O(diameter) jobs per
-    iteration instead of one loop per spur (round-3 verdict item #10).
+    """Shortest-path trees from several spurs in ONE Bellman-Ford loop,
+    keyed (sid, node), so one Yen iteration costs O(diameter) jobs
+    instead of one loop per spur.
 
     spurs: [(sid, start_node)]; banned_nodes: [(sid, node)];
     banned_edges: [(sid, u, v)]. The per-spur edge view is the edge
     table replicated per sid (broadcast of the tiny sid list) minus
     the broadcast ban lists — per-spur filters never touch the driver
-    loop. Returns (sid, node, dist, parent); raises RuntimeError if a
-    distance still improves in round max_iterations."""
+    loop. Each round relaxes every edge once and keeps the argmin
+    predecessor (struct-min of (dist, parent) per node); a node only
+    changes on a strict improvement. Returns (sid, node, dist,
+    parent), parent NULL at the spur. Runs at most |V| + 1 rounds
+    (|V| counted once over the edge table) and raises RuntimeError
+    naming a negative cycle if a distance still improves in the last."""
     spark = edges.sparkSession
     e = edges.select(src, dst, weight)
     node_t = e.schema[src].dataType.simpleString()
+    rounds = e.select(F.col(src).alias("n")).union(e.select(F.col(dst).alias("n"))).distinct().count() + 1
     sids = spark.createDataFrame([(int(s),) for s, _ in spurs], "sid int")
     ev = e.crossJoin(F.broadcast(sids))
     if banned_nodes:
@@ -178,7 +139,7 @@ def shortest_path_trees_batch(
         [(int(s), n, 0.0, None) for s, n in spurs],
         f"sid int, node {node_t}, dist double, parent {node_t}",
     )
-    for _ in range(max_iterations):
+    for _ in range(rounds):
         relax = (
             ev.join(dist, (ev["sid"] == dist["sid"]) & (ev[src] == dist["node"]))
             .select(
@@ -192,21 +153,14 @@ def shortest_path_trees_batch(
             .groupBy("sid", "node")
             .agg(F.min("cand").alias("cand"))
         )
+        better = F.col("cand").isNotNull() & (F.col("dist").isNull() | (F.col("cand.d") < F.col("dist")))
         new = (
             dist.join(relax, ["sid", "node"], "full")
             .select(
                 "sid",
                 "node",
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand.d") < F.col("dist"))),
-                    F.col("cand.d"),
-                ).otherwise(F.col("dist")).alias("dist"),
-                F.when(
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand.d") < F.col("dist"))),
-                    F.col("cand.p"),
-                ).otherwise(F.col("parent")).alias("parent"),
+                F.when(better, F.col("cand.d")).otherwise(F.col("dist")).alias("dist"),
+                F.when(better, F.col("cand.p")).otherwise(F.col("parent")).alias("parent"),
             )
         )
         new = new.localCheckpoint(eager=True)
@@ -219,7 +173,68 @@ def shortest_path_trees_batch(
         dist = new
         if improved == 0:
             return dist
-    raise RuntimeError(f"shortest_path_trees_batch did not converge within max_iterations={max_iterations} rounds")
+    raise _negative_cycle(rounds)
+
+
+def shortest_path_tree(
+    edges: DataFrame,
+    source,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str = "weight",
+) -> DataFrame:
+    """(node, dist, parent) single-source shortest-path tree: the batch
+    loop with one spur and no bans. parent is NULL at the source."""
+    return shortest_path_trees_batch(edges, [(0, source)], [], [], src, dst, weight).drop("sid")
+
+
+def shortest_paths(
+    edges: DataFrame,
+    source,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str = "weight",
+) -> DataFrame:
+    """(node, dist) single-source shortest path costs
+    (GNMGraph::DijkstraShortestPath, gnm/gnmgraph.cpp:185): the
+    shortest-path tree without its parents. Unreachable nodes are
+    absent from the result (the reference returns an empty path for
+    them)."""
+    return shortest_path_tree(edges, source, src, dst, weight).select("node", "dist")
+
+
+def _spt_local(elist: list, start, rounds: int) -> dict:
+    """{node: (dist, parent)} from `start` over a driver-side edge list:
+    the batch loop's rounds, with the same strict-improvement rule and
+    min-(dist, parent) tie-break, so both return the same tree."""
+    tree: dict = {start: (0.0, None)}
+    for _ in range(rounds):
+        best: dict = {}
+        for u, v, w in elist:
+            if u in tree:
+                cand = (tree[u][0] + w, u)
+                if v not in best or cand < best[v]:
+                    best[v] = cand
+        improved = False
+        for v, cand in best.items():
+            if v not in tree or cand[0] < tree[v][0]:
+                tree[v] = cand
+                improved = True
+        if not improved:
+            return tree
+    raise _negative_cycle(rounds)
+
+
+def _path(tree: dict, start, target) -> tuple[float, list, list] | None:
+    """(cost, path, cumulative dist per path node) from `start` to
+    `target` along the tree's parents; None if target is unreachable."""
+    if target not in tree:
+        return None
+    path = [target]
+    while path[-1] != start:
+        path.append(tree[path[-1]][1])
+    path.reverse()
+    return tree[target][0], path, [float(tree[n][0]) for n in path]
 
 
 def k_shortest_paths(
@@ -230,206 +245,78 @@ def k_shortest_paths(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    edge_count: int | None = None,
 ) -> list[tuple[float, list]]:
     """K loopless shortest paths (GNMGraph::KShortestPaths,
-    gnm/gnmgraph.cpp:247) via Yen's algorithm: all spur computations of
-    one iteration run as a SINGLE batched multi-source Bellman-Ford
-    (shortest_path_trees_batch) — O(diameter) jobs per Yen iteration
-    rather than one loop per spur (round-3 verdict item #10). The
-    driver holds only the k candidate paths (path reconstruction
-    collects the parent maps — bounded by the reachable node count,
-    matching the reference's in-memory graph contract). Root costs come
-    from the cumulative distances already collected with each path —
-    no per-root-edge Spark jobs in the loop (round-2 verdict item).
+    gnm/gnmgraph.cpp:247) via Yen's algorithm, as [(cost, path)].
 
-    Small graphs (≤ LOCAL_EDGE_GUARD edges) are collected once and the
-    whole Yen loop runs in-memory — the reference's own contract
-    (GNMGraph is an in-memory structure); the per-spur distributed
-    shortest-path-tree only pays off when the edge table genuinely
-    cannot fit on the driver. The in-memory relaxation replicates the
-    distributed rounds exactly (same strict-improvement rule, same
-    min-(dist, parent) tie-break), so both paths return identical
-    trees, and both raise RuntimeError when a distance still improves
-    in their last round (a negative cycle never stops improving)."""
+    Each Yen iteration asks for the shortest-path trees of all its
+    spurs at once, as {sid: {node: (dist, parent)}}; the first path is
+    the iteration with spur `source` and no bans. Root costs come from
+    the cumulative distances kept with each path, so the loop runs no
+    per-root-edge jobs.
 
-    LOCAL_EDGE_GUARD = 100_000
-    LOCAL_ROUND_CAP = 10_000
+    One `limit(LOCAL_EDGE_GUARD + 1).collect()` decides where the trees
+    come from. At or below the guard the edge table is already on the
+    driver — the reference's own contract (GNMGraph is an in-memory
+    structure) — and every spur relaxes in memory (`_spt_local`).
+    Above it the trees are one `shortest_path_trees_batch` collect per
+    iteration, and the edge table never reaches the driver. Both sides
+    run the same rounds under the same |V| + 1 bound, so they return
+    the same paths and raise the same RuntimeError on a negative
+    cycle."""
+    rows = edges.select(src, dst, weight).limit(LOCAL_EDGE_GUARD + 1).collect()
+    local = [(r[0], r[1], float(r[2])) for r in rows] if len(rows) <= LOCAL_EDGE_GUARD else None
+    if local is not None:
+        rounds = len({u for u, _, _ in local} | {v for _, v, _ in local}) + 1
 
-    local_edges: list | None = None
-    # the guard probe: an explicit caller hint skips the job entirely;
-    # otherwise a limit(GUARD+1).count() — CollectLimit short-circuits
-    # the scan at GUARD+1 rows instead of counting the whole table
-    if edge_count is None:
-        edge_count = edges.limit(LOCAL_EDGE_GUARD + 1).count()
-    if edge_count <= LOCAL_EDGE_GUARD:
-        local_edges = [
-            (r[0], r[1], float(r[2]))
-            for r in edges.select(src, dst, weight).collect()
-        ]
-
-    def _spt_local(elist, start) -> tuple[float, list, list] | None:
-        dist: dict = {start: (0.0, None)}
-        for _ in range(LOCAL_ROUND_CAP):
-            best: dict = {}
-            for (u, v, w) in elist:
-                if u in dist:
-                    cand = (dist[u][0] + w, u)
-                    if v not in best or cand < best[v]:
-                        best[v] = cand
-            improved = False
-            for v, (d, p) in best.items():
-                if v not in dist or d < dist[v][0]:
-                    dist[v] = (d, p)
-                    improved = True
-            if not improved:
-                break
-        else:
-            raise RuntimeError(
-                f"k_shortest_paths' in-memory relaxation did not converge within {LOCAL_ROUND_CAP} rounds"
+    def trees(spurs: list, banned_nodes: list, banned_edges: list) -> dict:
+        if local is None:
+            out: dict = {}
+            for r in shortest_path_trees_batch(
+                edges, spurs, banned_nodes, banned_edges, src, dst, weight
+            ).collect():
+                out.setdefault(int(r["sid"]), {})[r["node"]] = (r["dist"], r["parent"])
+            return out
+        bn, be = set(banned_nodes), set(banned_edges)
+        return {
+            sid: _spt_local(
+                [(u, v, w) for u, v, w in local
+                 if (sid, u) not in bn and (sid, v) not in bn and (sid, u, v) not in be],
+                start,
+                rounds,
             )
-        if target not in dist:
-            return None
-        path = [target]
-        while path[-1] != start:
-            path.append(dist[path[-1]][1])
-        path = list(reversed(path))
-        return dist[target][0], path, [float(dist[n][0]) for n in path]
+            for sid, start in spurs
+        }
 
-    def spt_path(edge_df_or_filter, start) -> tuple[float, list, list] | None:
-        """(cost, path, cumulative dist per path node) from `start`.
-        edge_df_or_filter: a DataFrame (distributed path) or a
-        (banned_nodes, banned_edges) pair (in-memory path)."""
-        if local_edges is not None:
-            banned_nodes, banned_edges = edge_df_or_filter
-            elist = [
-                (u, v, w) for (u, v, w) in local_edges
-                if u not in banned_nodes and v not in banned_nodes
-                and (u, v) not in banned_edges
-            ]
-            return _spt_local(elist, start)
-        tree = {r["node"]: (r["dist"], r["parent"]) for r in shortest_path_tree(
-            edge_df_or_filter, start, src=src, dst=dst, weight=weight
-        ).collect()}
-        if target not in tree:
-            return None
-        path = [target]
-        while path[-1] != start:
-            path.append(tree[path[-1]][1])
-        path = list(reversed(path))
-        return tree[target][0], path, [float(tree[n][0]) for n in path]
-
-    first = spt_path((set(), set()) if local_edges is not None else edges, source)
+    first = _path(trees([(0, source)], [], [])[0], source, target)
     if first is None:
         return []
     A: list[tuple[float, list, list]] = [first]
     B: list[tuple[float, list, list]] = []
     for _ in range(1, k):
         _, prev_path, prev_cum = A[-1]
-        # per-spur ban lists (loopless constraint + A-path edge removal)
-        spur_info = []
-        for i in range(len(prev_path) - 1):
-            root = prev_path[: i + 1]
-            banned_edges = {
-                (p[1][i], p[1][i + 1]) for p in A if len(p[1]) > i + 1 and p[1][: i + 1] == root
-            }
-            banned_nodes = set(root[:-1])
-            spur_info.append((i, prev_path[i], root, banned_nodes, banned_edges))
-
-        spur_results: dict = {}
-        if local_edges is not None:
-            for i, spur, _, banned_nodes, banned_edges in spur_info:
-                spur_results[i] = spt_path((banned_nodes, banned_edges), spur)
-        else:
-            # ONE batched Bellman-Ford for every spur of this iteration
-            trees = shortest_path_trees_batch(
-                edges,
-                spurs=[(i, spur) for i, spur, _, _, _ in spur_info],
-                banned_nodes=[(i, n) for i, _, _, bn, _ in spur_info for n in bn],
-                banned_edges=[(i, u, v) for i, _, _, _, be in spur_info for (u, v) in be],
-                src=src, dst=dst, weight=weight,
-            )
-            per_sid: dict = {}
-            for r in trees.collect():
-                per_sid.setdefault(int(r["sid"]), {})[r["node"]] = (r["dist"], r["parent"])
-            for i, spur, _, _, _ in spur_info:
-                tree = per_sid.get(i, {})
-                if target not in tree:
-                    spur_results[i] = None
-                    continue
-                path = [target]
-                while path[-1] != spur:
-                    path.append(tree[path[-1]][1])
-                path = list(reversed(path))
-                spur_results[i] = (
-                    tree[target][0], path, [float(tree[n][0]) for n in path]
-                )
-
-        for i, spur, root, _, _ in spur_info:
-            sp = spur_results[i]
+        # spur i starts at prev_path[i]; its root's nodes before it are
+        # banned (loopless), and so is the next edge of every accepted
+        # path sharing that root
+        spurs = [(i, prev_path[i]) for i in range(len(prev_path) - 1)]
+        banned_nodes = [(i, n) for i, _ in spurs for n in prev_path[:i]]
+        banned_edges = [
+            (i, p[i], p[i + 1]) for i, _ in spurs for _, p, _ in A
+            if len(p) > i + 1 and p[: i + 1] == prev_path[: i + 1]
+        ]
+        got = trees(spurs, banned_nodes, banned_edges)
+        for i, spur in spurs:
+            sp = _path(got.get(i, {}), spur, target)
             if sp is None:
                 continue
             # root cost = distance from source to the spur node along
             # the previous path (its stored cumulative distances)
             root_cost = prev_cum[i]
-            cand_path = root[:-1] + sp[1]
-            cand_cum = prev_cum[:i] + [root_cost + c for c in sp[2]]
-            if cand_path not in [p[1] for p in B] and cand_path not in [p[1] for p in A]:
-                B.append((root_cost + sp[0], cand_path, cand_cum))
+            cand_path = prev_path[:i] + sp[1]
+            if cand_path not in [p for _, p, _ in A + B]:
+                B.append((root_cost + sp[0], cand_path, prev_cum[:i] + [root_cost + c for c in sp[2]]))
         if not B:
             break
         B.sort(key=lambda t: (t[0], t[1]))
         A.append(B.pop(0))
     return [(c, p) for c, p, _ in A]
-
-
-def shortest_paths(
-    edges: DataFrame,
-    source,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """(node, dist) single-source shortest path costs
-    (GNMGraph::DijkstraShortestPath, gnm/gnmgraph.cpp:185).
-    Distributed Bellman-Ford relaxation: each round relaxes every edge
-    once (join on the frontier, groupBy(dst) min); terminates when no
-    distance improves, and raises RuntimeError if one still improves
-    in round max_iterations. Unreachable nodes are absent from the
-    result (the reference returns an empty path for them)."""
-    e = edges.select(src, dst, weight)
-    dist = e.sparkSession.createDataFrame(
-        [(source, 0.0)], f"node {e.schema[src].dataType.simpleString()}, dist double"
-    )
-    for it in range(max_iterations):
-        relax = (
-            e.join(dist, e[src] == dist["node"])
-            .select(
-                F.col(dst).alias("node"),
-                (F.col("dist") + F.col(weight).cast("double")).alias("cand"),
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new = (
-            dist.join(relax, "node", "full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("dist"), F.lit(float("inf"))),
-                    F.coalesce(F.col("cand"), F.lit(float("inf"))),
-                ).alias("dist"),
-            )
-        )
-        new = new.localCheckpoint(eager=True)
-        improved = (
-            new.alias("n")
-            .join(dist.alias("o"), "node", "left")
-            .filter(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
-            .count()
-        )
-        dist = new
-        if improved == 0:
-            return dist
-    raise RuntimeError(f"shortest_paths did not converge within max_iterations={max_iterations} rounds")

@@ -791,25 +791,30 @@ def rasterize(
     # -- two-phase ADD: partial float64 burns per (tile, salt), then one
     # merge per tile (sum is associative; the dtype round/clamp happens
     # exactly once, in the merge)
+    def _partial_row(band: int, tyy: int, txx: int, h: int, w: int,
+                     idx: np.ndarray, vals: np.ndarray) -> dict:
+        """One band's float64 partial of tile (tyy, txx) from its
+        nonzero flat indices and values: sparse COO (int32 flat indices
+        + float64 vals, 12 B a pixel) when that is under a quarter of
+        the dense h*w*8 B, so uniform tiles carry ~points x 12 B
+        through the merge shuffle and only a hot tile goes dense."""
+        if idx.size * 12 < h * w * 2:
+            return {"band": band, "ty": tyy, "tx": txx, "h": h, "w": w,
+                    "dtype": "coo", "payload": idx.astype(np.int32).tobytes() + vals.tobytes()}
+        a = np.zeros(h * w)
+        a[idx] = vals
+        return {"band": band, "ty": tyy, "tx": txx, "h": h, "w": w,
+                "dtype": "float64", "payload": a.tobytes()}
+
     def _burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tyy, txx = int(key[0]), int(key[1])
         h, w = spec.tile_shape(tyy, txx)
-        oy, ox = tyy * ts, txx * ts
-        arr = _accumulate(pdf, h, w, oy, ox, base=0.0)
+        arr = _accumulate(pdf, h, w, tyy * ts, txx * ts, base=0.0)
         rows = []
         for b in range(spec.nbands):
-            a = arr[b].astype(np.float64)
-            idx = np.flatnonzero(a.ravel())
-            if idx.size * 12 < a.nbytes // 4:
-                # sparse COO partial: int32 flat indices + float64 vals
-                # (uniform tiles carry ~points x 12B instead of h*w*8B
-                # through the merge shuffle; only the hot tile is dense)
-                payload = idx.astype(np.int32).tobytes() + a.ravel()[idx].tobytes()
-                rows.append({"band": b + 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-                             "dtype": "coo", "payload": payload})
-            else:
-                rows.append({"band": b + 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-                             "dtype": "float64", "payload": a.tobytes()})
+            a = arr[b].astype(np.float64).ravel()
+            idx = np.flatnonzero(a)
+            rows.append(_partial_row(b + 1, tyy, txx, h, w, idx, a[idx]))
         return pd.DataFrame(rows)
 
     def _merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -882,16 +887,7 @@ def rasterize(
             h, w = spec.tile_shape(t_y, t_x)
             lidx = (upy[m] - t_y * ts) * w + (upx[m] - t_x * ts)
             for b in range(spec.nbands):
-                vals = sums[b][m]
-                if m.size * 12 < h * w * 2:
-                    payload = lidx.astype(np.int32).tobytes() + vals.tobytes()
-                    rows.append({"band": b + 1, "ty": t_y, "tx": t_x, "h": h,
-                                 "w": w, "dtype": "coo", "payload": payload})
-                else:
-                    a = np.zeros(h * w)
-                    a[lidx] = vals
-                    rows.append({"band": b + 1, "ty": t_y, "tx": t_x, "h": h,
-                                 "w": w, "dtype": "float64", "payload": a.tobytes()})
+                rows.append(_partial_row(b + 1, t_y, t_x, h, w, lidx, sums[b][m]))
         if rows:
             yield pd.DataFrame(rows)
 
@@ -965,32 +961,17 @@ def checksum_tile_partial(tile: np.ndarray, oy: int, ox: int, full_width: int) -
 
 
 def checksum_df(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> int:
-    """Distributed checksum: per-tile partials (Arrow UDF) summed mod
-    65536 — a distributive aggregate, no full-raster materialization."""
-    ts = spec.tile_size
-    w = spec.width
-
-    @F.pandas_udf(LongType())
-    def _partial(ty: pd.Series, tx: pd.Series, h: pd.Series, wcol: pd.Series, dtype: pd.Series, payload: pd.Series) -> pd.Series:
-        out = []
-        for i in range(len(ty)):
-            t = np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).reshape(h.iloc[i], wcol.iloc[i])
-            out.append(checksum_tile_partial(t, int(ty.iloc[i]) * ts, int(tx.iloc[i]) * ts, w))
-        return pd.Series(out, dtype="int64")
-
-    row = (
-        tiles.filter(F.col("band") == band)
-        .select(_partial("ty", "tx", "h", "w", "dtype", "payload").alias("p"))
-        .agg(F.pmod(F.sum("p"), F.lit(65536)).alias("c"))
-        .first()
-    )
-    return int(row.c)
+    """Distributed checksum of one band, collected to the driver: the
+    checksum_col plan over that band's tiles."""
+    row = checksum_col(tiles.filter(F.col("band") == band), spec).first()
+    return int(row.checksum)
 
 
 def checksum_col(tiles: DataFrame, spec: RasterSpec) -> DataFrame:
-    """Distributed checksum as a DataFrame: (band, checksum). Same
-    partial-per-tile + sum-mod-65536 plan as checksum_df, but lazy —
-    usable inside queries()/bench without a driver-side collect."""
+    """Distributed checksum as a DataFrame: (band, checksum). Per-tile
+    partials (Arrow UDF) summed mod 65536 — a distributive aggregate,
+    no full-raster materialization; lazy, so usable inside
+    queries()/bench without a driver-side collect."""
     ts = spec.tile_size
     w = spec.width
 

@@ -1,18 +1,29 @@
 """Graph operator tests (gnm/gnmgraph.cpp semantics): connected
-components and single-source shortest paths vs hand-computed answers."""
+components, single-source shortest paths and Yen's k shortest paths
+vs hand-computed answers."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
 
+import gdal_spark.operators.graph as graph
 from gdal_spark.operators.graph import (
     connected_components,
+    k_shortest_paths,
     shortest_path_tree,
     shortest_path_trees_batch,
     shortest_paths,
     symmetrize,
 )
+
+
+# the standard Yen example graph: C->H has 3 loopless shortest paths
+CLASSIC = [
+    ("C", "D", 3.0), ("C", "E", 2.0), ("D", "F", 4.0),
+    ("E", "D", 1.0), ("E", "F", 2.0), ("E", "G", 3.0),
+    ("F", "G", 2.0), ("F", "H", 1.0), ("G", "H", 2.0),
+]
 
 
 class TestConnectedComponents:
@@ -39,19 +50,14 @@ class TestConnectedComponents:
 
 
 class TestShortestPaths:
-    def test_iteration_cap_raises(self, spark):
-        # a 60-node chain needs 59 relaxation rounds; stopping at 10
-        # must not return the 11 nodes reached so far as the answer
+    def test_long_chain_converges(self, spark):
+        # a 60-node chain needs 59 relaxation rounds, more than the old
+        # fixed cap of 50; the |V| + 1 bound lets it finish exactly
         edges = spark.createDataFrame(
             [Row(src=i, dst=i + 1, weight=1.0) for i in range(59)]
         )
-        for run in (
-            lambda: shortest_paths(edges, 0, max_iterations=10),
-            lambda: shortest_path_tree(edges, 0, max_iterations=10),
-            lambda: shortest_path_trees_batch(edges, [(0, 0)], [], [], max_iterations=10),
-        ):
-            with pytest.raises(RuntimeError, match="max_iterations=10"):
-                run()
+        out = {r.node: r.dist for r in shortest_paths(edges, 0).collect()}
+        assert out == {i: float(i) for i in range(60)}
 
     def test_weighted_diamond(self, spark):
         #     1 --2-- 3
@@ -94,23 +100,12 @@ class TestShortestPaths:
 
 class TestKShortestPaths:
     def test_yen_on_classic_graph(self, spark):
-        """The standard Yen example graph: C->H with 3 distinct
-        loopless shortest paths of costs 5, 7, 8."""
-        from gdal_spark.operators.graph import k_shortest_paths
-
-        E = [
-            ("C", "D", 3.0), ("C", "E", 2.0), ("D", "F", 4.0),
-            ("E", "D", 1.0), ("E", "F", 2.0), ("E", "G", 3.0),
-            ("F", "G", 2.0), ("F", "H", 1.0), ("G", "H", 2.0),
-        ]
-        edges = spark.createDataFrame(E, "src string, dst string, weight double")
+        edges = spark.createDataFrame(CLASSIC, "src string, dst string, weight double")
         out = k_shortest_paths(edges, "C", "H", 3)
         assert [round(c, 6) for c, _ in out] == [5.0, 7.0, 8.0]
         assert out[0][1] == ["C", "E", "F", "H"]
 
     def test_tree_parents_reconstruct(self, spark):
-        from gdal_spark.operators.graph import shortest_path_tree
-
         edges = spark.createDataFrame(
             [(0, 1, 1.0), (1, 2, 1.0), (0, 2, 5.0)], "src bigint, dst bigint, weight double"
         )
@@ -120,45 +115,35 @@ class TestKShortestPaths:
         assert t[0][1] is None
 
     def test_fewer_paths_than_k(self, spark):
-        from gdal_spark.operators.graph import k_shortest_paths
-
         edges = spark.createDataFrame([("a", "b", 1.0)], "src string, dst string, weight double")
         out = k_shortest_paths(edges, "a", "b", 5)
         assert len(out) == 1 and out[0] == (1.0, ["a", "b"])
 
-    def test_local_round_cap_raises(self, spark):
-        # 1->2->1 is a negative cycle, so the in-memory relaxation still
-        # improves in its last round; that must raise like the
-        # distributed path does, not return [] as if 3 were unreachable
-        from gdal_spark.operators.graph import k_shortest_paths
 
-        edges = spark.createDataFrame(
-            [(0, 1, 1.0), (1, 2, -3.0), (2, 1, 1.0), (5, 3, 1.0)],
-            "src bigint, dst bigint, weight double",
-        )
-        with pytest.raises(RuntimeError, match="10000 rounds"):
-            k_shortest_paths(edges, 0, 3, 2)
+def _spy_batch(monkeypatch) -> list:
+    """Record the spurs of every shortest_path_trees_batch call."""
+    calls: list = []
+    batch = graph.shortest_path_trees_batch
+
+    def spy(edges, spurs, *args, **kwargs):
+        calls.append(spurs)
+        return batch(edges, spurs, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "shortest_path_trees_batch", spy)
+    return calls
 
 
 class TestYenDistributedBatch:
-    def test_distributed_branch_matches_local(self, spark):
-        """Force the distributed Yen path (guard -> 0): the batched
-        multi-spur Bellman-Ford (shortest_path_trees_batch) must return
-        the same k paths as the in-memory loop."""
-        import gdal_spark.operators.graph as g
+    """Both sides of k_shortest_paths' LOCAL_EDGE_GUARD: the in-memory
+    relaxation at or below it, the batched Bellman-Ford above it."""
 
-        rows = [
-            ("C", "D", 3.0), ("C", "E", 2.0), ("D", "F", 4.0),
-            ("E", "D", 1.0), ("E", "F", 2.0), ("E", "G", 3.0),
-            ("F", "G", 2.0), ("F", "H", 1.0), ("G", "H", 2.0),
-        ]
-        edges = spark.createDataFrame(rows, "src string, dst string, weight double")
-        want = g.k_shortest_paths(edges, "C", "H", 3)
-        # drive the batch helper directly with the first Yen
-        # iteration's spur set and check it reproduces the local spurs
-        first = want[0]
+    def test_distributed_branch_matches_local(self, spark):
+        """The batched multi-spur Bellman-Ford reproduces the first Yen
+        iteration's in-memory spurs."""
+        edges = spark.createDataFrame(CLASSIC, "src string, dst string, weight double")
+        first = k_shortest_paths(edges, "C", "H", 3)[0]
         assert first[1] == ["C", "E", "F", "H"]
-        trees = g.shortest_path_trees_batch(
+        trees = shortest_path_trees_batch(
             edges,
             spurs=[(0, "C"), (1, "E"), (2, "F")],
             banned_nodes=[(1, "C"), (2, "C"), (2, "E")],
@@ -174,31 +159,43 @@ class TestYenDistributedBatch:
         # spur 2: F with F->H banned, C/E removed: F-G-H = 4
         assert per[2]["H"][0] == 4.0
 
-    def test_full_distributed_yen(self, spark):
-        """End-to-end distributed Yen (guard forced to 0) equals the
-        in-memory result."""
-        import gdal_spark.operators.graph as g
+    def test_full_distributed_yen(self, spark, monkeypatch):
+        edges = spark.createDataFrame(CLASSIC, "src string, dst string, weight double")
+        calls = _spy_batch(monkeypatch)
+        want = k_shortest_paths(edges, "C", "H", 3)
+        assert calls == []
+        monkeypatch.setattr(graph, "LOCAL_EDGE_GUARD", 0)
+        out = k_shortest_paths(edges, "C", "H", 3)
+        assert calls[0] == [(0, "C")] and len(calls) == 3
+        assert out == want
+        assert [c for c, _ in out] == [5.0, 7.0, 8.0]
 
-        rows = [
-            ("C", "D", 3.0), ("C", "E", 2.0), ("D", "F", 4.0),
-            ("E", "D", 1.0), ("E", "F", 2.0), ("E", "G", 3.0),
-            ("F", "G", 2.0), ("F", "H", 1.0), ("G", "H", 2.0),
-        ]
-        edges = spark.createDataFrame(rows, "src string, dst string, weight double")
-        want = g.k_shortest_paths(edges, "C", "H", 3)
+    def test_long_chain_both_sides(self, spark, monkeypatch):
+        # 0->1->...->60 plus a bypass 0->60: the first tree needs 60
+        # rounds, more than the old fixed distributed cap of 50
+        rows = [(i, i + 1, 1.0) for i in range(60)] + [(0, 60, 100.0)]
+        edges = spark.createDataFrame(rows, "src bigint, dst bigint, weight double")
+        want = [(60.0, list(range(61))), (100.0, [0, 60])]
+        calls = _spy_batch(monkeypatch)
+        assert k_shortest_paths(edges, 0, 60, 2) == want
+        monkeypatch.setattr(graph, "LOCAL_EDGE_GUARD", 0)
+        assert k_shortest_paths(edges, 0, 60, 2) == want
+        assert len(calls) == 2
 
-        # force the distributed branch: wrap edges so the guard's
-        # count() sees a huge table while every real operation passes
-        # through to the underlying DataFrame
-        class BigCount:
-            def __init__(self, df):
-                self._df = df
-
-            def count(self):
-                return 10**9
-
-            def __getattr__(self, item):
-                return getattr(self._df, item)
-
-        out = g.k_shortest_paths(BigCount(edges), "C", "H", 3)
-        assert [(c, p) for c, p in out] == [(c, p) for c, p in want]
+    def test_negative_cycle_raises_on_both_sides(self, spark, monkeypatch):
+        # 1->2->1 is a negative cycle, so distances still improve in
+        # round |V| + 1; neither side may return [] as if 3 were
+        # unreachable
+        edges = spark.createDataFrame(
+            [(0, 1, 1.0), (1, 2, -3.0), (2, 1, 1.0), (5, 3, 1.0)],
+            "src bigint, dst bigint, weight double",
+        )
+        calls = _spy_batch(monkeypatch)
+        with pytest.raises(RuntimeError, match="negative cycle") as local_err:
+            k_shortest_paths(edges, 0, 3, 2)
+        assert calls == []
+        monkeypatch.setattr(graph, "LOCAL_EDGE_GUARD", 0)
+        with pytest.raises(RuntimeError, match="negative cycle") as dist_err:
+            k_shortest_paths(edges, 0, 3, 2)
+        assert len(calls) == 1
+        assert str(dist_err.value) == str(local_err.value)
