@@ -924,12 +924,19 @@ def rasterize(
     return partial.groupBy("band", "ty", "tx").applyInPandas(_merge_partials, TILE_SCHEMA)
 
 
+def init_word(spec: RasterSpec) -> np.generic:
+    """The value an absent tile's pixels hold: ``spec.init`` as a
+    ``spec.dtype`` word, GDALCopyWord-rounded for a nonzero integer
+    init."""
+    if spec.init != 0 and np.issubdtype(np.dtype(spec.dtype), np.integer):
+        return copy_word(np.full((1,), spec.init), spec.dtype)[0]
+    return np.full((), spec.init, dtype=spec.dtype)[()]
+
+
 def materialize_full(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> np.ndarray:
     """Collect tile rows into one (H, W) array (tests / small rasters).
     Tiles absent from the DF are init-valued."""
-    arr = np.full((spec.height, spec.width), spec.init, dtype=spec.dtype)
-    if spec.init != 0 and np.issubdtype(np.dtype(spec.dtype), np.integer):
-        arr[:] = copy_word(np.full((1,), spec.init), spec.dtype)[0]
+    arr = np.full((spec.height, spec.width), init_word(spec), dtype=spec.dtype)
     for r in tiles.filter(F.col("band") == band).collect():
         t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
         oy, ox = r.ty * spec.tile_size, r.tx * spec.tile_size
@@ -960,33 +967,52 @@ def checksum_tile_partial(tile: np.ndarray, oy: int, ox: int, full_width: int) -
     return int(np.fmod(tile.astype(np.int64).ravel(), CHECKSUM_PRIMES[idx]).sum() % 65536)
 
 
+def init_checksum(spec: RasterSpec) -> int:
+    """Checksum of a band with no tiles, in closed form: the flat pixel
+    index takes each class mod 11 N // 11 times, or once more for the
+    first N % 11 classes (N = H * W)."""
+    n = spec.height * spec.width
+    counts = np.full(11, n // 11, dtype=np.int64)
+    counts[: n % 11] += 1
+    v = np.asarray(init_word(spec)).astype(np.int64)
+    return int((counts * np.fmod(v, CHECKSUM_PRIMES)).sum() % 65536)
+
+
 def checksum_df(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> int:
     """Distributed checksum of one band, collected to the driver: the
-    checksum_col plan over that band's tiles."""
+    checksum_col plan over that band's tiles, or the all-init checksum
+    when the band has none."""
     row = checksum_col(tiles.filter(F.col("band") == band), spec).first()
-    return int(row.checksum)
+    return init_checksum(spec) if row is None else int(row.checksum)
 
 
 def checksum_col(tiles: DataFrame, spec: RasterSpec) -> DataFrame:
-    """Distributed checksum as a DataFrame: (band, checksum). Per-tile
-    partials (Arrow UDF) summed mod 65536 — a distributive aggregate,
-    no full-raster materialization; lazy, so usable inside
+    """Distributed checksum as a DataFrame: (band, checksum), one row
+    per band that has tiles. Absent tiles are init-valued: the all-init
+    checksum plus, per present tile, its partial minus an init tile's
+    (Arrow UDF), summed mod 65536 — a distributive aggregate, no
+    full-raster materialization; lazy, so usable inside
     queries()/bench without a driver-side collect."""
     ts = spec.tile_size
     w = spec.width
+    init = init_word(spec)
 
     @F.pandas_udf(LongType())
     def _partial(ty: pd.Series, tx: pd.Series, h: pd.Series, wcol: pd.Series, dtype: pd.Series, payload: pd.Series) -> pd.Series:
         out = []
         for i in range(len(ty)):
             t = np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).reshape(h.iloc[i], wcol.iloc[i])
-            out.append(checksum_tile_partial(t, int(ty.iloc[i]) * ts, int(tx.iloc[i]) * ts, w))
+            oy, ox = int(ty.iloc[i]) * ts, int(tx.iloc[i]) * ts
+            p = checksum_tile_partial(t, oy, ox, w)
+            if init:
+                p -= checksum_tile_partial(np.full(t.shape, init), oy, ox, w)
+            out.append(p)
         return pd.Series(out, dtype="int64")
 
     return (
         tiles.select("band", _partial("ty", "tx", "h", "w", "dtype", "payload").alias("p"))
         .groupBy("band")
-        .agg(F.pmod(F.sum("p"), F.lit(65536)).alias("checksum"))
+        .agg(F.pmod(F.sum("p") + F.lit(init_checksum(spec)), F.lit(65536)).alias("checksum"))
     )
 
 

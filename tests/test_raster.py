@@ -11,6 +11,7 @@ from gdal_spark.geom.proj import EPSG_26711, EPSG_32611, Pipeline
 from gdal_spark.operators.raster import (
     RasterSpec,
     checksum_array,
+    checksum_col,
     checksum_df,
     checksum_tile_partial,
     copy_word,
@@ -108,6 +109,28 @@ class TestRasterizeDistributed:
         for b in (1, 2, 3):
             assert (materialize_full(tiles, F4_SPEC, band=b) == local[b - 1]).all()
         assert checksum_df(tiles, F4_SPEC, band=2) == 6443
+
+    def test_checksum_counts_absent_tiles_as_init(self, spark):
+        """A burn emits only the tiles it touches; the others of a
+        300x300 raster are init-valued, as materialize_full writes them.
+        An all-init 256x256 tile's partial is 0 mod 65536, a 100x100
+        one's is not, so both tile sizes are checked."""
+        shapes = spark.createDataFrame([(0, "POINT (1.5 299.5)", [7.0])], "fid bigint, wkt string, burn_values array<double>")
+        for tile_size in (256, 100):
+            spec = RasterSpec(300, 300, (0, 1, 0, 300, 0, -1), dtype="uint8", init=5, tile_size=tile_size)
+            tiles = rasterize(shapes, spec).cache()
+            assert tiles.count() == 1
+            assert checksum_array(materialize_full(tiles, spec)) == 56786
+            assert checksum_df(tiles, spec) == 56786
+            assert checksum_col(tiles, spec).collect()[0].checksum == 56786
+
+    def test_checksum_of_an_empty_band_is_all_init(self, spark):
+        from gdal_spark.operators.raster import TILE_SCHEMA
+
+        empty = spark.createDataFrame([], TILE_SCHEMA)
+        for spec in (F4_SPEC, RasterSpec(300, 300, (0, 1, 0, 300, 0, -1), dtype="int16", init=-7.6),
+                     RasterSpec(30, 20, (0, 1, 0, 20, 0, -1), dtype="float32", init=300.9)):
+            assert checksum_df(empty, spec) == checksum_array(materialize_full(empty, spec))
 
     def test_env_cols_point_fast_path_bit_identical(self, spark):
         # ADD-mode env_cols path (map-side point partials from the

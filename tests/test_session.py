@@ -2,15 +2,20 @@
 
 from __future__ import annotations
 
+import json
 import os
+import stat
+import subprocess
+import sys
 import uuid
 import zipfile
 import zipimport
 
 import pandas as pd
+import pytest
 
 from gdal_spark import worker_daemon
-from gdal_spark.session import _default_master, worker_conf
+from gdal_spark.session import _default_master, _private_socket_dir, worker_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
 
@@ -124,7 +129,7 @@ def test_no_worker_daemon_when_workers_cannot_import_it(monkeypatch, tmp_path):
     gdal_spark on the path only per task: the daemon would fail to start."""
     monkeypatch.chdir(tmp_path)
     monkeypatch.delenv("PYTHONPATH", raising=False)
-    assert worker_conf("local[4]") == {}
+    assert "spark.python.daemon.module" not in worker_conf("local[4]")
     monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), REPO]))
     assert worker_conf("local[4]")["spark.python.daemon.module"] == "gdal_spark.worker_daemon"
 
@@ -133,3 +138,74 @@ def test_default_master_uses_the_cpus_this_process_may_use(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     assert _default_master() == f"local[{len(os.sched_getaffinity(0))}]"
+
+
+def test_only_local_masters_get_unix_sockets():
+    conf = worker_conf("local[4]")
+    assert conf["spark.python.unix.domain.socket.enabled"] == "true"
+    sock_dir = conf["spark.python.unix.domain.socket.dir"]
+    assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+    assert len(os.fsencode(os.path.join(sock_dir, f".{uuid.uuid4()}.sock"))) <= 107
+    assert worker_conf("local[2]")["spark.python.unix.domain.socket.dir"] == sock_dir
+    assert worker_conf("spark://h:7077") == {}
+
+
+def test_workers_use_unix_sockets(spark):
+    """The JVM tells its workers with PYTHON_UNIX_DOMAIN_ENABLED, which
+    it sets to "True"; PySpark compares it lowercased."""
+
+    def transport(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]})
+
+    rows = spark.range(0, 4, 1, 4).mapInPandas(transport, "uds string").collect()
+    assert {r.uds.lower() for r in rows} == {"true"}
+
+
+def test_socket_dir_skips_a_base_too_long_for_a_socket_path(tmp_path):
+    long_base = tmp_path / ("d" * 60)
+    long_base.mkdir()
+    assert _private_socket_dir([str(long_base)]) is None
+    sock_dir = _private_socket_dir([str(long_base), "/tmp"])
+    try:
+        assert os.path.dirname(sock_dir) == "/tmp"
+    finally:
+        os.rmdir(sock_dir)
+
+
+_RUN_A_TASK = """
+import json, sys
+from gdal_spark import session
+if sys.argv[1] == "tcp":
+    session._socket_dir = lambda: None
+spark = session.get_spark("uds", master="local[2]", extra_conf={
+    "spark.driver.memory": "512m",
+    "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=" + sys.argv[2]})
+conf = spark.sparkContext.getConf()
+n = spark.range(0, 2, 1, 2).mapInPandas(lambda it: it, "id long").count()
+print(json.dumps({"n": n, "uds": conf.get("spark.python.unix.domain.socket.enabled", "false"),
+                  "dir": conf.get("spark.python.unix.domain.socket.dir", None)}))
+"""
+
+
+@pytest.mark.parametrize("transport", ["uds", "tcp"])
+def test_long_temp_dir_still_runs_python_tasks(tmp_path, transport):
+    """A TMPDIR and java.io.tmpdir too long for a socket path (perfbench
+    puts both inside its checkout) must not stop the session: it puts
+    its sockets under /tmp, or stays on TCP when it cannot, and leaves
+    no socket directory behind."""
+    long_tmp = tmp_path / ("t" * 40) / ("u" * 40)
+    long_tmp.mkdir(parents=True)
+    env = {**os.environ, "TMPDIR": str(long_tmp),
+           "PYTHONPATH": os.pathsep.join([REPO, os.environ.get("PYTHONPATH", "")])}
+    out = subprocess.run([sys.executable, "-c", _RUN_A_TASK, transport, str(long_tmp)],
+                         env=env, cwd=REPO, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["n"] == 2
+    if transport == "tcp":
+        assert res["uds"] == "false" and res["dir"] is None
+    else:
+        assert res["uds"] == "true" and os.path.dirname(res["dir"]) == "/tmp"
+        assert not os.path.exists(res["dir"])
