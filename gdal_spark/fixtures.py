@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec
 
 BYTE20 = np.array(
@@ -53,7 +54,7 @@ def byte20_tiles(spark, spec: RasterSpec = BYTE20_SPEC):
         for tx in range(spec.ntiles_x):
             h, w = spec.tile_shape(ty, tx)
             oy, ox = ty * spec.tile_size, tx * spec.tile_size
-            rows.append((1, ty, tx, h, w, "uint8", bytes(BYTE20[oy : oy + h, ox : ox + w].tobytes())))
+            rows.append((1, ty, tx, h, w, "uint8", tilecodec.encode(BYTE20[oy : oy + h, ox : ox + w])))
     return spark.createDataFrame(
         rows, "band int, ty int, tx int, h int, w int, dtype string, payload binary"
     )

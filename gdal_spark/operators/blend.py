@@ -260,6 +260,7 @@ def blend_tiles(color_tiles, overlay_tiles, mode, opacity_pct=100):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from gdal_spark.operators import tilecodec
     from gdal_spark.operators.raster import TILE_SCHEMA
 
     c = color_tiles.select("band", "ty", "tx", "h", "w", "dtype", "payload").withColumn(
@@ -274,10 +275,8 @@ def blend_tiles(color_tiles, overlay_tiles, mode, opacity_pct=100):
         h = int(pdf["h"].iloc[0])
         w = int(pdf["w"].iloc[0])
         sides = {0: {}, 1: {}}
-        for row in pdf.itertuples(index=False):
-            sides[int(row.side)][int(row.band)] = np.frombuffer(
-                row.payload, dtype=np.uint8
-            ).reshape(int(row.h), int(row.w))
+        for side, b, t in zip(pdf["side"].tolist(), pdf["band"].tolist(), tilecodec.decode_batch(pdf)):
+            sides[side][b] = t
         color = [sides[0][b] for b in sorted(sides[0])]
         overlay = [sides[1][b] for b in sorted(sides[1])]
         # sparse tile tables may cover a (ty, tx) on one side only: a
@@ -285,29 +284,10 @@ def blend_tiles(color_tiles, overlay_tiles, mode, opacity_pct=100):
         # verbatim); a missing color side is an init-black canvas under
         # the overlay — never a crash
         if not overlay:
-            return pd.DataFrame(
-                [
-                    {"band": b, "ty": ty, "tx": tx, "h": h, "w": w,
-                     "dtype": "uint8", "payload": sides[0][b].tobytes()}
-                    for b in sorted(sides[0])
-                ]
-            )
+            return pd.DataFrame([tilecodec.tile_row(b, ty, tx, sides[0][b], "uint8") for b in sorted(sides[0])])
         if not color:
             color = [np.zeros((h, w), dtype=np.uint8) for _ in overlay[:3]]
         out = blend_arrays(mode, color, overlay, opacity_pct)
-        return pd.DataFrame(
-            [
-                {
-                    "band": bi + 1,
-                    "ty": ty,
-                    "tx": tx,
-                    "h": h,
-                    "w": w,
-                    "dtype": "uint8",
-                    "payload": arr.tobytes(),
-                }
-                for bi, arr in enumerate(out)
-            ]
-        )
+        return pd.DataFrame([tilecodec.tile_row(bi + 1, ty, tx, arr, "uint8") for bi, arr in enumerate(out)])
 
     return c.unionByName(o).groupBy("ty", "tx").applyInPandas(_blend, TILE_SCHEMA)

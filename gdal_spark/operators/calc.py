@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec, copy_word
 
 # ---------------------------------------------------------------------------
@@ -168,9 +169,8 @@ def reclassify(
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for dtype_s, p, h, w in zip(pdf["dtype"], pdf["payload"], pdf["h"], pdf["w"]):
-                a = np.frombuffer(p, dtype=dtype_s).reshape(h, w)
-                payloads.append(copy_word(reclassify_array(a, parsed), dt).tobytes())
+            for a in tilecodec.decode_batch(pdf):
+                payloads.append(tilecodec.encode(copy_word(reclassify_array(a, parsed), dt)))
             out = pdf.copy()
             out["payload"] = payloads
             out["dtype"] = dt
@@ -244,13 +244,13 @@ def raster_calc(
             payloads = []
             for i in range(len(pdf)):
                 h, w = int(pdf["h"].iloc[i]), int(pdf["w"].iloc[i])
+                key = tuple(int(pdf[k].iloc[i]) for k in ("band", "ty", "tx"))
                 arrays = {
-                    n: np.frombuffer(
-                        pdf[f"payload_{n}"].iloc[i], dtype=pdf[f"dtype_{n}"].iloc[i]
-                    ).reshape(h, w).astype(np.float64)
+                    n: tilecodec.decode(pdf[f"payload_{n}"].iloc[i], pdf[f"dtype_{n}"].iloc[i], (h, w), key)
+                    .astype(np.float64)
                     for n in names
                 }
-                payloads.append(copy_word(run(arrays), out_dtype).tobytes())
+                payloads.append(tilecodec.encode(copy_word(run(arrays), out_dtype)))
             out = pdf[["band", "ty", "tx", "h", "w"]].copy()
             out["dtype"] = out_dtype
             out["payload"] = payloads

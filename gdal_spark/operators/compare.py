@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, checksum_col
 
 
@@ -51,11 +52,11 @@ def raster_compare(golden: DataFrame, new: DataFrame, spec: RasterSpec) -> DataF
                 w = min(ts, width - tx * ts)
                 gp, np_ = pdf["gp"].iloc[i], pdf["np"].iloc[i]
                 if gp is not None:
-                    ga = np.frombuffer(gp, dtype=pdf["gdt"].iloc[i]).astype(np.float64)
+                    ga = tilecodec.decode(gp, pdf["gdt"].iloc[i], (h, w), (pdf["band"].iloc[i], ty, tx)).ravel().astype(np.float64)
                 else:
                     ga = np.full(h * w, init)
                 if np_ is not None:
-                    na = np.frombuffer(np_, dtype=pdf["ndt"].iloc[i]).astype(np.float64)
+                    na = tilecodec.decode(np_, pdf["ndt"].iloc[i], (h, w), (pdf["band"].iloc[i], ty, tx)).ravel().astype(np.float64)
                 else:
                     na = np.full(h * w, init)
                 d = ga - na

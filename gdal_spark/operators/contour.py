@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.dissolve import merge_lines
 from gdal_spark.operators.focal import _halo_explode
 from gdal_spark.operators.raster import RasterSpec
@@ -58,7 +59,7 @@ def _ext_grid(pdf: pd.DataFrame, tyy: int, txx: int, spec: RasterSpec):
     if len(center):
         c = center.iloc[0]
         h, w = int(c["h"]), int(c["w"])
-        t = np.frombuffer(c["payload"], dtype=c["dtype"]).reshape(h, w)
+        t = tilecodec.decode_row(c)
     else:
         h, w = spec.tile_shape(tyy, txx)
         t = np.full((h, w), init)
@@ -67,11 +68,11 @@ def _ext_grid(pdf: pd.DataFrame, tyy: int, txx: int, spec: RasterSpec):
     seen = set()
     for r in pdf.itertuples(index=False):
         if (r.src_dy, r.src_dx) == (1, 0):
-            ext[h, : r.w] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)[0]
+            ext[h, : r.w] = tilecodec.decode_row(r)[0]
         elif (r.src_dy, r.src_dx) == (0, 1):
-            ext[: r.h, w] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)[:, 0]
+            ext[: r.h, w] = tilecodec.decode_row(r)[:, 0]
         elif (r.src_dy, r.src_dx) == (1, 1):
-            ext[h, w] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)[0, 0]
+            ext[h, w] = tilecodec.decode_row(r)[0, 0]
         else:
             continue
         seen.add((r.src_dy, r.src_dx))
@@ -319,15 +320,14 @@ def contour(
         stats = tiles.filter(F.col("band") == band)
 
         @F.pandas_udf("min double, max double")
-        def _rng(dtype: pd.Series, payload: pd.Series) -> pd.DataFrame:
+        def _rng(tile: pd.DataFrame) -> pd.DataFrame:
             mn, mx = [], []
-            for dt, p in zip(dtype, payload):
-                t = np.frombuffer(p, dtype=dt)
+            for t in tilecodec.decode_batch(tile):
                 mn.append(float(t.min()))
                 mx.append(float(t.max()))
             return pd.DataFrame({"min": mn, "max": mx})
 
-        row = stats.select(_rng("dtype", "payload").alias("r")).agg(
+        row = stats.select(_rng(F.struct(*tilecodec.TILE_COLUMNS)).alias("r")).agg(
             _F.min("r.min").alias("mn"), _F.max("r.max").alias("mx"),
             _F.count(_F.lit(1)).alias("n"),
         ).first()

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec, copy_word
 
 _EPSILON = 1e-5  # gdalalg_raster_create.cpp:209
@@ -225,9 +226,7 @@ def raster_create(
                 th, tw = spec.tile_shape(int(ty), int(tx))
                 key = (int(band), th, tw)
                 if key not in cache:
-                    cache[key] = np.full(
-                        (th, tw), vals[int(band) - 1], dtype=np.dtype(dt)
-                    ).tobytes()
+                    cache[key] = tilecodec.encode(np.full((th, tw), vals[int(band) - 1], dtype=dt))
                 hs.append(th)
                 ws.append(tw)
                 payloads.append(cache[key])

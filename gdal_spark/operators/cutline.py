@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import _all_touched_line_mask, _polygon_mask
 
 Rings = list  # list[np.ndarray (k,2)] — ring 0 exterior, rest holes
@@ -160,10 +161,7 @@ def cutline_mask_tiles(spark, spec, cutline, all_touched: bool = False):
                 m = cutline_validity(
                     parts, txx * ts, tyy * ts, h, w, 0.0, all_touched
                 )
-                rows.append(
-                    {"band": 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-                     "dtype": "uint8", "payload": m.astype(np.uint8).tobytes()}
-                )
+                rows.append(tilecodec.tile_row(1, tyy, txx, m, "uint8"))
             yield pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     return keys.mapInPandas(_mask, TILE_SCHEMA)

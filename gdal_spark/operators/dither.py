@@ -42,6 +42,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, materialize_full
 
 
@@ -129,9 +130,7 @@ def color_histogram(
     shift = 8 - bits
 
     def _explode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        chans = {}
-        for r in pdf.itertuples(index=False):
-            chans[int(r.band)] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+        chans = dict(zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)))
         if not all(b in chans for b in bands):
             return pd.DataFrame({"r": pd.array([], dtype="int64"), "g": pd.array([], dtype="int64"), "b": pd.array([], dtype="int64")})
         return pd.DataFrame(
@@ -242,15 +241,9 @@ def pct_map_tiles(
 
     def _map(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ty, tx = int(key[0]), int(key[1])
-        chans = {}
-        for rr in pdf.itertuples(index=False):
-            chans[int(rr.band)] = np.frombuffer(rr.payload, dtype=rr.dtype).reshape(rr.h, rr.w)
+        chans = dict(zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)))
         r, g, b = (chans[x] for x in bands)
-        idx = nearest_color_indices(r, g, b, palette)
-        return pd.DataFrame(
-            [{"band": 1, "ty": ty, "tx": tx, "h": idx.shape[0], "w": idx.shape[1],
-              "dtype": "uint8", "payload": idx.tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(1, ty, tx, nearest_color_indices(r, g, b, palette))])
 
     return rgb_tiles.groupBy("ty", "tx").applyInPandas(_map, TILE_SCHEMA)
 
@@ -269,16 +262,7 @@ def dither_tiles(
     g = materialize_full(rgb_tiles, spec, band=bands[1])
     b = materialize_full(rgb_tiles, spec, band=bands[2])
     idx = dither_rgb_to_pct(r.astype(np.int64), g.astype(np.int64), b.astype(np.int64), palette)
-    ts = spec.tile_size
-    rows = []
-    for ty in range(spec.ntiles_y):
-        for tx in range(spec.ntiles_x):
-            t = idx[ty * ts : (ty + 1) * ts, tx * ts : (tx + 1) * ts]
-            rows.append(
-                {"band": 1, "ty": ty, "tx": tx, "h": t.shape[0], "w": t.shape[1],
-                 "dtype": "uint8", "payload": t.tobytes()}
-            )
-    return spark.createDataFrame(pd.DataFrame(rows), TILE_SCHEMA)
+    return spark.createDataFrame(pd.DataFrame(tilecodec.cut(idx, spec.tile_size, 1)), TILE_SCHEMA)
 
 
 def pct2rgb(
@@ -313,12 +297,9 @@ def pct2rgb(
             for r in pdf.itertuples(index=False):
                 if int(r.band) != band:
                     continue
-                idx = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.int64)
+                idx = tilecodec.decode_row(r).astype(np.int64)
                 for b in range(out_bands):
-                    v = np.take(lookup[b], idx).astype(np.uint8)
-                    rows.append({"band": b + 1, "ty": int(r.ty), "tx": int(r.tx),
-                                 "h": int(r.h), "w": int(r.w), "dtype": "uint8",
-                                 "payload": v.tobytes()})
+                    rows.append(tilecodec.tile_row(b + 1, int(r.ty), int(r.tx), np.take(lookup[b], idx), "uint8"))
             yield pd.DataFrame(rows)
 
     return tiles.mapInPandas(_expand, TILE_SCHEMA)

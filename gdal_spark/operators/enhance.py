@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import (
     TILE_SCHEMA,
     RasterSpec,
@@ -95,22 +96,14 @@ def equalization_luts(
 
 
 def _band_min_max(tiles: DataFrame) -> DataFrame:
-    @F.pandas_udf("double")
-    def _mn(dtype: pd.Series, payload: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(np.nanmin(np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).astype(np.float64)))
-            for i in range(len(dtype))
-        ])
-
-    @F.pandas_udf("double")
-    def _mx(dtype: pd.Series, payload: pd.Series) -> pd.Series:
-        return pd.Series([
-            float(np.nanmax(np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).astype(np.float64)))
-            for i in range(len(dtype))
-        ])
+    @F.pandas_udf("tmn double, tmx double")
+    def _mn_mx(tile: pd.DataFrame) -> pd.DataFrame:
+        ts = [t.astype(np.float64) for t in tilecodec.decode_batch(tile)]
+        return pd.DataFrame({"tmn": [float(np.nanmin(t)) for t in ts], "tmx": [float(np.nanmax(t)) for t in ts]})
 
     return (
-        tiles.select("band", _mn("dtype", "payload").alias("tmn"), _mx("dtype", "payload").alias("tmx"))
+        tiles.select("band", _mn_mx(F.struct(*tilecodec.TILE_COLUMNS)).alias("m"))
+        .select("band", "m.tmn", "m.tmx")
         .groupBy("band")
         .agg(F.min("tmn").alias("mn"), F.max("tmx").alias("mx"))
     )
@@ -136,7 +129,7 @@ def equalize(
             for r in pdf.itertuples(index=False):
                 b = int(r.band)
                 dfmin, dfmax, lut = luts[b]
-                v = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float32)
+                v = tilecodec.decode_row(r).astype(np.float32)
                 scale = lut_bins / (dfmax - dfmin)
                 dfbin = (v.astype(np.float64) - dfmin) * scale
                 ibin = np.where(
@@ -146,9 +139,7 @@ def equalize(
                 res = lut[ibin].astype(np.uint8)
                 if nd is not None:
                     res = np.where(v == np.float32(nd), np.uint8(int(nd) & 0xFF), res)
-                out.append({"band": b, "ty": int(r.ty), "tx": int(r.tx),
-                            "h": int(r.h), "w": int(r.w), "dtype": "uint8",
-                            "payload": res.tobytes()})
+                out.append(tilecodec.tile_row(b, int(r.ty), int(r.tx), res, "uint8"))
             yield pd.DataFrame(out)
 
     return tiles.mapInPandas(_apply, TILE_SCHEMA)

@@ -34,7 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.operators.focal import TILE_F64_SCHEMA, _halo_explode
+from gdal_spark.operators import tilecodec
+from gdal_spark.operators.focal import TILE_F64_SCHEMA, _halo_explode, halo_window
 from gdal_spark.operators.raster import RasterSpec
 
 
@@ -166,8 +167,8 @@ def fill_nodata(
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         band, tyy, txx = int(key[0]), int(key[1]), int(key[2])
-        center = pdf[(pdf.src_dy == 0) & (pdf.src_dx == 0)]
-        if not len(center) and not (0 <= tyy < spec.ntiles_y and 0 <= txx < spec.ntiles_x):
+        asm = halo_window(pdf, halo, spec, tyy, txx, nodata)
+        if asm is None:
             return pd.DataFrame(
                 {
                     "band": pd.array([], dtype="int32"), "ty": pd.array([], dtype="int32"),
@@ -176,56 +177,12 @@ def fill_nodata(
                     "payload": pd.array([], dtype=object),
                 }
             )
-        init = float(spec.init or 0.0)
-        if len(center):
-            c = center.iloc[0]
-            h, w = int(c["h"]), int(c["w"])
-            ctile = np.frombuffer(c["payload"], dtype=c["dtype"]).reshape(h, w)
-        else:
-            # in-bounds tile ABSENT from a sparse table == init-valued
-            # (repo-wide convention)
-            h, w = spec.tile_shape(tyy, txx)
-            ctile = np.full((h, w), init)
-        padded = np.full((h + 2 * halo, w + 2 * halo), nodata, dtype=np.float64)
-        padded[halo : halo + h, halo : halo + w] = ctile
-        sides = set()
-        for r in pdf.itertuples(index=False):
-            if r.src_dy == 0 and r.src_dx == 0:
-                continue
-            sides.add((r.src_dy, r.src_dx))
-            piece = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-            ys = slice(0, halo) if r.src_dy == -1 else (slice(halo + h, None) if r.src_dy == 1 else slice(halo, halo + h))
-            xs = slice(0, halo) if r.src_dx == -1 else (slice(halo + w, None) if r.src_dx == 1 else slice(halo, halo + w))
-            target = padded[ys, xs]
-            th = min(target.shape[0], piece.shape[0])
-            tw = min(target.shape[1], piece.shape[1])
-            target[:th, :tw] = piece[:th, :tw]
-        # in-bounds absent neighbors act init-valued; out-of-raster
-        # sides keep the nodata pad (this operator's edge rule)
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                if (dy == 0 and dx == 0) or (dy, dx) in sides:
-                    continue
-                if not (0 <= tyy + dy < spec.ntiles_y and 0 <= txx + dx < spec.ntiles_x):
-                    continue
-                ys = slice(0, halo) if dy == -1 else (slice(halo + h, None) if dy == 1 else slice(halo, halo + h))
-                xs = slice(0, halo) if dx == -1 else (slice(halo + w, None) if dx == 1 else slice(halo, halo + w))
-                # clip to the neighbor's true extent (edge-remainder
-                # tiles can be smaller than the halo): beyond it is
-                # out-of-raster and must stay nodata
-                nh, nw = spec.tile_shape(tyy + dy, txx + dx)
-                ph = min(halo, nh) if dy != 0 else nh
-                pw = min(halo, nw) if dx != 0 else nw
-                target = padded[ys, xs]
-                target[: min(ph, target.shape[0]), : min(pw, target.shape[1])] = init
+        # out-of-raster cells keep the nodata pad (this operator's edge rule)
+        padded, h, w = asm
         vmask = ~np.isnan(padded) if math.isnan(nodata) else (padded != nodata)
         filled, _ = fill_nodata_array(
             padded, vmask, max_search_dist, nearest, smoothing_iterations
         )
-        out = filled[halo : halo + h, halo : halo + w]
-        return pd.DataFrame(
-            [{"band": band, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": "float64", "payload": out.tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(band, tyy, txx, filled[halo : halo + h, halo : halo + w])])
 
     return exploded.groupBy("band", "ty", "tx").applyInPandas(_assemble, TILE_F64_SCHEMA)

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec
 
 HALO_SCHEMA = StructType(
@@ -69,7 +70,7 @@ def _halo_explode(tiles: DataFrame, halo: int = 1) -> DataFrame:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+                t = tilecodec.decode_row(r)
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         tty, ttx = r.ty + dy, r.tx + dx
@@ -89,12 +90,53 @@ def _halo_explode(tiles: DataFrame, halo: int = 1) -> DataFrame:
                                 # where this piece comes from, relative to target
                                 "src_dy": -dy, "src_dx": -dx,
                                 "h": part.shape[0], "w": part.shape[1],
-                                "dtype": r.dtype, "payload": part.tobytes(),
+                                "dtype": r.dtype, "payload": tilecodec.encode(part),
                             }
                         )
             yield pd.DataFrame(rows, columns=[f.name for f in HALO_SCHEMA.fields])
 
     return tiles.mapInPandas(_emit, HALO_SCHEMA)
+
+
+def halo_window(
+    pdf: pd.DataFrame,
+    halo: int,
+    spec,
+    ty: int,
+    tx: int,
+    pad: float,
+) -> tuple[np.ndarray, int, int] | None:
+    """One tile's (h+2*halo, w+2*halo) float64 window from its
+    _halo_explode pieces: the center payload plus the neighbors' border
+    strips. Cells outside the raster keep ``pad``; each caller applies
+    its own rule there.
+
+    SPARSE tile tables follow the repo-wide convention — an in-bounds
+    absent tile acts init-valued: an absent center is an init canvas
+    and an absent neighbor's block is init, clipped to that tile's
+    extent, so the window is bit-identical to one over the dense
+    equivalent. Returns None only for keys outside the raster grid.
+    Absent tiles with no existing tile in their 1-ring never appear as
+    groupBy keys (use densify() first when the all-init interior must
+    be materialized)."""
+    if not (0 <= ty < spec.ntiles_y and 0 <= tx < spec.ntiles_x):
+        return None
+    center = pdf[(pdf.src_dy == 0) & (pdf.src_dx == 0)]
+    h, w = (int(center["h"].iloc[0]), int(center["w"].iloc[0])) if len(center) else spec.tile_shape(ty, tx)
+    win = np.full((h + 2 * halo, w + 2 * halo), pad, dtype=np.float64)
+    starts = np.array([0, halo, halo + h]), np.array([0, halo, halo + w])
+    init = float(spec.init or 0.0)
+    for dy in (-1, 0, 1):
+        for dx in (-1, 0, 1):
+            if 0 <= ty + dy < spec.ntiles_y and 0 <= tx + dx < spec.ntiles_x:
+                nh, nw = spec.tile_shape(ty + dy, tx + dx)
+                y0, x0 = starts[0][dy + 1], starts[1][dx + 1]
+                win[y0 : y0 + (min(halo, nh) if dy else h), x0 : x0 + (min(halo, nw) if dx else w)] = init
+    # pieces land top-left in their block (a remainder neighbor's strip
+    # may be narrower than the halo)
+    oy = starts[0][pdf["src_dy"].to_numpy() + 1]
+    ox = starts[1][pdf["src_dx"].to_numpy() + 1]
+    return tilecodec.paste(win, pdf, oy, ox), h, w
 
 
 def assemble_padded(
@@ -104,60 +146,13 @@ def assemble_padded(
     ty: int,
     tx: int,
 ) -> tuple[np.ndarray, int, int] | None:
-    """Rebuild one tile's (h+2*halo, w+2*halo) float64 window from its
-    _halo_explode pieces: center payload + neighbor border strips, with
-    edge replication at the raster boundary (the gdaldem edge rule).
-    Shared by focal_apply and the seam-exact point sampler.
-
-    SPARSE tile tables follow the repo-wide convention
-    — an in-bounds absent tile acts init-valued. An absent center
-    synthesizes the init canvas; an in-bounds absent neighbor fills its
-    halo block with init (only out-of-raster sides edge-replicate), so
-    the result is bit-identical to running over the dense equivalent.
-    Returns None only for keys outside the raster grid. Absent tiles
-    with no existing tile in their 1-ring never appear as groupBy keys
-    and stay absent from the output (use densify() first when the
-    all-init interior must be materialized)."""
-    center = pdf[(pdf.src_dy == 0) & (pdf.src_dx == 0)]
-    if not (0 <= ty < spec.ntiles_y and 0 <= tx < spec.ntiles_x):
+    """halo_window with edge replication at the raster boundary (the
+    gdaldem edge rule). Shared by focal_apply and the seam-exact point
+    sampler."""
+    asm = halo_window(pdf, halo, spec, ty, tx, 0.0)
+    if asm is None:
         return None
-    if not len(center):
-        h, w = spec.tile_shape(ty, tx)
-        t = np.full((h, w), float(spec.init or 0.0))
-    else:
-        c = center.iloc[0]
-        h, w = int(c["h"]), int(c["w"])
-        # c["dtype"], not c.dtype: the column name collides with the
-        # pandas Series.dtype property
-        t = np.frombuffer(c["payload"], dtype=c["dtype"]).reshape(h, w).astype(np.float64)
-    padded = np.pad(t, halo, mode="edge")
-    sides = set()
-    for r in pdf.itertuples(index=False):
-        if r.src_dy == 0 and r.src_dx == 0:
-            continue
-        sides.add((r.src_dy, r.src_dx))
-        piece = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-        ys = slice(0, halo) if r.src_dy == -1 else (slice(halo + h, None) if r.src_dy == 1 else slice(halo, halo + h))
-        xs = slice(0, halo) if r.src_dx == -1 else (slice(halo + w, None) if r.src_dx == 1 else slice(halo, halo + w))
-        # neighbor pieces may be smaller at edges; align top-left
-        target = padded[ys, xs]
-        th = min(target.shape[0], piece.shape[0])
-        tw = min(target.shape[1], piece.shape[1])
-        target[:th, :tw] = piece[:th, :tw]
-    # in-bounds neighbors absent from a sparse table: place a
-    # synthetic init piece (block-limited, so real corner pieces
-    # survive); out-of-raster sides fall through to replication
-    init = float(spec.init or 0.0)
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if (dy == 0 and dx == 0) or (dy, dx) in sides:
-                continue
-            if not (0 <= ty + dy < spec.ntiles_y and 0 <= tx + dx < spec.ntiles_x):
-                continue
-            ys = slice(0, halo) if dy == -1 else (slice(halo + h, None) if dy == 1 else slice(halo, halo + h))
-            xs = slice(0, halo) if dx == -1 else (slice(halo + w, None) if dx == 1 else slice(halo, halo + w))
-            padded[ys, xs] = init
-            sides.add((dy, dx))
+    padded, h, w = asm
     # raster-boundary edge rule (gdaldem edge replication) applied
     # AFTER strip placement: pad rows/cols beyond the RASTER extent
     # replicate the outermost real row/col across the full padded
@@ -275,14 +270,11 @@ def focal_apply(
                     "payload": pd.array([], dtype=object),
                 }
             )
-        padded, h, w = asm
+        padded = asm[0]
         out = kernel(padded)
         if edges != "replicate":
             out = apply_edge_rule(out, padded, kernel, spec, tyy, txx, edges, edge_nodata)
-        return pd.DataFrame(
-            [{"band": band, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": out_dtype, "payload": out.astype(out_dtype).tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(band, tyy, txx, out, out_dtype)])
 
     return exploded.groupBy("band", "ty", "tx").applyInPandas(_assemble, TILE_F64_SCHEMA)
 

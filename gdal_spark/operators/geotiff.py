@@ -52,7 +52,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec
+from gdal_spark.operators import tilecodec
+from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec, downsample2x
 
 # TIFF tag ids (TIFF 6.0 / GeoTIFF 1.1 / GDAL)
 TAG_NEW_SUBFILE_TYPE = 254
@@ -153,29 +154,8 @@ def downsample_level(
         rw = min(2 * ts, src_w - rx0)
         rh = min(2 * ts, src_h - ry0)
         region = np.full((rh, rw), fill, dtype=dt)
-        for r in pdf.itertuples(index=False):
-            t = np.frombuffer(r.payload, dtype=dt).reshape(int(r.h), int(r.w))
-            oy, ox = int(r.qy) * ts, int(r.qx) * ts
-            region[oy : oy + int(r.h), ox : ox + int(r.w)] = t
-        oh, ow = (rh + 1) // 2, (rw + 1) // 2
-        if near:
-            out = region[::2, ::2]
-        else:
-            acc = np.zeros((oh, ow), dtype=np.float64 if not near else dt)
-            cnt = np.zeros((oh, ow), dtype=np.int64)
-            for dy in (0, 1):
-                for dx in (0, 1):
-                    blk = region[dy::2, dx::2].astype(np.float64)
-                    acc[: blk.shape[0], : blk.shape[1]] += blk
-                    cnt[: blk.shape[0], : blk.shape[1]] += 1
-            if np.issubdtype(np.dtype(dt), np.integer):
-                out = ((acc + cnt // 2) // cnt).astype(dt)
-            else:
-                out = (acc / cnt).astype(dt)
-        return pd.DataFrame(
-            [{"band": band, "ty": pty, "tx": ptx, "h": oh, "w": ow,
-              "dtype": dt, "payload": out.tobytes()}]
-        )
+        tilecodec.paste(region, pdf, pdf["qy"].to_numpy() * ts, pdf["qx"].to_numpy() * ts)
+        return pd.DataFrame([tilecodec.tile_row(band, pty, ptx, downsample2x(region, near))])
 
     return child.groupBy("band", "ptx", "pty").applyInPandas(_merge, TILE_SCHEMA), dst
 
@@ -201,13 +181,12 @@ def _compress_tiles(tiles: DataFrame, spec: RasterSpec, ovr: int, compress: str)
     def _prep(batches):
         for pdf in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(int(r.h), int(r.w))
+            for r, t in zip(pdf.itertuples(index=False), tilecodec.decode_batch(pdf)):
                 if t.shape != (ts, ts):
-                    full = np.zeros((ts, ts), dtype=r.dtype)
+                    full = np.zeros((ts, ts), dtype=t.dtype)
                     full[: t.shape[0], : t.shape[1]] = t
                     t = full
-                raw = np.ascontiguousarray(t).tobytes()
+                raw = t.tobytes()
                 blob = zlib.compress(raw, 6) if do_zip else raw
                 out.append({"ovr": ovr, "band": int(r.band), "ty": int(r.ty),
                             "tx": int(r.tx), "nbytes": len(blob), "blob": blob})
@@ -588,10 +567,6 @@ def read_geotiff_tiles(spark, path: str) -> DataFrame:
     info = read_geotiff(path)
     lv = info["levels"][0]
     ts, w, h = lv["tile_size"], lv["width"], lv["height"]
-    rows = []
-    for (band, ty, tx), arr in lv["tiles"].items():
-        th = min(ts, h - ty * ts)
-        tw = min(ts, w - tx * ts)
-        rows.append({"band": band, "ty": ty, "tx": tx, "h": th, "w": tw,
-                     "dtype": lv["dtype"], "payload": arr[:th, :tw].tobytes()})
+    rows = [tilecodec.tile_row(band, ty, tx, arr[: h - ty * ts, : w - tx * ts])
+            for (band, ty, tx), arr in lv["tiles"].items()]
     return spark.createDataFrame(pd.DataFrame(rows), TILE_SCHEMA)

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, copy_word
 from gdal_spark.operators.tiles import warp_bilinear, warp_nearest
 
@@ -185,11 +186,8 @@ def _linear_grid(
                 rows = []
                 for kr in kdf.itertuples(index=False):
                     tyy, txx = int(kr.ty), int(kr.tx)
-                    out, h, w = _fill_tile_linear(cs, zv, tr, tyy, txx, spec, radius, nodata)
-                    rows.append(
-                        {"band": 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-                         "dtype": spec.dtype, "payload": copy_word(out, spec.dtype).tobytes()}
-                    )
+                    out = _fill_tile_linear(cs, zv, tr, tyy, txx, spec, radius, nodata)[0]
+                    rows.append(tilecodec.tile_row(1, tyy, txx, copy_word(out, spec.dtype)))
                 yield pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
         return keys.mapInPandas(_tile, TILE_SCHEMA)
@@ -244,11 +242,8 @@ def _linear_grid(
         cs = pdf[["x", "y"]].to_numpy(np.float64)
         zv = pdf["z"].to_numpy(np.float64)
         tr = delaunay(cs) if len(cs) >= 3 else np.empty((0, 3), dtype=np.int64)
-        out, h, w = _fill_tile_linear(cs, zv, tr, tyy, txx, spec, radius, nodata)
-        return pd.DataFrame(
-            [{"band": 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": spec.dtype, "payload": copy_word(out, spec.dtype).tobytes()}]
-        )
+        out = _fill_tile_linear(cs, zv, tr, tyy, txx, spec, radius, nodata)[0]
+        return pd.DataFrame([tilecodec.tile_row(1, tyy, txx, copy_word(out, spec.dtype))])
 
     return exploded.groupBy("ty", "tx").applyInPandas(_tile_local, TILE_SCHEMA)
 
@@ -539,10 +534,7 @@ def _grid_impl(
             out = np.where(cnt >= need, cnt.astype(np.float64), nodata) if min_points > 0 else cnt.astype(np.float64)
         else:  # average_distance
             out = np.where(cnt >= need, dsum / np.maximum(cnt, 1), nodata)
-        return pd.DataFrame(
-            [{"band": 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": spec.dtype, "payload": copy_word(out, spec.dtype).tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(1, tyy, txx, copy_word(out, spec.dtype))])
 
     min_ppq, max_ppq = min_points_per_quadrant, max_points_per_quadrant
     # captured at plan time (driver) so tests can monkeypatch the limit
@@ -731,10 +723,7 @@ def _grid_impl(
                 out[:] = np.where(
                     ok_all, pair_sums / np.maximum(npairs_all, 1), nodata)
         out = out.reshape(h, w)
-        return pd.DataFrame(
-            [{"band": 1, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": spec.dtype, "payload": copy_word(out, spec.dtype).tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(1, tyy, txx, copy_word(out, spec.dtype))])
 
     kernel = _grid_select if (algo in ("invdistnn", "average_distance_pts") or quadrant_mode) else _grid
     return exploded.groupBy("ty", "tx").applyInPandas(kernel, TILE_SCHEMA)
@@ -856,8 +845,7 @@ def interpolate_at_points(
                 else:
                     # int() casts: the left join makes h/w nullable, so
                     # pandas holds them as float64 even for present rows
-                    tile = np.frombuffer(r["payload"], dtype=r["dtype"]).reshape(
-                        int(r["h"]), int(r["w"])).astype(np.float64)
+                    tile = tilecodec.decode_row(r).astype(np.float64)
                 sx, sy = spec.world_to_pixel(grp["x"].to_numpy(np.float64), grp["y"].to_numpy(np.float64))
                 sx = sx - txx * ts
                 sy = sy - tyy * ts

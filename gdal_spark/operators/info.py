@@ -24,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec
 
 
@@ -31,7 +32,7 @@ def _tile_stat_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     for pdf in batches:
         rows = []
         for r in pdf.itertuples(index=False):
-            a = np.frombuffer(r.payload, dtype=r.dtype).astype(np.float64)
+            a = tilecodec.decode_row(r).ravel().astype(np.float64)
             if a.size == 0:
                 continue
             rows.append(

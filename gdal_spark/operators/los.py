@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec
 
 
@@ -103,7 +104,7 @@ def line_of_sight(
         have = pdf["payload"].notna()
         if have.any():
             r0 = pdf[have].iloc[0]
-            t = np.frombuffer(r0["payload"], dtype=r0["dtype"]).reshape(r0["h"], r0["w"])
+            t = tilecodec.decode_row(r0)
             ly = pdf["py"].to_numpy(np.int64) - int(key[0]) * ts
             lx = pdf["px"].to_numpy(np.int64) - int(key[1]) * ts
             inb = (ly >= 0) & (ly < t.shape[0]) & (lx >= 0) & (lx < t.shape[1])

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
+
 MDCHUNK_SCHEMA = StructType(
     [
         StructField("chunk", ArrayType(IntegerType())),  # per-dim chunk idx
@@ -79,7 +81,7 @@ def from_numpy(spark: SparkSession, arr: np.ndarray, spec: MDArraySpec) -> DataF
             slice(key[d] * spec.chunks[d], key[d] * spec.chunks[d] + spec.chunk_shape(key)[d])
             for d in range(spec.ndim)
         )
-        rows.append({"chunk": list(key), "payload": np.ascontiguousarray(arr[sl]).tobytes()})
+        rows.append({"chunk": list(key), "payload": tilecodec.encode(arr[sl])})
     return spark.createDataFrame(pd.DataFrame(rows), MDCHUNK_SCHEMA)
 
 
@@ -129,7 +131,7 @@ def slice_array(
                 shape = tuple(
                     min(chunks[d], dims[d][1] - key[d] * chunks[d]) for d in range(ndim)
                 )
-                block = np.frombuffer(r.payload, dtype=dtype).reshape(shape)
+                block = tilecodec.decode(r.payload, dtype, shape, key)
                 crop_sl = []
                 new_off = []  # global offset of the crop in slice coords
                 ok = True
@@ -168,7 +170,7 @@ def slice_array(
                             "chunk": [c[0] // chunks[d] for d, c in enumerate(combo)],
                             "off": [c[0] % chunks[d] for d, c in enumerate(combo)],
                             "shape": list(sub.shape),
-                            "payload": sub.tobytes(),
+                            "payload": tilecodec.encode(sub),
                         }
                     )
             yield pd.DataFrame(rows, columns=["chunk", "off", "shape", "payload"])
@@ -186,8 +188,8 @@ def slice_array(
             sl = tuple(
                 slice(int(o), int(o) + int(s)) for o, s in zip(r.off, r.shape)
             )
-            out[sl] = np.frombuffer(r.payload, dtype=dtype).reshape([int(s) for s in r.shape])
-        return pd.DataFrame([{"chunk": ck, "payload": out.tobytes()}])
+            out[sl] = tilecodec.decode(r.payload, dtype, tuple(int(s) for s in r.shape), ck)
+        return pd.DataFrame([{"chunk": ck, "payload": tilecodec.encode(out)}])
 
     assembled = pieces.groupBy("chunk").applyInPandas(_assemble, MDCHUNK_SCHEMA)
     return assembled, new_spec
@@ -237,7 +239,7 @@ def as_classic(
                 shape = tuple(
                     min(chunks[d], dims[d][1] - key[d] * chunks[d]) for d in range(ndim)
                 )
-                block = np.frombuffer(r.payload, dtype=dtype).reshape(shape)
+                block = tilecodec.decode(r.payload, dtype, shape, key)
                 sl = []
                 for d in range(ndim):
                     if d == yi or d == xi:
@@ -255,11 +257,7 @@ def as_classic(
                 if yi > xi:
                     plane = plane.T
                 plane = np.ascontiguousarray(plane)
-                rows.append(
-                    {"band": 1, "ty": int(key[yi]), "tx": int(key[xi]),
-                     "h": plane.shape[0], "w": plane.shape[1],
-                     "dtype": dtype, "payload": plane.tobytes()}
-                )
+                rows.append(tilecodec.tile_row(1, int(key[yi]), int(key[xi]), plane))
             yield pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     return pruned.mapInPandas(_plane, TILE_SCHEMA), rspec
@@ -271,10 +269,11 @@ def mdim_statistics(df: DataFrame, spec: MDArraySpec):
     dtype = spec.dtype
 
     @F.pandas_udf("n long, s double, s2 double, mn double, mx double")
-    def _part(payload: pd.Series) -> pd.DataFrame:
+    def _part(chunk: pd.Series, payload: pd.Series) -> pd.DataFrame:
         out = []
-        for p in payload:
-            a = np.frombuffer(p, dtype=dtype).astype(np.float64)
+        for key, p in zip(chunk, payload):
+            key = tuple(int(k) for k in key)
+            a = tilecodec.decode(p, dtype, spec.chunk_shape(key), key).ravel().astype(np.float64)
             out.append(
                 {"n": a.size, "s": a.sum(), "s2": float((a * a).sum()),
                  "mn": float(a.min()), "mx": float(a.max())}
@@ -282,7 +281,7 @@ def mdim_statistics(df: DataFrame, spec: MDArraySpec):
         return pd.DataFrame(out)
 
     agg = (
-        df.select(_part("payload").alias("p"))
+        df.select(_part("chunk", "payload").alias("p"))
         .agg(
             F.sum("p.n").alias("n"), F.sum("p.s").alias("s"), F.sum("p.s2").alias("s2"),
             F.min("p.mn").alias("mn"), F.max("p.mx").alias("mx"),
@@ -383,9 +382,7 @@ def mdim_mosaic(
                     # this chunk's block extents in source coords
                     lo = [ci[d] * _sc[d] for d in range(ndim)]
                     hi = [min(lo[d] + _sc[d], _ss[d]) for d in range(ndim)]
-                    block = np.frombuffer(r["payload"], dtype=_dt).reshape(
-                        [hi[d] - lo[d] for d in range(ndim)]
-                    )
+                    block = tilecodec.decode(r["payload"], _dt, tuple(hi[d] - lo[d] for d in range(ndim)), ci)
                     # global (output) extents
                     glo = [lo[d] + _off[d] for d in range(ndim)]
                     ghi = [hi[d] + _off[d] for d in range(ndim)]
@@ -413,7 +410,7 @@ def mdim_mosaic(
                             rows["rank"].append(_rank)
                             rows["pos"].append(pos)
                             rows["shape"].append(shp)
-                            rows["payload"].append(piece.tobytes())
+                            rows["payload"].append(tilecodec.encode(piece))
                             return
                         for v in range(c0[dim], c1[dim] + 1):
                             idx[dim] = v
@@ -462,9 +459,9 @@ def mdim_mosaic(
                 continue
             pos = [int(v) for v in r["pos"]]
             shp = [int(v) for v in r["shape"]]
-            piece = np.frombuffer(r["payload"], dtype=dtype).reshape(shp)
+            piece = tilecodec.decode(r["payload"], dtype, tuple(shp), ci)
             canvas[tuple(slice(pos[d], pos[d] + shp[d]) for d in range(ndim))] = piece
-        return pd.DataFrame([{"chunk": ci, "payload": canvas.tobytes()}])
+        return pd.DataFrame([{"chunk": ci, "payload": tilecodec.encode(canvas)}])
 
     out_df = pieces.groupBy("chunk").applyInPandas(_assemble, MDCHUNK_SCHEMA)
     return out_df, out_spec
@@ -519,11 +516,8 @@ def mdim_reproject(
                 w = min(ts, W - tx * ts)
                 if h <= 0 or w <= 0:
                     continue
-                block = np.frombuffer(r.payload, dtype=r.dtype).reshape(ts, ts)
-                rows.append(
-                    {"chunk": [ty, tx],
-                     "payload": np.ascontiguousarray(block[:h, :w]).astype(dtype).tobytes()}
-                )
+                block = tilecodec.decode_row(r, ts)
+                rows.append({"chunk": [ty, tx], "payload": tilecodec.encode(block[:h, :w], dtype)})
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -557,15 +551,8 @@ def mdim_transpose(
             for r in pdf.itertuples(index=False):
                 key = list(r.chunk)
                 shape = src.chunk_shape(key)
-                block = np.frombuffer(r.payload, dtype=src.dtype).reshape(shape)
-                rows.append(
-                    {
-                        "chunk": [key[a] for a in axes],
-                        "payload": np.ascontiguousarray(
-                            block.transpose(axes)
-                        ).tobytes(),
-                    }
-                )
+                block = tilecodec.decode(r.payload, src.dtype, shape, key)
+                rows.append({"chunk": [key[a] for a in axes], "payload": tilecodec.encode(block.transpose(axes))})
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -629,8 +616,8 @@ def mdim_compare(
             for r in pdf.itertuples(index=False):
                 key = list(r.chunk)
                 shape = src.chunk_shape(key)
-                a = np.frombuffer(r.p1, dtype=src.dtype).reshape(shape).astype(np.float64)
-                b = np.frombuffer(r.p2, dtype=src.dtype).reshape(shape).astype(np.float64)
+                a = tilecodec.decode(r.p1, src.dtype, shape, key).astype(np.float64)
+                b = tilecodec.decode(r.p2, src.dtype, shape, key).astype(np.float64)
                 d = a - b
                 rows.append(
                     {
@@ -819,7 +806,7 @@ def _array_body(spec, df, dumped_dims: set, detailed: bool, stats: bool) -> dict
                 slice(key[d] * spec.chunks[d], key[d] * spec.chunks[d] + shape[d])
                 for d in range(spec.ndim)
             )
-            full[sl] = np.frombuffer(row["payload"], dtype=spec.dtype).reshape(shape)
+            full[sl] = tilecodec.decode(row["payload"], spec.dtype, shape, key)
         rec["values"] = full.tolist()
     if stats and df is not None:
         s = mdim_statistics(df, spec)

@@ -56,6 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec
 
 _COUNT_BAND = 0  # sidecar band id carrying panLastLineCounts
@@ -195,7 +196,7 @@ def nearblack(
     rep = _replace_value(cols)
     ts = spec.tile_size
     W, H = spec.width, spec.height
-    nty, ntx = spec.ntiles_y, spec.ntiles_x
+    ntx = spec.ntiles_x
     init = int(spec.init)
     alpha_band = nbands + 1
 
@@ -212,108 +213,63 @@ def nearblack(
     )
     dense = tiles.select("band", "ty", "tx", "h", "w", "dtype", "payload").unionByName(seeds)
 
-    def _strip_cols(pdf: pd.DataFrame, want_alpha: bool, want_counts: bool, txx: int):
-        """(nbands, H, w) strip + optional alpha/counts from tile rows."""
-        w = min(ts, W - txx * ts)
-        arr = np.full((nbands, H, w), init, dtype=np.uint8)
-        alpha = np.full((H, w), 255, dtype=np.uint8) if want_alpha else None
-        cnt = np.zeros((H, w), dtype=np.uint8) if want_counts else None
-        for r in pdf.itertuples(index=False):
-            if r.payload is None:
-                continue
-            y0 = int(r.ty) * ts
-            t = np.frombuffer(r.payload, dtype=np.uint8).reshape(-1, w)
-            b = int(r.band)
-            if 1 <= b <= nbands:
-                arr[b - 1, y0 : y0 + t.shape[0], :] = t
-            elif b == alpha_band and want_alpha:
-                alpha[y0 : y0 + t.shape[0], :] = t
-            elif b == _COUNT_BAND and want_counts:
-                cnt[y0 : y0 + t.shape[0], :] = t
-        return arr, alpha, cnt
+    def _strip(pdf: pd.DataFrame, by_col: bool, idx: int, want_alpha: bool, want_counts: bool):
+        """(nbands, h, w) strip + optional alpha/counts planes of tile
+        column (by_col) or tile row ``idx``; absent tiles stay init."""
+        h, w = (H, min(ts, W - idx * ts)) if by_col else (min(ts, H - idx * ts), W)
+        bands = list(range(1, nbands + 1)) + [alpha_band] * want_alpha + [_COUNT_BAND] * want_counts
+        planes = np.empty((len(bands), h, w), dtype=np.uint8)
+        planes[:nbands] = init
+        if want_alpha:
+            planes[nbands] = 255
+        if want_counts:
+            planes[-1] = 0
+        # the band filter also drops the NULL-payload seed rows (band -1)
+        sel = pdf[np.isin(pdf["band"].to_numpy(), bands)]
+        off = sel["ty" if by_col else "tx"].to_numpy() * ts
+        zero = np.zeros_like(off)
+        layer = [bands.index(b) for b in sel["band"].tolist()]
+        tilecodec.paste(planes, sel, off if by_col else zero, zero if by_col else off, layer=layer)
+        return (planes[:nbands], planes[nbands] if want_alpha else None,
+                planes[-1] if want_counts else None)
 
-    def _strip_rows(pdf: pd.DataFrame, want_alpha: bool, want_counts: bool, tyy: int):
-        h = min(ts, H - tyy * ts)
-        arr = np.full((nbands, h, W), init, dtype=np.uint8)
-        alpha = np.full((h, W), 255, dtype=np.uint8) if want_alpha else None
-        cnt = np.zeros((h, W), dtype=np.uint8) if want_counts else None
-        for r in pdf.itertuples(index=False):
-            if r.payload is None:
-                continue
-            x0 = int(r.tx) * ts
-            t = np.frombuffer(r.payload, dtype=np.uint8).reshape(h, -1)
-            b = int(r.band)
-            if 1 <= b <= nbands:
-                arr[b - 1, :, x0 : x0 + t.shape[1]] = t
-            elif b == alpha_band and want_alpha:
-                alpha[:, x0 : x0 + t.shape[1]] = t
-            elif b == _COUNT_BAND and want_counts:
-                cnt[:, x0 : x0 + t.shape[1]] = t
-        return arr, alpha, cnt
-
-    def _emit_cols(txx, arr, alpha, cnt):
-        w = arr.shape[2]
-        rows = []
-        for ty in range(nty):
-            h = min(ts, H - ty * ts)
-            sl = slice(ty * ts, ty * ts + h)
-            for b in range(nbands):
-                rows.append({"band": b + 1, "ty": ty, "tx": txx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(arr[b, sl, :]).tobytes()})
-            if alpha is not None:
-                rows.append({"band": alpha_band, "ty": ty, "tx": txx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(alpha[sl, :]).tobytes()})
-            if cnt is not None:
-                rows.append({"band": _COUNT_BAND, "ty": ty, "tx": txx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(cnt[sl, :]).tobytes()})
-        return pd.DataFrame(rows)
-
-    def _emit_rows(tyy, arr, alpha, cnt):
-        h = arr.shape[1]
-        rows = []
-        for tx in range(ntx):
-            w = min(ts, W - tx * ts)
-            sl = slice(tx * ts, tx * ts + w)
-            for b in range(nbands):
-                rows.append({"band": b + 1, "ty": tyy, "tx": tx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(arr[b, :, sl]).tobytes()})
-            if alpha is not None:
-                rows.append({"band": alpha_band, "ty": tyy, "tx": tx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(alpha[:, sl]).tobytes()})
-            if cnt is not None:
-                rows.append({"band": _COUNT_BAND, "ty": tyy, "tx": tx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": np.ascontiguousarray(cnt[:, sl]).tobytes()})
-        return pd.DataFrame(rows)
+    def _emit(by_col: bool, idx: int, arr, alpha, cnt):
+        """Cut the strip planes back into the tiles of tile column
+        (by_col) or tile row ``idx``."""
+        planes = [(b + 1, arr[b]) for b in range(nbands)]
+        planes += [(alpha_band, alpha)] * (alpha is not None) + [(_COUNT_BAND, cnt)] * (cnt is not None)
+        ty0, tx0 = (0, idx) if by_col else (idx, 0)
+        return pd.DataFrame([r for b, p in planes for r in tilecodec.cut(p, ts, b, ty0, tx0)])
 
     # stage A: top-down vertical (column strips, source values)
     def _a(key, pdf):
         txx = int(key[0])
-        arr, alpha, _ = _strip_cols(pdf, set_alpha, False, txx)
+        arr, alpha, _ = _strip(pdf, True, txx, set_alpha, False)
         cnt = _vscan(arr, alpha, cols, near, max_non_black, rep, bottom_up=False)
-        return _emit_cols(txx, arr, alpha, cnt)
+        return _emit(True, txx, arr, alpha, cnt)
 
     # stage B: top-down horizontal L->R then R->L (row strips)
     def _b(key, pdf):
         tyy = int(key[0])
-        arr, alpha, cnt = _strip_rows(pdf, set_alpha, True, tyy)
+        arr, alpha, cnt = _strip(pdf, False, tyy, set_alpha, True)
         _hscan(arr, cnt, alpha, cols, near, max_non_black, rep, left_to_right=True)
         _hscan(arr, cnt, alpha, cols, near, max_non_black, rep, left_to_right=False)
-        return _emit_rows(tyy, arr, alpha, None)
+        return _emit(False, tyy, arr, alpha, None)
 
     # stage C: bottom-up vertical on the intermediate raster
     def _c(key, pdf):
         txx = int(key[0])
-        arr, alpha, _ = _strip_cols(pdf, set_alpha, False, txx)
+        arr, alpha, _ = _strip(pdf, True, txx, set_alpha, False)
         cnt = _vscan(arr, alpha, cols, near, max_non_black, rep, bottom_up=True)
-        return _emit_cols(txx, arr, alpha, cnt)
+        return _emit(True, txx, arr, alpha, cnt)
 
     # stage D: bottom-up horizontal, max-non-black forced 0 (:646-647)
     def _d(key, pdf):
         tyy = int(key[0])
-        arr, alpha, cnt = _strip_rows(pdf, set_alpha, True, tyy)
+        arr, alpha, cnt = _strip(pdf, False, tyy, set_alpha, True)
         _hscan(arr, cnt, alpha, cols, near, 0, rep, left_to_right=True)
         _hscan(arr, cnt, alpha, cols, near, 0, rep, left_to_right=False)
-        return _emit_rows(tyy, arr, alpha, None)
+        return _emit(False, tyy, arr, alpha, None)
 
     s1 = dense.groupBy("tx").applyInPandas(_a, TILE_SCHEMA)
     s2 = s1.groupBy("ty").applyInPandas(_b, TILE_SCHEMA)
@@ -473,12 +429,10 @@ def nearblack_floodfill(
         h = min(ts, H - ty * ts)
         w = min(ts, W - tx * ts)
         arr = np.full((nbands, h, w), init, dtype=np.uint8)
-        for r in pdf.itertuples(index=False):
-            if r.payload is None:
-                continue
-            b = int(r.band)
-            if 1 <= b <= nbands:
-                arr[b - 1] = np.frombuffer(r.payload, dtype=np.uint8).reshape(h, w)
+        # the band filter also drops the NULL-payload seed rows (band -1)
+        sel = pdf[pdf["band"].between(1, nbands)]
+        zero = np.zeros(len(sel), dtype=np.int64)
+        tilecodec.paste(arr, sel, zero, zero, layer=sel["band"].to_numpy() - 1)
         return ty, tx, h, w, arr
 
     def _near_and_labels(arr):
@@ -598,14 +552,9 @@ def nearblack_floodfill(
             else np.zeros((h, w), dtype=bool)
         )
         arr[:, m] = rep
-        rows = []
-        for b in range(nbands):
-            rows.append({"band": b + 1, "ty": ty, "tx": tx, "h": h, "w": w,
-                         "dtype": "uint8", "payload": arr[b].tobytes()})
+        rows = [tilecodec.tile_row(b + 1, ty, tx, arr[b]) for b in range(nbands)]
         if set_alpha:
-            alpha = np.where(m, 0, 255).astype(np.uint8)
-            rows.append({"band": alpha_band, "ty": ty, "tx": tx, "h": h, "w": w,
-                         "dtype": "uint8", "payload": alpha.tobytes()})
+            rows.append(tilecodec.tile_row(alpha_band, ty, tx, np.where(m, 0, 255), "uint8"))
         return pd.DataFrame(rows)
 
     return (

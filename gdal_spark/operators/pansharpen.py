@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, copy_word
 from gdal_spark.operators.tiles import WARP_KERNELS
 
@@ -104,7 +105,7 @@ def pansharpen(
             )
         pr = panrow.iloc[0]
         ph, pw = int(pr["h"]), int(pr["w"])
-        panv = np.frombuffer(pr["payload"], dtype=pr["dtype"]).reshape(ph, pw).astype(np.float64)
+        panv = tilecodec.decode_row(pr).astype(np.float64)
         # pan pixel centers in ms pixel coords
         jj, ii = np.meshgrid(np.arange(pw), np.arange(ph))
         sx = (txx * pts + jj + 0.5) * rx
@@ -129,11 +130,9 @@ def pansharpen(
         syw = np.clip(sy - wy0, 0.0, dh - 1e-9)
         ups = {}
         for b in bands:
-            win = np.zeros((wh, ww))
-            for rr in pieces[pieces.piece_band == b].itertuples(index=False):
-                t = np.frombuffer(rr.payload, dtype=rr.dtype).reshape(rr.h, rr.w)
-                oy, ox = rr.mty * mts - wy0, rr.mtx * mts - wx0
-                win[oy : oy + rr.h, ox : ox + rr.w] = t
+            sel = pieces[pieces.piece_band == b]
+            win = tilecodec.paste(np.zeros((wh, ww)), sel, sel["mty"].to_numpy() * mts - wy0,
+                                  sel["mtx"].to_numpy() * mts - wx0)
             vals, _ = kernel(win[:dh, :dw], sxw, syw)
             ups[b] = vals
         pseudo = np.zeros((ph, pw))
@@ -154,11 +153,7 @@ def pansharpen(
                 v = np.minimum(v, max_value)
             if nd is not None:
                 v = np.where(ok, v, nd)
-            out_rows.append(
-                {"band": b, "ty": tyy, "tx": txx, "h": ph, "w": pw,
-                 "dtype": pan_spec.dtype,
-                 "payload": copy_word(v, pan_spec.dtype).tobytes()}
-            )
+            out_rows.append(tilecodec.tile_row(b, tyy, txx, copy_word(v, pan_spec.dtype)))
         return pd.DataFrame(out_rows, columns=[f.name for f in TILE_SCHEMA.fields])
 
     return both.groupBy("ty", "tx").applyInPandas(_brovey, TILE_SCHEMA)

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec
 
 
@@ -251,7 +252,7 @@ def polygonize(
         for pdf in batches:
             rows = []
             for _, t in pdf[pdf["band"] == band].iterrows():
-                arr = np.frombuffer(t["payload"], dtype=t["dtype"]).reshape(t["h"], t["w"])
+                arr = tilecodec.decode_row(t)
                 roff, coff = int(t["ty"]) * ts, int(t["tx"]) * ts
                 mask = np.ones(arr.shape, dtype=bool) if nodata is None else (arr != nodata)
                 labels = label_components(arr, mask, connect)
@@ -408,12 +409,7 @@ def footprint(
             for r in pdf.itertuples(index=False):
                 if r.band != band:
                     continue
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-                m = (t != nodata).astype(np.uint8)
-                rows.append(
-                    {"band": 1, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
-                     "dtype": "uint8", "payload": m.tobytes()}
-                )
+                rows.append(tilecodec.tile_row(1, r.ty, r.tx, tilecodec.decode_row(r) != nodata, "uint8"))
             yield pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     from gdal_spark.operators.raster import TILE_SCHEMA

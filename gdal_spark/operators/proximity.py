@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, copy_word
 
 _INF = 1e30
@@ -163,18 +164,10 @@ def proximity(
         for r in pdf.itertuples(index=False):
             if r.band != band:
                 continue
-            t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+            t = tilecodec.decode_row(r)
             is_target = np.isin(t, tv) if tv is not None else (t != 0)
             strip[:, r.tx * ts : r.tx * ts + r.w] = np.where(is_target, 0.0, _INF)
-        dx2 = _edt_1d(strip)
-        rows = []
-        for tx in range(spec.ntiles_x):
-            w = min(ts, W - tx * ts)
-            rows.append(
-                {"band": 1, "ty": tyy, "tx": tx, "h": sh, "w": w,
-                 "dtype": "float64", "payload": np.ascontiguousarray(dx2[:, tx * ts : tx * ts + w]).tobytes()}
-            )
-        return pd.DataFrame(rows)
+        return pd.DataFrame(tilecodec.cut(_edt_1d(strip), ts, 1, tyy, 0))
 
     rowpass = tiles.groupBy("ty").applyInPandas(_xpass, TILE_SCHEMA)
     ypass_in = rowpass
@@ -194,15 +187,12 @@ def proximity(
         src_strip = (
             np.full((H, sw), float(spec.init or 0.0)) if use_input_nodata else None
         )
-        for r in pdf.itertuples(index=False):
-            if int(r.band) == -2:
-                src_strip[r.ty * ts : r.ty * ts + r.h, :] = np.frombuffer(
-                    r.payload, dtype=r.dtype
-                ).reshape(r.h, r.w).astype(np.float64)
-                continue
-            strip[r.ty * ts : r.ty * ts + r.h, :] = np.frombuffer(
-                r.payload, dtype=np.float64
-            ).reshape(r.h, r.w)
+        src = (pdf["band"] == -2).to_numpy()
+        oy = pdf["ty"].to_numpy() * ts
+        zero = np.zeros(len(pdf), dtype=np.int64)
+        tilecodec.paste(strip, pdf[~src], oy[~src], zero)
+        if use_input_nodata:
+            tilecodec.paste(src_strip, pdf[src], oy[src], zero)
         d2 = _edt_1d(np.ascontiguousarray(strip.T)).T
         d = np.sqrt(np.where(d2 >= _INF, np.inf, d2))
         if pix_maxdist is not None:
@@ -217,14 +207,6 @@ def proximity(
             d = np.where(inrange, d * distmult, d)
         if use_input_nodata:
             d = np.where(src_strip == src_nodata, nodata, d)
-        rows = []
-        for ty in range(spec.ntiles_y):
-            h = min(ts, H - ty * ts)
-            rows.append(
-                {"band": 1, "ty": ty, "tx": txx, "h": h, "w": sw,
-                 "dtype": out_dtype,
-                 "payload": copy_word(np.ascontiguousarray(d[ty * ts : ty * ts + h, :]), out_dtype).tobytes()}
-            )
-        return pd.DataFrame(rows)
+        return pd.DataFrame(tilecodec.cut(copy_word(d, out_dtype), ts, 1, 0, txx))
 
     return ypass_in.groupBy("tx").applyInPandas(_ypass, TILE_SCHEMA)

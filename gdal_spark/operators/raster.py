@@ -1,8 +1,11 @@
 """Raster data model + numpy burn kernels + distributed rasterize.
 
 Tile-table data model (SURVEY.md §1.2): a raster is rows of
-  (dataset, band, z, ty, tx, w, h, dtype, payload:binary)
-with a RasterSpec carrying the grid (geotransform, size, type). The
+  (band, ty, tx, h, w, dtype, payload:binary)    grid tiles (TILE_SCHEMA)
+or, for XYZ web tiles, always tile_size square,
+  (z, tx, ty, band, dtype, payload:binary)       (tiles.TILE_OUT_SCHEMA)
+with a RasterSpec carrying the grid (geotransform, size, type). How a
+payload maps to an array is owned by operators/tilecodec.py. The
 reference's block cache / chunking (gdalrasterize.cpp:933 CHUNKYSIZE,
 rasterio.cpp block loop) is replaced by tile-key partitioning: each
 (ty, tx) tile is one task, shapes are exploded to their candidate
@@ -48,6 +51,7 @@ from pyspark.sql.types import (
 
 from gdal_spark.geom.batch import GeomType
 from gdal_spark.geom.wkt import _fmt_d, parse_wkt, parse_wkt_z
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.spatial import ENVELOPE_SCHEMA, envelope_udf
 
 CHECKSUM_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
@@ -111,6 +115,26 @@ def copy_word(values: np.ndarray, dtype: str) -> np.ndarray:
         r = np.where(v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5))
         return np.clip(r, info.min, info.max).astype(dtype)
     return v.astype(dtype)
+
+
+def downsample2x(a: np.ndarray, near: bool = False) -> np.ndarray:
+    """2x NEAREST (pixel 2i) or AVERAGE of a 2-D array: destination
+    pixel i averages source [2i, min(2i+2, n)) in each axis, so an odd
+    edge averages 2 or 1 pixels (GDALDownsampleChunk32R_Average edge
+    handling, overview.cpp). Integer sums stay exact in int64 and round
+    as (sum + n/2) / n (overview.cpp:1425-1430); floats take sum / n."""
+    if near:
+        return a[::2, ::2]
+    integer = np.issubdtype(a.dtype, np.integer)
+    shape = ((a.shape[0] + 1) // 2, (a.shape[1] + 1) // 2)
+    acc = np.zeros(shape, dtype=np.int64 if integer else np.float64)
+    cnt = np.zeros(shape, dtype=np.int64)
+    for dy in (0, 1):
+        for dx in (0, 1):
+            blk = a[dy::2, dx::2]
+            acc[: blk.shape[0], : blk.shape[1]] += blk
+            cnt[: blk.shape[0], : blk.shape[1]] += 1
+    return ((acc + cnt // 2) // cnt if integer else acc / cnt).astype(a.dtype)
 
 
 # ---------------------------------------------------------------------------
@@ -585,7 +609,7 @@ def densify(tiles: DataFrame, spec: RasterSpec,
             for ty, tx in zip(pdf["ty"], pdf["tx"]):
                 sh = spec.tile_shape(int(ty), int(tx))
                 if sh not in cache:
-                    cache[sh] = np.full(sh, spec.init, dtype=spec.dtype).tobytes()
+                    cache[sh] = tilecodec.encode(np.full(sh, spec.init, dtype=spec.dtype))
                 hs.append(sh[0])
                 ws.append(sh[1])
                 payloads.append(cache[sh])
@@ -770,20 +794,9 @@ def rasterize(
         h, w = spec.tile_shape(tyy, txx)
         oy, ox = tyy * ts, txx * ts
         arr = _accumulate(pdf, h, w, oy, ox, base=spec.init)
-        rows = []
-        for b in range(spec.nbands):
-            rows.append(
-                {
-                    "band": b + 1,
-                    "ty": tyy,
-                    "tx": txx,
-                    "h": h,
-                    "w": w,
-                    "dtype": spec.dtype,
-                    "payload": copy_word(arr[b], spec.dtype).tobytes(),
-                }
-            )
-        return pd.DataFrame(rows)
+        return pd.DataFrame(
+            [tilecodec.tile_row(b + 1, tyy, txx, copy_word(arr[b], spec.dtype)) for b in range(spec.nbands)]
+        )
 
     if not add:
         return exploded.groupBy("ty", "tx").applyInPandas(_burn, TILE_SCHEMA)
@@ -803,8 +816,7 @@ def rasterize(
                     "dtype": "coo", "payload": idx.astype(np.int32).tobytes() + vals.tobytes()}
         a = np.zeros(h * w)
         a[idx] = vals
-        return {"band": band, "ty": tyy, "tx": txx, "h": h, "w": w,
-                "dtype": "float64", "payload": a.tobytes()}
+        return tilecodec.tile_row(band, tyy, txx, a.reshape(h, w))
 
     def _burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tyy, txx = int(key[0]), int(key[1])
@@ -828,11 +840,8 @@ def rasterize(
                 val = np.frombuffer(p[4 * nnz :], dtype=np.float64)
                 np.add.at(total, idx, val)
             else:
-                total += np.frombuffer(p, dtype=np.float64)
-        return pd.DataFrame(
-            [{"band": b, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": spec.dtype, "payload": copy_word(total.reshape(h, w), spec.dtype).tobytes()}]
-        )
+                total += tilecodec.decode(p, dt, (h * w,), (b, tyy, txx))
+        return pd.DataFrame([tilecodec.tile_row(b, tyy, txx, copy_word(total.reshape(h, w), spec.dtype))])
 
     def _pt_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         """Map-side point combine: fold a whole input partition's
@@ -937,11 +946,9 @@ def materialize_full(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> np.nd
     """Collect tile rows into one (H, W) array (tests / small rasters).
     Tiles absent from the DF are init-valued."""
     arr = np.full((spec.height, spec.width), init_word(spec), dtype=spec.dtype)
-    for r in tiles.filter(F.col("band") == band).collect():
-        t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-        oy, ox = r.ty * spec.tile_size, r.tx * spec.tile_size
-        arr[oy : oy + r.h, ox : ox + r.w] = t
-    return arr
+    pdf = tiles.filter(F.col("band") == band).select(*tilecodec.TILE_COLUMNS).toPandas()
+    ts = spec.tile_size
+    return tilecodec.paste(arr, pdf, pdf["ty"].to_numpy() * ts, pdf["tx"].to_numpy() * ts)
 
 
 # ---------------------------------------------------------------------------
@@ -998,11 +1005,10 @@ def checksum_col(tiles: DataFrame, spec: RasterSpec) -> DataFrame:
     init = init_word(spec)
 
     @F.pandas_udf(LongType())
-    def _partial(ty: pd.Series, tx: pd.Series, h: pd.Series, wcol: pd.Series, dtype: pd.Series, payload: pd.Series) -> pd.Series:
+    def _partial(tile: pd.DataFrame) -> pd.Series:
         out = []
-        for i in range(len(ty)):
-            t = np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).reshape(h.iloc[i], wcol.iloc[i])
-            oy, ox = int(ty.iloc[i]) * ts, int(tx.iloc[i]) * ts
+        for t, ty, tx in zip(tilecodec.decode_batch(tile), tile["ty"].tolist(), tile["tx"].tolist()):
+            oy, ox = ty * ts, tx * ts
             p = checksum_tile_partial(t, oy, ox, w)
             if init:
                 p -= checksum_tile_partial(np.full(t.shape, init), oy, ox, w)
@@ -1010,7 +1016,7 @@ def checksum_col(tiles: DataFrame, spec: RasterSpec) -> DataFrame:
         return pd.Series(out, dtype="int64")
 
     return (
-        tiles.select("band", _partial("ty", "tx", "h", "w", "dtype", "payload").alias("p"))
+        tiles.select("band", _partial(F.struct(*tilecodec.TILE_COLUMNS)).alias("p"))
         .groupBy("band")
         .agg(F.pmod(F.sum("p") + F.lit(init_checksum(spec)), F.lit(65536)).alias("checksum"))
     )
@@ -1064,10 +1070,10 @@ def band_histogram(
     scale = buckets / (dfmax - dfmin)
 
     @F.pandas_udf(ArrayType(LongType()))
-    def _partial(h: pd.Series, w: pd.Series, dtype: pd.Series, payload: pd.Series) -> pd.Series:
+    def _partial(tile: pd.DataFrame) -> pd.Series:
         out = []
-        for i in range(len(h)):
-            v = np.frombuffer(payload.iloc[i], dtype=dtype.iloc[i]).astype(np.float64)
+        for t in tilecodec.decode_batch(tile):
+            v = t.ravel().astype(np.float64)
             keep = ~np.isnan(v)
             if nodata is not None:
                 keep &= v != nodata
@@ -1081,7 +1087,7 @@ def band_histogram(
         return pd.Series(out)
 
     hist = (
-        tiles.select("band", _partial("h", "w", "dtype", "payload").alias("hp"))
+        tiles.select("band", _partial(F.struct(*tilecodec.TILE_COLUMNS)).alias("hp"))
         .select("band", F.posexplode("hp").alias("bucket", "n"))
         .filter(F.col("n") > 0)
         .groupBy("band", "bucket")
@@ -1151,8 +1157,8 @@ def as_features(tiles: DataFrame, spec: RasterSpec, skip_value: float | None = N
     def _explode(batches):
         for pdf in batches:
             out = []
-            for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
+            for r, t in zip(pdf.itertuples(index=False), tilecodec.decode_batch(pdf)):
+                t = t.astype(np.float64)
                 yy, xx = np.nonzero(t != skip_value) if skip_value is not None else np.unravel_index(np.arange(t.size), t.shape)
                 out.append(
                     pd.DataFrame(
@@ -1170,6 +1176,26 @@ def as_features(tiles: DataFrame, spec: RasterSpec, skip_value: float | None = N
             )
 
     return tiles.mapInPandas(_explode, AS_FEATURES_SCHEMA)
+
+
+def _band_tiles(pdf: pd.DataFrame, bands: list[int]) -> list[tuple[int, int, dict[int, np.ndarray]]]:
+    """(ty, tx, {band: float64 (h, w) array}) for each tile key of
+    ``pdf`` that holds every band in ``bands``."""
+    pdf = pdf[pdf["band"].isin(bands)]
+    keys: dict[tuple[int, int], dict[int, np.ndarray]] = {}
+    for ty, tx, b, t in zip(pdf["ty"].tolist(), pdf["tx"].tolist(), pdf["band"].tolist(),
+                            tilecodec.decode_batch(pdf)):
+        keys.setdefault((ty, tx), {})[b] = t.astype(np.float64)
+    return [(ty, tx, arrs) for (ty, tx), arrs in keys.items() if len(arrs) == len(bands)]
+
+
+def _per_tile_key(tiles: DataFrame, bands: list[int], frame, schema) -> DataFrame:
+    """Run ``frame`` over batches holding whole tile keys: one Arrow map
+    pass for a single band, else a groupBy on (ty, tx) that aligns a
+    tile's band rows."""
+    if len(bands) == 1:
+        return tiles.mapInPandas(lambda batches: map(frame, batches), schema)
+    return tiles.groupBy("ty", "tx").applyInPandas(lambda _, pdf: frame(pdf), schema)
 
 
 def as_features_layer(
@@ -1290,34 +1316,11 @@ def as_features_layer(
     sel = F.col("band").isin([int(b) for b in bands])
     dense = densify(tiles.filter(sel), spec, bands=bands)
 
-    if len(bands) == 1:
-        b0 = bands[0]
+    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = [_rows(arrs, ty, tx, *arrs[bands[0]].shape) for ty, tx, arrs in _band_tiles(pdf, bands)]
+        return pd.concat(out, ignore_index=True) if out else _empty()
 
-        def _single(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    if int(r.band) != b0:
-                        continue
-                    a = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
-                    out.append(_rows({b0: a}, int(r.ty), int(r.tx), int(r.h), int(r.w)))
-                yield pd.concat(out, ignore_index=True) if out else _empty()
-
-        return dense.mapInPandas(_single, out_schema)
-
-    def _multi(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        arrs = {}
-        h = w = 0
-        for r in pdf.itertuples(index=False):
-            if int(r.band) in bands:
-                arrs[int(r.band)] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
-                h, w = int(r.h), int(r.w)
-        if len(arrs) != len(bands):
-            return _empty()
-        return _rows(arrs, ty, tx, h, w)
-
-    return dense.groupBy("ty", "tx").applyInPandas(_multi, out_schema)
+    return _per_tile_key(dense, bands, _frame, out_schema)
 
 
 def mosaic(tile_tables: list[DataFrame], nodata: float = 0.0, method: str = "last") -> DataFrame:
@@ -1340,19 +1343,12 @@ def mosaic(tile_tables: list[DataFrame], nodata: float = 0.0, method: str = "las
         pdf = pdf.sort_values("_src", kind="stable")
         if method == "first":
             pdf = pdf.iloc[::-1]
-        out = None
-        for r in pdf.itertuples(index=False):
-            t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-            if out is None:
-                out = t.copy()
-                meta = r
-            else:
-                m = t != nodata
-                out[m] = t[m]
-        return pd.DataFrame(
-            [{"band": int(key[0]), "ty": int(key[1]), "tx": int(key[2]),
-              "h": meta.h, "w": meta.w, "dtype": meta.dtype, "payload": out.tobytes()}]
-        )
+        first, *rest = tilecodec.decode_batch(pdf)
+        out = first.copy()
+        for t in rest:
+            m = t != nodata
+            out[m] = t[m]
+        return pd.DataFrame([tilecodec.tile_row(int(key[0]), int(key[1]), int(key[2]), out)])
 
     return allt.groupBy("band", "ty", "tx").applyInPandas(_merge, TILE_SCHEMA)
 
@@ -1427,12 +1423,10 @@ def rasterize_invert(
                 if r.payload is None:
                     covered = np.zeros((h, w), dtype=bool)
                 else:
-                    covered = np.frombuffer(r.payload, dtype=np.uint8).reshape(h, w) != 0
+                    covered = tilecodec.decode(r.payload, "uint8", (h, w), (ty, tx)) != 0
                 for b in range(nbands):
                     bv = bvals[min(b, len(bvals) - 1)]
-                    out = copy_word(np.where(covered, init, bv), dt)
-                    rows.append({"band": b + 1, "ty": ty, "tx": tx, "h": h, "w": w,
-                                 "dtype": dt, "payload": out.tobytes()})
+                    rows.append(tilecodec.tile_row(b + 1, ty, tx, copy_word(np.where(covered, init, bv), dt)))
             yield pd.DataFrame(rows)
 
     return j.mapInPandas(_complement, TILE_SCHEMA)
@@ -1508,37 +1502,11 @@ def gdal2xyz(
             cols[f"b{b}"] = vals[i]
         return pd.DataFrame(cols)
 
-    if len(bands) == 1:
-        b0 = bands[0]
-
-        def _single(batches):
-            for pdf in batches:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    if int(r.band) != b0:
-                        continue
-                    a = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
-                    df = _rows({b0: a}, int(r.ty), int(r.tx), int(r.h), int(r.w))
-                    if df is not None:
-                        out.append(df)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        return tiles.mapInPandas(_single, out_schema)
-
-    def _multi(key, pdf):
-        ty, tx = int(key[0]), int(key[1])
-        arrs = {}
-        h = w = 0
-        for r in pdf.itertuples(index=False):
-            if int(r.band) in bands:
-                arrs[int(r.band)] = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
-                h, w = int(r.h), int(r.w)
-        if len(arrs) != len(bands):
+    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = [_rows(arrs, ty, tx, *arrs[bands[0]].shape) for ty, tx, arrs in _band_tiles(pdf, bands)]
+        out = [df for df in out if df is not None]
+        if not out:
             return pd.DataFrame({c.split()[0]: [] for c in out_schema.split(", ")})
-        df = _rows(arrs, ty, tx, h, w)
-        if df is None:
-            return pd.DataFrame({c.split()[0]: [] for c in out_schema.split(", ")})
-        return df
+        return pd.concat(out, ignore_index=True)
 
-    return tiles.groupBy("ty", "tx").applyInPandas(_multi, out_schema)
+    return _per_tile_key(tiles, bands, _frame, out_schema)

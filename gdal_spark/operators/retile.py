@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec
 
 
@@ -37,10 +38,9 @@ def retile(tiles: DataFrame, spec: RasterSpec, new_tile_size: int) -> DataFrame:
     def _slice(batches):
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in ("band", "ty", "tx", "oy", "ox", "h", "w", "dtype", "payload")}
-            for i in range(len(pdf)):
-                h, w = int(pdf["h"].iloc[i]), int(pdf["w"].iloc[i])
+            for i, arr in enumerate(tilecodec.decode_batch(pdf)):
+                h, w = arr.shape
                 dt = pdf["dtype"].iloc[i]
-                arr = np.frombuffer(pdf["payload"].iloc[i], dtype=dt).reshape(h, w)
                 gy0 = int(pdf["ty"].iloc[i]) * ts
                 gx0 = int(pdf["tx"].iloc[i]) * ts
                 for nty in range(gy0 // nts, (gy0 + h - 1) // nts + 1):
@@ -59,7 +59,7 @@ def retile(tiles: DataFrame, spec: RasterSpec, new_tile_size: int) -> DataFrame:
                         out["h"].append(y1 - y0)
                         out["w"].append(x1 - x0)
                         out["dtype"].append(dt)
-                        out["payload"].append(piece.tobytes())
+                        out["payload"].append(tilecodec.encode(piece))
             yield pd.DataFrame(out)
 
     pieces = tiles.mapInPandas(
@@ -71,21 +71,9 @@ def retile(tiles: DataFrame, spec: RasterSpec, new_tile_size: int) -> DataFrame:
         band, nty, ntx = int(key[0]), int(key[1]), int(key[2])
         th = min(nts, height - nty * nts)
         tw = min(nts, width - ntx * nts)
-        dt = pdf["dtype"].iloc[0]
-        canvas = np.full((th, tw), init, dtype=dt)
-        for i in range(len(pdf)):
-            oy, ox = int(pdf["oy"].iloc[i]), int(pdf["ox"].iloc[i])
-            h, w = int(pdf["h"].iloc[i]), int(pdf["w"].iloc[i])
-            canvas[oy : oy + h, ox : ox + w] = np.frombuffer(
-                pdf["payload"].iloc[i], dtype=dt
-            ).reshape(h, w)
-        return pd.DataFrame(
-            {
-                "band": [band], "ty": [nty], "tx": [ntx],
-                "h": [th], "w": [tw], "dtype": [dt],
-                "payload": [canvas.tobytes()],
-            }
-        )
+        canvas = np.full((th, tw), init, dtype=pdf["dtype"].iloc[0])
+        tilecodec.paste(canvas, pdf, pdf["oy"].to_numpy(), pdf["ox"].to_numpy())
+        return pd.DataFrame([tilecodec.tile_row(band, nty, ntx, canvas)])
 
     return pieces.groupBy("band", "ty", "tx").applyInPandas(_assemble, TILE_SCHEMA)
 

@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.polygonize import label_components
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA
 
@@ -156,7 +157,7 @@ def sieve(
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+                arr = tilecodec.decode_row(r)
                 mask = np.ones(arr.shape, dtype=bool) if nodata is None else (arr != nodata)
                 labels = label_components(arr, mask, connect)
                 lab = np.where(mask, labels, -1)
@@ -334,7 +335,7 @@ def sieve(
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+                arr = tilecodec.decode_row(r)
                 if r.band != band:
                     out.append({"band": r.band, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
                                 "dtype": r.dtype, "payload": r.payload})
@@ -343,8 +344,7 @@ def sieve(
                 labels = label_components(arr, mask, connect)
                 vals = mm[(int(r.ty), int(r.tx))][labels].astype(arr.dtype)
                 new = np.where(mask, vals, arr)
-                out.append({"band": r.band, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
-                            "dtype": r.dtype, "payload": new.tobytes()})
+                out.append(tilecodec.tile_row(r.band, r.ty, r.tx, new))
             yield pd.DataFrame(out, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     return tiles.mapInPandas(_rewrite, TILE_SCHEMA)

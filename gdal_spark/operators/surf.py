@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA
 
 DESC_SIZE = 64
@@ -161,18 +162,9 @@ def integral_tiles(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> DataFra
         tyy = int(key[0])
         sh = min(ts, H - tyy * ts)
         strip = np.zeros((sh, W), dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            if int(r.band) != band or r.payload is None:
-                continue
-            t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-            strip[:, r.tx * ts : r.tx * ts + r.w] = t
-        cs = np.cumsum(strip, axis=1)
-        rows = []
-        for tx in range(spec.ntiles_x):
-            w = min(ts, W - tx * ts)
-            rows.append({"band": 1, "ty": tyy, "tx": tx, "h": sh, "w": w, "dtype": "float64",
-                         "payload": np.ascontiguousarray(cs[:, tx * ts : tx * ts + w]).tobytes()})
-        return pd.DataFrame(rows)
+        sel = pdf[(pdf["band"] == band) & pdf["payload"].notna()]
+        tilecodec.paste(strip, sel, np.zeros(len(sel), dtype=np.int64), sel["tx"].to_numpy() * ts)
+        return pd.DataFrame(tilecodec.cut(np.cumsum(strip, axis=1), ts, 1, tyy, 0))
 
     rowpass = tiles.groupBy("ty").applyInPandas(_rows, TILE_SCHEMA)
 
@@ -180,17 +172,8 @@ def integral_tiles(tiles: DataFrame, spec: RasterSpec, band: int = 1) -> DataFra
         txx = int(key[0])
         sw = min(ts, W - txx * ts)
         strip = np.zeros((H, sw), dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            strip[r.ty * ts : r.ty * ts + r.h, :] = np.frombuffer(
-                r.payload, dtype=np.float64
-            ).reshape(r.h, r.w)
-        cs = np.cumsum(strip, axis=0)
-        rows = []
-        for ty in range(spec.ntiles_y):
-            h = min(ts, H - ty * ts)
-            rows.append({"band": 1, "ty": ty, "tx": txx, "h": h, "w": sw, "dtype": "float64",
-                         "payload": np.ascontiguousarray(cs[ty * ts : ty * ts + h, :]).tobytes()})
-        return pd.DataFrame(rows)
+        tilecodec.paste(strip, pdf, pdf["ty"].to_numpy() * ts, np.zeros(len(pdf), dtype=np.int64))
+        return pd.DataFrame(tilecodec.cut(np.cumsum(strip, axis=0), ts, 1, 0, txx))
 
     return rowpass.groupBy("tx").applyInPandas(_cols, TILE_SCHEMA)
 
@@ -225,7 +208,7 @@ def surf_keypoints(
     for dy, dx in offs:
         part = I_df.select(
             (F.col("ty") + dy).alias("gty"), (F.col("tx") + dx).alias("gtx"),
-            "ty", "tx", "h", "w", "payload",
+            "ty", "tx", "h", "w", "dtype", "payload",
         ).filter(
             (F.col("gty") >= 0) & (F.col("gty") < spec.ntiles_y)
             & (F.col("gtx") >= 0) & (F.col("gtx") < spec.ntiles_x)
@@ -243,15 +226,7 @@ def surf_keypoints(
         wy0, wx0 = max(0, y0 - halo), max(0, x0 - halo)
         wy1, wx1 = min(H, y0 + th + halo), min(W, x0 + tw + halo)
         win = np.zeros((wy1 - wy0, wx1 - wx0), dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            ry, rx = int(r.ty) * ts, int(r.tx) * ts
-            t = np.frombuffer(r.payload, dtype=np.float64).reshape(r.h, r.w)
-            sy0, sx0 = max(ry, wy0), max(rx, wx0)
-            sy1, sx1 = min(ry + int(r.h), wy1), min(rx + int(r.w), wx1)
-            if sy1 > sy0 and sx1 > sx0:
-                win[sy0 - wy0 : sy1 - wy0, sx0 - wx0 : sx1 - wx0] = t[
-                    sy0 - ry : sy1 - ry, sx0 - rx : sx1 - rx
-                ]
+        tilecodec.paste(win, pdf, pdf["ty"].to_numpy() * ts - wy0, pdf["tx"].to_numpy() * ts - wx0)
         # det layers over own pixels +1 ring (global coords)
         ry = np.arange(max(0, y0 - 1), min(H, y0 + th + 1))
         rx = np.arange(max(0, x0 - 1), min(W, x0 + tw + 1))
@@ -388,7 +363,7 @@ def surf_descriptors(
     for dy, dx in offs:
         part = I_df.select(
             (F.col("ty") + dy).alias("gty"), (F.col("tx") + dx).alias("gtx"),
-            "ty", "tx", "h", "w", "payload",
+            "ty", "tx", "h", "w", "dtype", "payload",
         ).filter(
             (F.col("gty") >= 0) & (F.col("gty") < spec.ntiles_y)
             & (F.col("gtx") >= 0) & (F.col("gtx") < spec.ntiles_x)
@@ -415,15 +390,7 @@ def surf_descriptors(
         wy0, wx0 = max(0, y0 - pad), max(0, x0 - pad)
         wy1, wx1 = min(H, y0 + th + pad), min(W, x0 + tw + pad)
         win = np.zeros((wy1 - wy0, wx1 - wx0), dtype=np.float64)
-        for r in tdf.itertuples(index=False):
-            ry, rx = int(r.ty) * ts, int(r.tx) * ts
-            t = np.frombuffer(r.payload, dtype=np.float64).reshape(r.h, r.w)
-            sy0, sx0 = max(ry, wy0), max(rx, wx0)
-            sy1, sx1 = min(ry + int(r.h), wy1), min(rx + int(r.w), wx1)
-            if sy1 > sy0 and sx1 > sx0:
-                win[sy0 - wy0 : sy1 - wy0, sx0 - wx0 : sx1 - wx0] = t[
-                    sy0 - ry : sy1 - ry, sx0 - rx : sx1 - rx
-                ]
+        tilecodec.paste(win, tdf, tdf["ty"].to_numpy() * ts - wy0, tdf["tx"].to_numpy() * ts - wx0)
         rows = []
         for r in kpdf.itertuples(index=False):
             d = set_descriptor(

@@ -48,7 +48,8 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.geom.proj import WEB_MERCATOR_EXTENT, Pipeline
-from gdal_spark.operators.raster import RasterSpec, copy_word
+from gdal_spark.operators import tilecodec
+from gdal_spark.operators.raster import RasterSpec, copy_word, downsample2x
 
 TILE_EPSILON = 1e-3  # gdalalg_raster_tile.cpp:458
 
@@ -1168,16 +1169,17 @@ def raster_tile(
         alpha = None
         dst_dens = None  # renormalized dst density (alpha source), point kernels
 
+        # the source tiles' columns under the codec's names (the dst
+        # key moves aside), so a TileError names the source tile
+        src_names = {"sband": "band", "sty": "ty", "stx": "tx", "sh": "h", "sw": "w",
+                     "sdtype": "dtype", "spayload": "payload"}
+        tile_cols = [src_names.get(c, "dst_" + c) for c in pdf.columns]
+
         def _assemble_band(band):
-            win = np.zeros((wh, ww))
-            for _, r in pdf[pdf["sband"] == band].iterrows():
-                t = np.frombuffer(r.spayload, dtype=r.sdtype).reshape(r.sh, r.sw)
-                oy = int(r.sty) * sts - wy0
-                ox = int(r.stx) * sts - wx0
-                eh = min(int(r.sh), wh - oy)
-                ew = min(int(r.sw), ww - ox)
-                win[oy : oy + eh, ox : ox + ew] = t[:eh, :ew]
-            return win
+            sel = pdf[pdf["sband"] == band]
+            sel.columns = tile_cols
+            oy, ox = sel["ty"].to_numpy() * sts - wy0, sel["tx"].to_numpy() * sts - wx0
+            return tilecodec.paste(np.zeros((wh, ww)), sel, oy, ox)
 
         if joint_average:
             # EXCLUDED_VALUES / NODATA_VALUES_PCT_THRESHOLD: all bands
@@ -1203,9 +1205,7 @@ def raster_tile(
             for band in range(1, nbands + 1):
                 vals = outs[band - 1]
                 payload = copy_word(np.where(dvalid, vals, dst_nodata), src_spec.dtype)
-                out_rows.append(
-                    {"z": z, "tx": txx, "ty": tyy, "band": band, "dtype": src_spec.dtype, "payload": payload.tobytes()}
-                )
+                out_rows.append(tilecodec.web_row(z, txx, tyy, band, payload))
             alpha = dvalid
         for band in [] if joint_average else range(1, nbands + 1):
             win = _assemble_band(band)
@@ -1269,9 +1269,7 @@ def raster_tile(
                     dd = np.where(gvalid, dd, 0.0)
                     dst_dens = dd if dst_dens is None else np.maximum(dst_dens, dd)
             payload = copy_word(np.where(gvalid, vals, dst_nodata), src_spec.dtype)
-            out_rows.append(
-                {"z": z, "tx": txx, "ty": tyy, "band": band, "dtype": src_spec.dtype, "payload": payload.tobytes()}
-            )
+            out_rows.append(tilecodec.web_row(z, txx, tyy, band, payload))
             alpha = gvalid if alpha is None else (alpha | gvalid)
         if dst_dens is not None:
             # cutline + point kernel: alpha carries the renormalized
@@ -1280,16 +1278,7 @@ def raster_tile(
         else:
             # no cutline, or area resamplers (dfBandDensity = 1.0)
             alpha_payload = alpha.astype(np.uint8) * 255
-        out_rows.append(
-            {
-                "z": z,
-                "tx": txx,
-                "ty": tyy,
-                "band": alpha_band,
-                "dtype": "uint8",
-                "payload": alpha_payload.tobytes(),
-            }
-        )
+        out_rows.append(tilecodec.web_row(z, txx, tyy, alpha_band, alpha_payload))
         return pd.DataFrame(out_rows)
 
     base = joined.groupBy("z", "tx", "ty").applyInPandas(_warp, TILE_OUT_SCHEMA)
@@ -1358,9 +1347,9 @@ def _overview_rms_2x2(t: np.ndarray) -> np.ndarray:
 def overview_level(tiles: DataFrame, resampling: str = "average", tile_size: int = 256) -> DataFrame:
     """One pyramid level up: parent (z-1, tx//2, ty//2) from <=4
     children, each child 2x-downsampled into its quadrant.
-    NEAREST: src = 2*i (overview.cpp:127 int(0.5 + i*2) == 2i).
-    AVERAGE: integer (sum+2)/4 (overview.cpp:1425-1430); alpha band
-    averages too (GDAL averages alpha like data).
+    NEAREST / AVERAGE: raster.downsample2x (integer (sum+2)/4, floats
+    sum/4); the alpha band averages too (GDAL averages alpha like
+    data).
     MODE / RMS: see _overview_mode_2x2 / _overview_rms_2x2 (gdaladdo
     -r mode / rms). GAUSS (1-px cross-parent halo) lives in
     overview_gauss below."""
@@ -1378,32 +1367,16 @@ def overview_level(tiles: DataFrame, resampling: str = "average", tile_size: int
 
     def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
         z, txx, tyy, band = (int(key[0]), int(key[1]), int(key[2]), int(key[3]))
-        dt = pdf["dtype"].iloc[0]
-        out = np.zeros((tile_size, tile_size), dtype=dt)
-        for _, r in pdf.iterrows():
-            t = np.frombuffer(r["payload"], dtype=r["dtype"]).reshape(tile_size, tile_size)
-            if resampling == "near":
-                small = t[::2, ::2]
-            elif resampling == "mode":
+        out = np.zeros((tile_size, tile_size), dtype=pdf["dtype"].iloc[0])
+        for t, qy, qx in zip(tilecodec.decode_batch(pdf, tile_size), pdf["qy"].tolist(), pdf["qx"].tolist()):
+            if resampling == "mode":
                 small = _overview_mode_2x2(t)
             elif resampling == "rms":
                 small = _overview_rms_2x2(t)
             else:
-                s = (
-                    t[0::2, 0::2].astype(np.int64)
-                    + t[1::2, 0::2]
-                    + t[0::2, 1::2]
-                    + t[1::2, 1::2]
-                )
-                if np.issubdtype(np.dtype(dt), np.integer):
-                    small = ((s + 2) // 4).astype(dt)
-                else:
-                    small = (s / 4.0).astype(dt)
-            oy, ox = int(r.qy) * half, int(r.qx) * half
-            out[oy : oy + half, ox : ox + half] = small
-        return pd.DataFrame(
-            [{"z": z, "tx": txx, "ty": tyy, "band": band, "dtype": dt, "payload": out.tobytes()}]
-        )
+                small = downsample2x(t, resampling == "near")
+            out[qy * half : qy * half + half, qx * half : qx * half + half] = small
+        return pd.DataFrame([tilecodec.web_row(z, txx, tyy, band, out)])
 
     return child.groupBy("z", "tx", "ty", "band").applyInPandas(_merge, TILE_OUT_SCHEMA)
 
@@ -1424,12 +1397,11 @@ def overview_gauss(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
     shuffle). A parent with no halo row on a side treats that side as
     the raster edge (exactly the reference's chunk clamp); sparse
     pyramids therefore clip at missing neighbors, documented."""
-    half = tile_size // 2
     ts = tile_size
 
     def _halo_rows(r):
         """rows: (z-1, ptx, pty, band, dtype, role, qx, qy, payload)."""
-        t = np.frombuffer(r.payload, dtype=r.dtype).reshape(ts, ts)
+        t = tilecodec.decode_row(r, ts)
         z, tx, ty, band = int(r.z) - 1, int(r.tx), int(r.ty), int(r.band)
         out = [
             {"z": z, "tx": tx // 2, "ty": ty // 2, "band": band, "dtype": r.dtype,
@@ -1438,15 +1410,15 @@ def overview_gauss(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
         if ty % 2 == 0 and ty > 0:
             out.append({"z": z, "tx": tx // 2, "ty": ty // 2 - 1, "band": band,
                         "dtype": r.dtype, "role": 1, "qx": tx % 2, "qy": 0,
-                        "payload": np.ascontiguousarray(t[0, :]).tobytes()})
+                        "payload": tilecodec.encode(t[0, :])})
         if tx % 2 == 0 and tx > 0:
             out.append({"z": z, "tx": tx // 2 - 1, "ty": ty // 2, "band": band,
                         "dtype": r.dtype, "role": 2, "qx": 0, "qy": ty % 2,
-                        "payload": np.ascontiguousarray(t[:, 0]).tobytes()})
+                        "payload": tilecodec.encode(t[:, 0])})
         if ty % 2 == 0 and ty > 0 and tx % 2 == 0 and tx > 0:
             out.append({"z": z, "tx": tx // 2 - 1, "ty": ty // 2 - 1, "band": band,
                         "dtype": r.dtype, "role": 3, "qx": 0, "qy": 0,
-                        "payload": t[0:1, 0].tobytes()})
+                        "payload": tilecodec.encode(t[0:1, 0])})
         return out
 
     def _explode(batches):
@@ -1472,20 +1444,17 @@ def overview_gauss(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
         ar = 2 * ts + (1 if has_b else 0)
         ac = 2 * ts + (1 if has_r else 0)
         block = np.zeros((ar, ac), dtype=np.float64)
-        for _, r in pdf.iterrows():
-            role = int(r["role"])
+        for role, qy, qx, d, p in zip(pdf["role"].tolist(), pdf["qy"].tolist(), pdf["qx"].tolist(),
+                                      pdf["dtype"], pdf["payload"]):
+            key = (z, txx, tyy, band)
             if role == 0:
-                t = np.frombuffer(r["payload"], dtype=r["dtype"]).reshape(ts, ts)
-                block[int(r.qy) * ts : int(r.qy) * ts + ts,
-                      int(r.qx) * ts : int(r.qx) * ts + ts] = t
+                block[qy * ts : qy * ts + ts, qx * ts : qx * ts + ts] = tilecodec.decode(p, d, (ts, ts), key)
             elif role == 1:
-                row = np.frombuffer(r["payload"], dtype=r["dtype"])
-                block[2 * ts, int(r.qx) * ts : int(r.qx) * ts + ts] = row
+                block[2 * ts, qx * ts : qx * ts + ts] = tilecodec.decode(p, d, (ts,), key)
             elif role == 2:
-                col = np.frombuffer(r["payload"], dtype=r["dtype"])
-                block[int(r.qy) * ts : int(r.qy) * ts + ts, 2 * ts] = col
+                block[qy * ts : qy * ts + ts, 2 * ts] = tilecodec.decode(p, d, (ts,), key)
             elif role == 3 and has_b and has_r:
-                block[2 * ts, 2 * ts] = np.frombuffer(r["payload"], dtype=r["dtype"])[0]
+                block[2 * ts, 2 * ts] = tilecodec.decode(p, d, (1,), key)[0]
         # separable 1-2-1: rows then cols, with bottom/right clipping
         rs = np.zeros((ar, ts), dtype=np.float64)
         cx = np.full(ts, 4.0)
@@ -1506,9 +1475,6 @@ def overview_gauss(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
         from gdal_spark.operators.raster import copy_word
 
         res = copy_word(out / (cy[:, None] * cx[None, :]), dt)
-        return pd.DataFrame(
-            [{"z": z, "tx": txx, "ty": tyy, "band": band, "dtype": dt,
-              "payload": res.tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.web_row(z, txx, tyy, band, res)])
 
     return child.groupBy("z", "tx", "ty", "band").applyInPandas(_merge, TILE_OUT_SCHEMA)

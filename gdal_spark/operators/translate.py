@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, copy_word
 
 PIECE_SCHEMA = StructType(
@@ -112,7 +113,7 @@ def translate(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
+                t = tilecodec.decode_row(r)
                 # src tile's global pixel range
                 sy, sx = r.ty * sts, r.tx * sts
                 # dst index ranges whose (window incl. average span)
@@ -146,7 +147,7 @@ def translate(
                         rows.append(
                             {"band": r.band, "dty": dty, "dtx": dtx,
                              "sy0": a0, "sx0": b0, "h": piece.shape[0], "w": piece.shape[1],
-                             "dtype": r.dtype, "payload": piece.tobytes()}
+                             "dtype": r.dtype, "payload": tilecodec.encode(piece)}
                         )
             yield pd.DataFrame(rows, columns=[f.name for f in PIECE_SCHEMA.fields])
 
@@ -163,9 +164,7 @@ def translate(
         sy1 = int((pdf["sy0"] + pdf["h"]).max())
         sx1 = int((pdf["sx0"] + pdf["w"]).max())
         win = np.zeros((sy1 - sy0, sx1 - sx0), dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            p = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-            win[r.sy0 - sy0 : r.sy0 - sy0 + r.h, r.sx0 - sx0 : r.sx0 - sx0 + r.w] = p
+        tilecodec.paste(win, pdf, pdf["sy0"].to_numpy() - sy0, pdf["sx0"].to_numpy() - sx0)
         if resampling == "near":
             yi = _near_map(di, ry, yoff, ysize) - sy0
             xi = _near_map(dj, rx, xoff, xsize) - sx0
@@ -223,10 +222,7 @@ def translate(
                     raise ValueError(f"unsupported translate resampling {resampling!r}")
         if scale:
             out = out * scale[0] + scale[1]
-        return pd.DataFrame(
-            [{"band": band, "ty": dty, "tx": dtx, "h": h, "w": w,
-              "dtype": dspec.dtype, "payload": copy_word(out, dspec.dtype).tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(band, dty, dtx, copy_word(out, dspec.dtype))])
 
     return pieces.groupBy("band", "dty", "dtx").applyInPandas(_assemble, TILE_SCHEMA), dspec
 
@@ -266,7 +262,7 @@ def color_relief(
             for r in pdf.itertuples(index=False):
                 if r.band != band:
                     continue
-                v = _np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(_np.float64)
+                v = tilecodec.decode_row(r).astype(_np.float64)
                 # i = first ramp index with vals[i] >= v  (reference
                 # bisection post-condition)
                 i = _np.searchsorted(vals, v, side="left")
@@ -307,11 +303,7 @@ def color_relief(
                             ch = _np.where(below, cols[0, c], _np.where(above, cols[-1, c], interp))
                             ch = _np.where(exact_lo, cols[lo, c], _np.where(exact_hi, cols[hi, c], ch))
                             out[c] = ch
-                for c in range(4):
-                    rows.append(
-                        {"band": c + 1, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
-                         "dtype": "uint8", "payload": out[c].astype(_np.uint8).tobytes()}
-                    )
+                rows += [tilecodec.tile_row(c + 1, r.ty, r.tx, out[c], "uint8") for c in range(4)]
             yield _pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     return tiles.mapInPandas(_map, TILE_SCHEMA)
@@ -362,17 +354,10 @@ def nodata_to_alpha(
     def _alpha(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tyy, txx = int(key[0]), int(key[1])
         m = None
-        h = w = 0
-        for r in pdf.itertuples(index=False):
-            t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-            h, w = int(r.h), int(r.w)
-            this = t == np.asarray(nod[int(r.band) - 1], dtype=t.dtype)
+        for b, t in zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)):
+            this = t == np.asarray(nod[b - 1], dtype=t.dtype)
             m = this if m is None else (m & this)
-        alpha = np.where(m, 0, 255).astype(np.uint8)
-        return pd.DataFrame(
-            [{"band": alpha_band, "ty": tyy, "tx": txx, "h": h, "w": w,
-              "dtype": "uint8", "payload": alpha.tobytes()}]
-        )
+        return pd.DataFrame([tilecodec.tile_row(alpha_band, tyy, txx, np.where(m, 0, 255), "uint8")])
 
     alpha_tiles = tiles.groupBy("ty", "tx").applyInPandas(_alpha, TILE_SCHEMA)
     return tiles.unionByName(alpha_tiles)

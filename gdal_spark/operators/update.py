@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec
 
 
@@ -131,6 +132,7 @@ def raster_update(
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
+                key = (int(r["band"]), int(r["ty"]), int(r["tx"]))
                 if r["_dp"] is None:
                     # absent dst tile: init-valued canvas at its true
                     # (edge-clipped) shape
@@ -140,15 +142,11 @@ def raster_update(
                 else:
                     h, wd = int(r["h"]), int(r["w"])
                     dt = r["dtype"]
-                    dstv = np.frombuffer(r["_dp"], dtype=dt).reshape(h, wd)
-                wv = np.frombuffer(r["_wp"], dtype=r["_wdtype"]).reshape(ts, ts)[:h, :wd]
-                av = np.frombuffer(r["_alpha"], dtype=np.uint8).reshape(ts, ts)[:h, :wd]
+                    dstv = tilecodec.decode(r["_dp"], dt, (h, wd), key)
+                wv = tilecodec.decode(r["_wp"], r["_wdtype"], (ts, ts), key)[:h, :wd]
+                av = tilecodec.decode(r["_alpha"], "uint8", (ts, ts), key)[:h, :wd]
                 out = np.where(av > 0, wv.astype(dstv.dtype), dstv)
-                rows.append(
-                    {"band": int(r["band"]), "ty": int(r["ty"]), "tx": int(r["tx"]),
-                     "h": h, "w": wd, "dtype": str(dt),
-                     "payload": out.tobytes()}
-                )
+                rows.append(tilecodec.tile_row(*key, out))
             if rows:
                 yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
 

@@ -49,6 +49,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA
 
 
@@ -225,11 +226,9 @@ def _sector_masks(
     wx1 = int((txs * ts + pdf["w"].astype(int)).max())
     win = np.zeros((wy1 - wy0, wx1 - wx0))
     have = np.zeros((wy1 - wy0, wx1 - wx0), dtype=bool)
-    for r in pdf.itertuples(index=False):
-        t = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-        oy_t, ox_t = int(r.ty) * ts - wy0, int(r.tx) * ts - wx0
-        win[oy_t : oy_t + int(r.h), ox_t : ox_t + int(r.w)] = t
-        have[oy_t : oy_t + int(r.h), ox_t : ox_t + int(r.w)] = True
+    tilecodec.paste(win, pdf, tys * ts - wy0, txs * ts - wx0)
+    for oy_t, ox_t, h, w in zip(tys * ts - wy0, txs * ts - wx0, pdf["h"].astype(int), pdf["w"].astype(int)):
+        have[oy_t : oy_t + h, ox_t : ox_t + w] = True
     oz = float(win[oy - wy0, ox - wx0]) + float(observer_height)
     # this sector's target cells: angle-selected over the RECEIVED
     # region (the cone ∩ raster is covered by the received tiles)
@@ -254,10 +253,7 @@ def _sector_masks(
             h, w = spec.tile_shape(int(tyy), int(txx))
             mask = np.zeros((h, w), dtype=np.uint8)
             mask[gy[m] - int(tyy) * ts, gx[m] - int(txx) * ts] = vis[m]
-            rows.append(
-                {"band": 1, "ty": int(tyy), "tx": int(txx), "h": h, "w": w,
-                 "dtype": "uint8", "payload": mask.tobytes()}
-            )
+            rows.append(tilecodec.tile_row(1, int(tyy), int(txx), mask))
     return rows
 
 
@@ -267,14 +263,8 @@ def _combine_tiles(masks: DataFrame, out_dtype: str) -> DataFrame:
     counts observers)."""
 
     def _sum(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
-        acc = np.zeros((h, w), dtype=np.int64)
-        for p, dt in zip(pdf["payload"], pdf["dtype"]):
-            acc += np.frombuffer(p, dtype=dt).reshape(h, w)
-        return pd.DataFrame(
-            [{"band": 1, "ty": int(key[0]), "tx": int(key[1]), "h": h, "w": w,
-              "dtype": out_dtype, "payload": acc.astype(out_dtype).tobytes()}]
-        )
+        acc = sum(t.astype(np.int64) for t in tilecodec.decode_batch(pdf))
+        return pd.DataFrame([tilecodec.tile_row(1, int(key[0]), int(key[1]), acc, out_dtype)])
 
     return masks.groupBy("ty", "tx").applyInPandas(_sum, TILE_SCHEMA)
 

@@ -56,6 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA
 
 # atmospheric refraction default (viewshed_types.h:79) over WGS84
@@ -375,10 +376,7 @@ def viewshed_sweep(
     # a SPARSE DEM table = init-valued, the repo-wide convention)
     obs_rows = dem_band.filter((F.col("tx") == otx) & (F.col("ty") == oty)).collect()
     if obs_rows:
-        obs_row = obs_rows[0]
-        obs_tile = np.frombuffer(obs_row["payload"], dtype=obs_row["dtype"]).reshape(
-            obs_row["h"], obs_row["w"]
-        )
+        obs_tile = tilecodec.decode_row(obs_rows[0])
         zground = float(obs_tile[oy - oty * ts, ox - otx * ts])
     else:
         zground = float(spec.init or 0.0)
@@ -399,7 +397,7 @@ def viewshed_sweep(
         seed = np.full(sh, spec.init or 0.0, dtype=np.float64)
         seed_df = spark.createDataFrame(
             [(otx, oty, "dem", int(sh[0]), int(sh[1]), "float64",
-              bytearray(seed.tobytes()))],
+              bytearray(tilecodec.encode(seed)))],
             "tx int, ty int, kind string, h int, w int, pdtype string, "
             "payload binary",
         )
@@ -411,7 +409,7 @@ def viewshed_sweep(
         dem_rows = pdf[pdf["kind"] == "dem"]
         if len(dem_rows):
             r = dem_rows.iloc[0]
-            dt = np.frombuffer(r["payload"], dtype=r["pdtype"]).reshape(r["h"], r["w"])
+            dt = tilecodec.decode(r["payload"], r["pdtype"], (int(r["h"]), int(r["w"])), (tyy, txx))
         else:
             # halo addressed to a tile ABSENT from a sparse DEM table:
             # synthesize the init-valued canvas instead of IndexError —
@@ -422,8 +420,8 @@ def viewshed_sweep(
         halos = {"n": None, "s": None, "w": None, "e": None}
         corners: dict = {}
         for _, hr in pdf[pdf["kind"] != "dem"].iterrows():
-            arr = np.frombuffer(hr["payload"], dtype=np.float64)
             k = hr["kind"]
+            arr = tilecodec.decode(hr["payload"], "float64", (int(hr["w"]),), (tyy, txx, k))
             if k in halos:
                 halos[k] = arr
             elif k.startswith("c"):
@@ -435,14 +433,14 @@ def viewshed_sweep(
         )
         out = [
             {"tx": txx, "ty": tyy, "kind": "vis", "h": hh, "w": ww,
-             "payload": vis.tobytes()}
+             "payload": tilecodec.encode(vis)}
         ]
 
         def emit(to_tx, to_ty, kind, arr):
             if 0 <= to_tx < ntx and 0 <= to_ty < nty:
                 out.append({"tx": to_tx, "ty": to_ty, "kind": kind,
                             "h": 1, "w": int(arr.size),
-                            "payload": np.ascontiguousarray(arr, dtype=np.float64).tobytes()})
+                            "payload": tilecodec.encode(arr, np.float64)})
 
         if tyy <= oty:
             emit(txx, tyy - 1, "s", cur[0, :])

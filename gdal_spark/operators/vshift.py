@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, TILE_SCHEMA, copy_word, materialize_full
 from gdal_spark.operators.tiles import warp_bilinear, warp_cubic, warp_nearest
 
@@ -72,7 +73,7 @@ def apply_vertical_shift_grid(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                v = np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(np.float64)
+                v = tilecodec.decode_row(r).astype(np.float64)
                 py, px = np.mgrid[0 : r.h, 0 : r.w]
                 gpx = (px + int(r.tx) * ts + 0.5).astype(np.float64)
                 gpy = (py + int(r.ty) * ts + 0.5).astype(np.float64)
@@ -95,9 +96,7 @@ def apply_vertical_shift_grid(
                 out = (v * fs + out) / fd
                 if src_nodata is not None:
                     out = np.where(v == src_nodata, v, out)
-                rows.append({"band": int(r.band), "ty": int(r.ty), "tx": int(r.tx),
-                             "h": int(r.h), "w": int(r.w), "dtype": out_dtype,
-                             "payload": copy_word(out, out_dtype).tobytes()})
+                rows.append(tilecodec.tile_row(int(r.band), int(r.ty), int(r.tx), copy_word(out, out_dtype)))
             yield pd.DataFrame(rows)
 
     return src_tiles.mapInPandas(_apply, TILE_SCHEMA)

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import RasterSpec, rasterize
 
 PARTIAL_SCHEMA = StructType(
@@ -71,8 +72,9 @@ def zonal_stats_raster(value_tiles: DataFrame, zone_tiles: DataFrame, band: int 
         for pdf in batches:
             outs = []
             for r in pdf.itertuples(index=False):
-                vals = np.frombuffer(r.vpayload, dtype=r.vdtype).reshape(r.vh, r.vw).astype(np.float64).ravel()
-                zones = np.frombuffer(r.zpayload, dtype=r.zdtype).astype(np.int64)
+                shape, key = (int(r.vh), int(r.vw)), (band, r.ty, r.tx)
+                vals = tilecodec.decode(r.vpayload, r.vdtype, shape, key).astype(np.float64).ravel()
+                zones = tilecodec.decode(r.zpayload, r.zdtype, shape, key).astype(np.int64).ravel()
                 m = zones > 0
                 if not m.any():
                     continue

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from gdal_spark.datagen import ZONE_EAS, ZONE_WKTS, docs_table, geom_cols_sql, zones_table
 from gdal_spark.fixtures import BYTE20_SPEC
+from gdal_spark.operators import tilecodec
 from gdal_spark.operators.knn import knn_broadcast
 from gdal_spark.operators.raster import TILE_SCHEMA, as_features, checksum_col, rasterize
 from gdal_spark.operators.spatial import extract_geom, spatial_filter, spatial_join
@@ -1738,13 +1739,7 @@ def _rgb20_tiles(spark):
     ts = BYTE20_SPEC.tile_size
     rows = []
     for band, a in ((1, r), (2, g), (3, b)):
-        for ty in range(BYTE20_SPEC.ntiles_y):
-            for tx in range(BYTE20_SPEC.ntiles_x):
-                t = a[ty * ts : (ty + 1) * ts, tx * ts : (tx + 1) * ts]
-                rows.append(
-                    {"band": band, "ty": ty, "tx": tx, "h": t.shape[0], "w": t.shape[1],
-                     "dtype": "uint8", "payload": t.tobytes()}
-                )
+        rows += tilecodec.cut(a, ts, band)
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
@@ -1836,15 +1831,7 @@ def q_pansharpen(spark, sf_dir):
         width=10, height=10, gt=(440720.0, 120.0, 0.0, 3751320.0, 0.0, -120.0),
         dtype="uint8", tile_size=8,
     )
-    rows = []
-    for band in (1, 2):
-        for ty in range((10 + 7) // 8):
-            for tx in range((10 + 7) // 8):
-                t = ms_arr[ty * 8 : (ty + 1) * 8, tx * 8 : (tx + 1) * 8]
-                rows.append(
-                    {"band": band, "ty": ty, "tx": tx, "h": t.shape[0], "w": t.shape[1],
-                     "dtype": "uint8", "payload": t.tobytes()}
-                )
+    rows = tilecodec.cut(ms_arr, 8, 1) + tilecodec.cut(ms_arr, 8, 2)
     ms = spark.createDataFrame(_pd.DataFrame(rows))
     out = pansharpen(
         byte20_tiles(spark), ms, BYTE20_SPEC, ms_spec, weights=[0.25, 0.75],
@@ -2224,9 +2211,7 @@ def q_proximity(spark, sf_dir):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = _np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w)
-                rows.append({"band": 1, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
-                             "dtype": "uint8", "payload": (t >= 200).astype(_np.uint8).tobytes()})
+                rows.append(tilecodec.tile_row(1, r.ty, r.tx, tilecodec.decode_row(r) >= 200, "uint8"))
             yield _pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     from gdal_spark.operators.raster import TILE_SCHEMA
@@ -2272,15 +2257,12 @@ def q_fill_nodata(spark, sf_dir):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = _np.frombuffer(r.payload, dtype=r.dtype).reshape(r.h, r.w).astype(_np.float64)
+                t = tilecodec.decode_row(r).astype(_np.float64)
                 oy = r.ty * BYTE20_SPEC.tile_size
                 for i in range(r.h):
                     if (oy + i) % 5 != 0:
                         t[i, :] = NOD
-                rows.append(
-                    {"band": 1, "ty": r.ty, "tx": r.tx, "h": r.h, "w": r.w,
-                     "dtype": "float64", "payload": t.tobytes()}
-                )
+                rows.append(tilecodec.tile_row(1, r.ty, r.tx, t))
             yield _pd.DataFrame(rows, columns=["band", "ty", "tx", "h", "w", "dtype", "payload"])
 
     masked = byte20_tiles(spark).mapInPandas(_stripe, TILE_SCHEMA)
@@ -3078,10 +3060,7 @@ def q_mosaic_lastwins(spark, sf_dir):
                 if gy < 10:
                     seg = BYTE20[gy, tx * ts : tx * ts + w].astype(_np.int64)
                     t[yy, :] = ((seg + 7) % 256).astype(_np.uint8)
-            rows.append(
-                {"band": 1, "ty": ty, "tx": tx, "h": h, "w": w,
-                 "dtype": "uint8", "payload": t.tobytes()}
-            )
+            rows.append(tilecodec.tile_row(1, ty, tx, t))
     b = spark.createDataFrame(_pd.DataFrame(rows))
     out = mosaic([byte20_tiles(spark), b], nodata=0.0, method="last")
     pix = as_features(out, BYTE20_SPEC)
@@ -5508,7 +5487,7 @@ def q_tile_reference_checksum(spark, sf_dir):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype="uint8").reshape(256, 256)
+                t = tilecodec.decode_row(r, 256)
                 rows.append({
                     "z": int(r.z), "tx": int(r.tx), "ty": int(r.ty),
                     "band": int(r.band), "checksum": int(checksum_array(t)),
@@ -5642,13 +5621,12 @@ def _nearblack_input_tiles(spark, sf_dir):
                 if r.payload is None:
                     c = np.zeros((h, w), dtype=np.int32)
                 else:
-                    c = np.frombuffer(r.payload, dtype=r.dtype).reshape(h, w).astype(np.int32)
+                    c = tilecodec.decode(r.payload, r.dtype, (h, w), (ty, tx)).astype(np.int32)
                 gx = tx * ts + np.arange(w, dtype=np.int64)[None, :]
                 gy = ty * ts + np.arange(h, dtype=np.int64)[:, None]
                 bg = 250 + ((gx * 3 + gy * 7) % 6)
                 v = np.where(c > 0, np.minimum(40 + 13 * c, 200), bg).astype(np.uint8)
-                rows.append({"band": 1, "ty": ty, "tx": tx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": v.tobytes()})
+                rows.append(tilecodec.tile_row(1, ty, tx, v))
             yield pd.DataFrame(rows)
 
     return j.mapInPandas(_mk, TILE_SCHEMA)
@@ -6014,7 +5992,7 @@ def _vshift_grid_tiles(spark):
     gx, gy = np.meshgrid(np.arange(5), np.arange(5))
     grid = (16 * ((gx * 5 + gy * 3) % 8)).astype(np.float64)
     tiles = spark.createDataFrame(
-        [(1, 0, 0, 5, 5, "float64", grid.tobytes())],
+        [(1, 0, 0, 5, 5, "float64", tilecodec.encode(grid))],
         "band int, ty int, tx int, h int, w int, dtype string, payload binary",
     )
     return tiles, gspec
@@ -6246,7 +6224,7 @@ def q_overview_mode_rms(spark, sf_dir):
             for pdf in batches:
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    t = np.frombuffer(r.payload, dtype=r.dtype).reshape(20, 20)
+                    t = tilecodec.decode_row(r, 20)
                     for py in range(10):
                         for px in range(10):
                             rows.append({"py": py, "px": px, colname: int(t[py, px])})
@@ -6374,7 +6352,7 @@ def q_overview_gauss(spark, sf_dir):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                t = np.frombuffer(r.payload, dtype=r.dtype).reshape(5, 5)
+                t = tilecodec.decode_row(r, 5)
                 for y in range(5):
                     for x in range(5):
                         rows.append({"py": int(r.ty) * 5 + y, "px": int(r.tx) * 5 + x,
@@ -6406,9 +6384,8 @@ def _nearblack_burn_dense(spark, sf_dir):
                 if r.payload is None:
                     c = np.zeros((h, w), dtype=np.uint8)
                 else:
-                    c = np.frombuffer(r.payload, dtype=r.dtype).reshape(h, w).astype(np.uint8)
-                rows.append({"band": 1, "ty": ty, "tx": tx, "h": h, "w": w,
-                             "dtype": "uint8", "payload": c.tobytes()})
+                    c = tilecodec.decode(r.payload, r.dtype, (h, w), (ty, tx)).astype(np.uint8)
+                rows.append(tilecodec.tile_row(1, ty, tx, c))
             yield pd.DataFrame(rows)
 
     return j.mapInPandas(_mk, TILE_SCHEMA)
@@ -6611,8 +6588,7 @@ def _surf_image_tiles(spark, sf_dir):
                 for cx, cy in centers:
                     d2 = (gx - cx) ** 2 + (gy - cy) ** 2
                     v += np.floor(1800.0 / (9 + d2))
-                rows.append({"band": 1, "ty": ty, "tx": tx, "h": 32, "w": 32,
-                             "dtype": "float64", "payload": v.tobytes()})
+                rows.append(tilecodec.tile_row(1, ty, tx, v))
             yield pd.DataFrame(rows)
 
     sk = spark.range(4).selectExpr("cast(id div 2 as int) as ty", "cast(id % 2 as int) as tx")
@@ -6775,8 +6751,7 @@ def _surf_pair_tiles(spark, sf_dir):
                     for cx, cy in centers:
                         d2 = (gx - cx) ** 2 + (gy - cy) ** 2
                         v += np.floor(1800.0 / (9 + d2))
-                    rows.append({"band": 1, "ty": ty, "tx": tx, "h": 32, "w": 32,
-                                 "dtype": "float64", "payload": v.tobytes()})
+                    rows.append(tilecodec.tile_row(1, ty, tx, v))
                 yield pd.DataFrame(rows)
 
         return _f
@@ -6940,10 +6915,7 @@ def q_blend_multiply(spark, sf_dir):
                 arr = np.zeros(1024, dtype=np.uint8)
                 vals = ((pdf["id"].to_numpy(np.int64) * m + c) % 256).astype(np.uint8)
                 arr[pdf["pi"].to_numpy(np.int64)] = vals
-                rows.append(
-                    {"band": b, "ty": ty, "tx": 0, "h": 32, "w": 32,
-                     "dtype": "uint8", "payload": arr.tobytes()}
-                )
+                rows.append(tilecodec.tile_row(b, ty, 0, arr.reshape(32, 32)))
             return pd.DataFrame(rows)
 
         return _f
@@ -6960,7 +6932,7 @@ def q_blend_multiply(spark, sf_dir):
         for pdf in batches:
             out = {"ty": [], "pi": [], "band": [], "val": []}
             for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.payload, dtype=np.uint8)
+                arr = tilecodec.decode_row(row).ravel()
                 out["ty"].append(np.full(arr.size, row.ty, dtype=np.int64))
                 out["pi"].append(np.arange(arr.size, dtype=np.int64))
                 out["band"].append(np.full(arr.size, row.band, dtype=np.int64))
@@ -7481,7 +7453,7 @@ def q_raster_update(spark, sf_dir):
     src_spec = RasterSpec(width=10, height=10, gt=sgt, dtype="uint8", nbands=1, tile_size=16)
     arr = (np.arange(100, dtype=np.uint8).reshape(10, 10) * 2 + 3) % 251
     src = spark.createDataFrame(
-        [(1, 0, 0, 10, 10, "uint8", bytes(arr.tobytes()))],
+        [(1, 0, 0, 10, 10, "uint8", tilecodec.encode(arr))],
         "band int, ty int, tx int, h int, w int, dtype string, payload binary",
     )
     out = raster_update(byte20_tiles(spark), BYTE20_SPEC, src, src_spec, Pipeline())
@@ -7581,7 +7553,7 @@ def q_mdim_mosaic(spark, sf_dir):
                 ci = list(r["chunk"])
                 h = min((ci[0] + 1) * cy, out_spec.dims[0][1]) - ci[0] * cy
                 w = min((ci[1] + 1) * cx, out_spec.dims[1][1]) - ci[1] * cx
-                block = np.frombuffer(r["payload"], dtype=np.float64).reshape(h, w)
+                block = tilecodec.decode(r["payload"], "float64", (h, w), ci)
                 for yy in range(h):
                     for xx in range(w):
                         rows["y"].append(ci[0] * cy + yy)
@@ -7649,7 +7621,7 @@ def q_mdim_reproject(spark, sf_dir):
                 ci = list(r["chunk"])
                 h = min((ci[0] + 1) * cy, out_spec.dims[0][1]) - ci[0] * cy
                 w = min((ci[1] + 1) * cx, out_spec.dims[1][1]) - ci[1] * cx
-                block = np.frombuffer(r["payload"], dtype=np.float64).reshape(h, w)
+                block = tilecodec.decode(r["payload"], "float64", (h, w), ci)
                 for yy in range(h):
                     for xx in range(w):
                         rows["y"].append(ci[0] * cy + yy)
@@ -7702,7 +7674,7 @@ def q_mdim_transpose(spark, sf_dir):
             for _, r in pdf.iterrows():
                 ci = list(r["chunk"])
                 shape = out_spec.chunk_shape(ci)
-                block = np.frombuffer(r["payload"], dtype=np.float64).reshape(shape)
+                block = tilecodec.decode(r["payload"], "float64", tuple(shape), ci)
                 for aa in range(shape[0]):
                     for bb in range(shape[1]):
                         for cc2 in range(shape[2]):
@@ -7791,7 +7763,7 @@ def q_pixel_info(spark, sf_dir):
             h, w = spec.tile_shape(ty, tx)
             oy, ox = ty * spec.tile_size, tx * spec.tile_size
             rows.append((1, ty, tx, h, w, "uint8",
-                         bytes(arr[oy:oy + h, ox:ox + w].tobytes())))
+                         tilecodec.encode(arr[oy:oy + h, ox:ox + w])))
     tiles = spark.createDataFrame(
         rows, "band int, ty int, tx int, h int, w int, dtype string, payload binary"
     )
@@ -8046,7 +8018,7 @@ def q_overview_refresh(spark, sf_dir):
     def tiles(a):
         rows = [
             (2, ty, tx, 1, "uint8",
-             bytes(a[ty * TS:(ty + 1) * TS, tx * TS:(tx + 1) * TS].tobytes()))
+             tilecodec.encode(a[ty * TS:(ty + 1) * TS, tx * TS:(tx + 1) * TS]))
             for ty in range(N // TS) for tx in range(N // TS)
         ]
         return spark.createDataFrame(
@@ -8062,7 +8034,7 @@ def q_overview_refresh(spark, sf_dir):
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                a = np.frombuffer(r.payload, dtype=r.dtype)
+                a = tilecodec.decode_row(r, TS)
                 out.append({"ty": int(r.ty), "tx": int(r.tx), "sum_v": int(a.sum())})
             yield pd.DataFrame(out, columns=["ty", "tx", "sum_v"])
 
@@ -9087,10 +9059,8 @@ def q_raster_create(spark, sf_dir):
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = [
-                int(np.frombuffer(p, dtype=np.uint8).astype(np.int64).sum())
-                for p in pdf["payload"]
-            ]
+            # the sum of the payload's raw bytes, whatever its dtype
+            vals = [int(t.view(np.uint8).astype(np.int64).sum()) for t in tilecodec.decode_batch(pdf)]
             out = pdf[["band", "h", "w"]].copy()
             out["px_sum"] = np.asarray(vals, dtype=np.int64)
             yield out
@@ -9433,7 +9403,7 @@ def q_dataset_check(spark, sf_dir):
     rows = []
     for i, _lang in enumerate(langs):
         for band in (1, 2):
-            pay = np.full(32 * 32, (i + band) % 256, dtype=np.uint8).tobytes()
+            pay = tilecodec.encode(np.full((32, 32), (i + band) % 256, dtype=np.uint8))
             rows.append((band, 0, i, 32, 32, "uint8", pay))
     write_snapshot(
         spark.createDataFrame(rows, TILE_SCHEMA), str(base / "ras"),

@@ -162,3 +162,31 @@ class TestScanPruning:
         for frag in ("GreaterThanOrEqual(tx,2)", "LessThanOrEqual(tx,5)",
                      "GreaterThanOrEqual(ty,0)", "LessThanOrEqual(ty,3)"):
             assert frag in pushed, (frag, pushed)
+
+
+class TestOverviewAverage:
+    def test_float_average_keeps_fractions(self, spark):
+        # a float band of 0.5 must average to 0.5 (GDAL), not truncate
+        # the top-left pixel of each 2x2 block to 0 (0.375)
+        a = np.full((N, N), 0.5, dtype=np.float32)
+        rows = [
+            (2, ty, tx, 1, "float32", a[ty * TS : (ty + 1) * TS, tx * TS : (tx + 1) * TS].tobytes())
+            for ty in range(N // TS) for tx in range(N // TS)
+        ]
+        tiles = spark.createDataFrame(rows, "z int, ty int, tx int, band int, dtype string, payload binary")
+        got = _collect_map(overview_level(tiles, resampling="average", tile_size=TS))
+        assert len(got) == (N // TS // 2) ** 2
+        for payload in got.values():
+            assert np.array_equal(np.frombuffer(payload, np.float32), np.full(TS * TS, 0.5, np.float32))
+
+    def test_integer_average_rounds_half_up(self, spark):
+        # (sum + 2) // 4 in integers: 1+1+1+2 = 5 -> 1, 1+2+2+2 = 7 -> 2
+        a = np.ones((N, N), dtype=np.uint8)
+        a[1::2, 1::2] = 2
+        a[:, : N // 2][0::2, 1::2] = 2
+        a[:, : N // 2][1::2, 0::2] = 2
+        got = overview_level(_tiles(spark, a), resampling="average", tile_size=TS)
+        full = np.zeros((N // 2, N // 2), dtype=np.uint8)
+        for (_, ty, tx, _), p in _collect_map(got).items():
+            full[ty * TS : (ty + 1) * TS, tx * TS : (tx + 1) * TS] = np.frombuffer(p, np.uint8).reshape(TS, TS)
+        assert (full[:, : N // 4] == 2).all() and (full[:, N // 4 :] == 1).all()
