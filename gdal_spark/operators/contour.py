@@ -192,7 +192,7 @@ def contour_polygons(
     )
     ts = spec.tile_size
 
-    def _local(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _local(key, pdf):
         _, tyy, txx = int(key[0]), int(key[1]), int(key[2])
         asm = _ext_grid(pdf, tyy, txx, spec)
         if asm is None:
@@ -347,7 +347,7 @@ def contour(
     lv = list(levels)
     halo = _halo_explode(tiles.filter(F.col("band") == band), 1)
 
-    def _local(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _local(key, pdf):
         _, tyy, txx = int(key[0]), int(key[1]), int(key[2])
         asm = _ext_grid(pdf, tyy, txx, spec)
         if asm is None:
@@ -371,7 +371,7 @@ def contour(
 
     local = halo.groupBy("band", "ty", "tx").applyInPandas(_local, SEG_SCHEMA)
 
-    def _stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _stitch(key, pdf):
         level = float(key[0])
         lines = []
         for wkt in pdf["wkt"]:

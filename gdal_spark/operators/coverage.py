@@ -218,7 +218,7 @@ def simplify_coverage(
         [StructField("fid", LongType()), StructField(wkt_col, StringType())]
     )
 
-    def _run(kv, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _run(kv, pdf):
         pdf = pdf.reset_index(drop=True)
         batch, errs = parse_wkt(pdf["_wkt"], return_errors=True)
         polys = []
@@ -342,7 +342,7 @@ def clean_coverage(
         [StructField("fid", LongType()), StructField(wkt_col, StringType())]
     )
 
-    def _run(kv, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _run(kv, pdf):
         pdf = pdf.reset_index(drop=True)
         batch, errs = parse_wkt(pdf["_wkt"], return_errors=True)
         polys, fids = [], []

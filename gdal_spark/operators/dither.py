@@ -129,7 +129,7 @@ def color_histogram(
     GDALComputeMedianCutPCT)."""
     shift = 8 - bits
 
-    def _explode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _explode(key, pdf):
         chans = dict(zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)))
         if not all(b in chans for b in bands):
             return pd.DataFrame({"r": pd.array([], dtype="int64"), "g": pd.array([], dtype="int64"), "b": pd.array([], dtype="int64")})
@@ -239,7 +239,7 @@ def pct_map_tiles(
     """Per-tile parallel nearest-color mapping (the bDither=FALSE path
     of GDALDitherRGB2PCT) -> single-band uint8 index tiles."""
 
-    def _map(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _map(key, pdf):
         ty, tx = int(key[0]), int(key[1])
         chans = dict(zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)))
         r, g, b = (chans[x] for x in bands)

@@ -165,7 +165,7 @@ def fill_nodata(
     # NaN nodata is a first-class convention: validity uses isnan then
     # (NaN != NaN would otherwise mark every pixel valid silently)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         band, tyy, txx = int(key[0]), int(key[1]), int(key[2])
         asm = halo_window(pdf, halo, spec, tyy, txx, nodata)
         if asm is None:

@@ -258,7 +258,7 @@ def focal_apply(
         raise ValueError("edges='interpol'/'nodata' require halo=1 (3x3 kernels)")
     exploded = _halo_explode(tiles, halo)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         band, tyy, txx = int(key[0]), int(key[1]), int(key[2])
         asm = assemble_padded(pdf, halo, spec, tyy, txx)
         if asm is None:  # pure-halo key (tile outside raster): skip

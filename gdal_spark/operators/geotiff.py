@@ -145,7 +145,7 @@ def downsample_level(
 
     fill = float(src_spec.init)
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(key, pdf):
         band, ptx, pty = int(key[0]), int(key[1]), int(key[2])
         dt = pdf["dtype"].iloc[0]
         # source region this parent covers, in source pixels; absent

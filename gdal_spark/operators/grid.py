@@ -236,7 +236,7 @@ def _linear_grid(
     )
     exploded = exploded.unionByName(all_keys)
 
-    def _tile_local(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _tile_local(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         pdf = pdf[~pdf["z"].isna()].sort_values(["x", "y", "z"])
         cs = pdf[["x", "y"]].to_numpy(np.float64)
@@ -453,7 +453,7 @@ def _grid_impl(
             rx, ry = dx, dy
         return r2sq * rx * rx + r1sq * ry * ry <= r12sq
 
-    def _grid(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _grid(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         h, w = spec.tile_shape(tyy, txx)
         # cell centers in world coords (pixel centers: +0.5 convention)
@@ -557,7 +557,7 @@ def _grid_impl(
         )
         return ranks
 
-    def _grid_select(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _grid_select(key, pdf):
         """Per-cell nearest-k / per-quadrant selection kernel
         (invdistnn, *PerQuadrant variants, average_distance_pts):
         cell-chunked (npts x cells) distance matrices instead of the
@@ -786,7 +786,7 @@ def interpolate_at_points(
 
         pieces = _halo_explode(t, 1)
 
-        def _sample_padded(key, pieces_pdf: pd.DataFrame, pts_pdf: pd.DataFrame) -> pd.DataFrame:
+        def _sample_padded(key, pieces_pdf, pts_pdf):
             empty = pd.DataFrame(
                 {"pid": pd.array([], dtype="int64"), "value": pd.array([], dtype="float64")}
             )

@@ -99,7 +99,7 @@ def line_of_sight(
         ]
     )
 
-    def _check(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _check(key, pdf):
         rows = []
         have = pdf["payload"].notna()
         if have.any():

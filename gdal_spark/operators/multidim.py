@@ -178,7 +178,7 @@ def slice_array(
     pieces = pruned.mapInPandas(_pieces, PIECE)
     new_sizes = [r[1] - r[0] for r in ranges]
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         ck = [int(v) for v in key[0]]
         shape = tuple(
             min(chunks[d], new_sizes[d] - ck[d] * chunks[d]) for d in range(ndim)
@@ -447,7 +447,7 @@ def mdim_mosaic(
     )
     pieces = pieces.unionByName(seeds)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         ci = [int(v) for v in pdf["chunk"].iloc[0]]
         shape = [
             min((ci[d] + 1) * out_chunks[d], out_size[d]) - ci[d] * out_chunks[d]

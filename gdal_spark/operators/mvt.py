@@ -213,7 +213,7 @@ def mvt_tiles(
 
     buf = 256.0 / extent  # tile-fraction clip buffer (mvt convention)
 
-    def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _encode(key, pdf):
         from gdal_spark.geom.overlay import clip_line, overlay
         from gdal_spark.geom.predicates import points_in_rect
 

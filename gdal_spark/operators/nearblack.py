@@ -36,17 +36,20 @@ then the same two again for the bottom-up pass (which by construction
 needs the materialized intermediate raster). The per-column count
 state that the reference threads between its vertical and horizontal
 checks travels as a band-0 uint8 sidecar tile (value capped at
-max_non_black+1 — the only distinctions the horizontal check reads are
-==0, <=max, >max). Shuffle volume per stage == raster bytes (+1 band
+max_non_black+1 — the horizontal check reads the count itself up to
+max and only ">max" beyond it). Shuffle volume per stage == raster bytes (+1 band
 of sidecar); strip memory = tile_size x max(W, H) x (nbands + 2)
-bytes per task. Inside a strip everything vectorizes across the
-perpendicular axis: the vertical scan iterates rows with
-width-vectors, the horizontal scan iterates columns with
-height-vector state machines — O(cells) total, no per-pixel Python.
-For rasters whose full line exceeds a strip task, the per-pixel state
-is 2..max+2 values, so line segments compose associatively via
-per-segment (state -> state) transition tables — same future-work
-note as proximity.py's parabola-envelope merge.
+bytes per task, plus 11 bytes a pixel of horizontal-scan state.
+Inside a strip nothing loops per pixel or per row. The vertical check
+is one cumulative sum down the strip: a column's count only grows
+until it passes max_non_black, so the capped count is the capped
+cumulative non-black count. The horizontal check steps every row's
+state machine (testing with run counter 0..max, or dormant) one
+column at a time through a precomputed transition table indexed by
+state + pixel key: one add and one gather per column, O(cells) total. For rasters whose full line exceeds a strip task,
+the per-row state takes max+2 values, so line segments compose
+associatively via per-segment (state -> state) transition tables —
+same future-work note as proximity.py's parabola-envelope merge.
 """
 
 from __future__ import annotations
@@ -60,6 +63,7 @@ from gdal_spark.operators import tilecodec
 from gdal_spark.operators.raster import TILE_SCHEMA, RasterSpec
 
 _COUNT_BAND = 0  # sidecar band id carrying panLastLineCounts
+_KEYS = 512  # horizontal-scan pixel keys: column count (< 256), + 256 if black
 
 
 def _default_colors(white: bool, nbands: int) -> list[tuple[int, ...]]:
@@ -100,30 +104,49 @@ def _vscan(
     bottom_up: bool,
 ) -> np.ndarray:
     """In-place vertical check over a (nbands, H, w) strip; returns the
-    (H, w) uint8 count sidecar (state AFTER each row's update)."""
+    (H, w) uint8 count sidecar (state AFTER each row's update).
+
+    A column's count grows by one per non-black pixel until it passes
+    max_nb and then freezes at max_nb + 1, so after row r it is
+    min(C[r], max_nb + 1), with C the cumulative non-black count in
+    scan order. The first scanned row weighs max_nb + 1: a non-black
+    pixel there terminates its column outright (nearblack_lib.cpp:
+    611-617; at max_nb = 0 that is the plain weight 1). A pixel is
+    replaced iff C[r] <= max_nb."""
     nb_, H, w = arr.shape
-    counts = np.zeros(w, dtype=np.int32)
-    out_counts = np.empty((H, w), dtype=np.uint8)
-    rows = range(H - 1, -1, -1) if bottom_up else range(H)
-    # the scan writes only the row it is visiting, so the non-black
-    # test over the whole strip can vectorize up front (one pass over
-    # all pixels) instead of per row
+    step = -1 if bottom_up else 1
     nbm = _nonblack(arr.reshape(nb_, H * w), colors, near).reshape(H, w)
-    for edge_dist, r in enumerate(rows):
-        act = counts <= max_nb
-        nb = nbm[r]
-        counts = counts + (act & nb)
-        if max_nb > 0 and edge_dist == 0:
-            # valid value on the very first scanned row terminates the
-            # column outright (nearblack_lib.cpp:611-617)
-            counts[act & nb] = max_nb + 1
-        repl = act & (counts <= max_nb)
-        if repl.any():
-            arr[:, r, repl] = replace_value
-            if alpha is not None:
-                alpha[r, repl] = 0
-        out_counts[r] = np.minimum(counts, max_nb + 1).astype(np.uint8)
-    return out_counts
+    c = nbm[::step].astype(np.int32)
+    c[0] *= max_nb + 1
+    c = np.cumsum(c, axis=0, out=c)[::step]
+    repl = c <= max_nb
+    np.copyto(arr, replace_value, where=repl)
+    if alpha is not None:
+        alpha[repl] = 0
+    return np.minimum(c, max_nb + 1).astype(np.uint8)
+
+
+def _hscan_table(max_nb: int) -> np.ndarray:
+    """Flat transition table of the horizontal check's per-row state
+    machine: the next state is ``table[state + key]``.
+
+    A row's state is "testing with run counter nnb" (nnb = 0..max_nb)
+    or dormant (max_nb + 1). A pixel's key is its column count cz
+    (< 256, the sidecar is capped at max_nb + 1) plus 256 when it is
+    black. States are stored times _KEYS, so one step is one add and
+    one gather. While testing, a non-black pixel sets nnb to cz when
+    cz <= max_nb (grey-area rule, nearblack_lib.cpp:695-698) and
+    increments it otherwise, going dormant past max_nb; a black pixel
+    keeps nnb. A dormant row wakes with nnb = 0 on any cz == 0
+    (:734-739)."""
+    dormant = max_nb + 1
+    cz = np.arange(256)
+    nnb = np.arange(dormant)[:, None]
+    t = np.empty((dormant + 1, 2, 256), dtype=np.intp)
+    t[:dormant, 0] = np.where(cz <= max_nb, cz, nnb + 1)
+    t[:dormant, 1] = nnb
+    t[dormant] = np.where(cz == 0, 0, dormant)
+    return (t * _KEYS).ravel()
 
 
 def _hscan(
@@ -136,37 +159,40 @@ def _hscan(
     replace_value: int,
     left_to_right: bool,
 ) -> None:
-    """In-place horizontal check over a (nbands, h, W) strip, vector
-    state across the h rows. counts: (h, W) uint8 sidecar. The scan
-    covers iStart..iEnd EXCLUSIVE (`i != iEnd`, nearblack_lib.cpp:653)."""
+    """In-place horizontal check over a (nbands, h, W) strip, one state
+    machine per row (``_hscan_table``) stepped one column at a time
+    across all h rows. counts: (h, W) uint8 sidecar. The scan covers
+    iStart..iEnd EXCLUSIVE (`i != iEnd`, nearblack_lib.cpp:653). A
+    pixel is replaced iff its row is testing both before and after it."""
     nb_, h, W = arr.shape
     if W <= 1:
         return
-    xs = range(0, W - 1) if left_to_right else range(W - 1, 0, -1)
-    istart = 0 if left_to_right else W - 1
-    do_test = np.ones(h, dtype=bool)
-    nnb = np.zeros(h, dtype=np.int32)
+    table = _hscan_table(max_nb)
+    dormant = (max_nb + 1) * _KEYS  # a dormant row's stored state
     # columns ahead of the cursor are never modified by the scan, so
-    # the non-black test vectorizes over the whole strip up front
+    # the non-black test and the keys vectorize over the whole strip
     nbm = _nonblack(arr.reshape(nb_, h * W), colors, near).reshape(h, W)
-    for x in xs:
-        nb = nbm[:, x]
-        cz = counts[:, x].astype(np.int32)
-        # grey-area rule (:695-698): a non-black pixel inherits the
-        # column count when that count is still <= max, else the run
-        # counter increments
-        nnb_new = np.where(nb, np.where(cz <= max_nb, cz, nnb + 1), nnb)
-        stop = nnb_new > max_nb
-        if max_nb > 0 and x == istart:
-            stop = stop | nb  # edge-column valid data (:708-713)
-        repl = do_test & ~stop
-        if repl.any():
-            arr[:, repl, x] = replace_value
-            if alpha is not None:
-                alpha[repl, x] = 0
-        re_enable = ~do_test & (cz == 0)  # :734-739
-        nnb = np.where(do_test, nnb_new, np.where(re_enable, 0, nnb))
-        do_test = np.asarray(np.where(do_test, ~stop, re_enable), dtype=bool)
+    key = np.left_shift(~nbm, 8, dtype=np.uint16)
+    key |= counts
+    # scanned columns in scan order, each one contiguous row of (W-1, h)
+    scanned = np.s_[:, :-1] if left_to_right else np.s_[:, :0:-1]
+    key = np.ascontiguousarray(key[scanned].T)
+    state = np.empty(key.shape, dtype=np.intp)  # after each scanned column
+    state[0] = table[key[0]]
+    if max_nb > 0:
+        # edge-column valid data stops the test (:708-713)
+        state[0][nbm[:, 0 if left_to_right else W - 1]] = dormant
+    step = np.empty(h, dtype=np.intp)
+    for i in range(1, len(key)):
+        np.add(state[i - 1], key[i], out=step)
+        table.take(step, out=state[i])
+    testing = state < dormant
+    testing[1:] &= testing[:-1]
+    mask = np.zeros((h, W), dtype=bool)
+    mask[scanned] = testing.T
+    np.copyto(arr, replace_value, where=mask)
+    if alpha is not None:
+        alpha[mask] = 0
 
 
 def nearblack(

@@ -95,7 +95,7 @@ def pansharpen(
     wts = np.asarray(weights, dtype=np.float64)
     nd = nodata
 
-    def _brovey(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _brovey(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         panrow = pdf[pdf.piece_band == -1]
         if not len(panrow):

@@ -335,7 +335,7 @@ def polygonize(
         "dn", F.col("final_wkt").alias("wkt"), "last_row", "first_col"
     )
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(key, pdf):
         # union-find across tile-local pieces by run adjacency
         runs = pdf[["r", "c0", "c1", "comp"]].to_dict("records")
         comp_parent: dict[str, str] = {}

@@ -157,7 +157,7 @@ def proximity(
         tiles = densify(tiles, spec, bands=[band])
 
     # phase A: row strips
-    def _xpass(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _xpass(key, pdf):
         tyy = int(key[0])
         sh = min(ts, H - tyy * ts)
         strip = np.full((sh, W), _INF)
@@ -179,7 +179,7 @@ def proximity(
         ypass_in = rowpass.unionByName(src_rows.select([f.name for f in TILE_SCHEMA.fields]))
 
     # phase B: column strips of the row-pass result
-    def _ypass(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _ypass(key, pdf):
         txx = int(key[0])
         sw = min(ts, W - txx * ts)
         strip = np.full((H, sw), _INF)

@@ -789,7 +789,7 @@ def rasterize(
             _apply_burn(arr, mv, bv, merge_alg, burn_value_from_z)
         return arr
 
-    def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         h, w = spec.tile_shape(tyy, txx)
         oy, ox = tyy * ts, txx * ts
@@ -818,7 +818,7 @@ def rasterize(
         a[idx] = vals
         return tilecodec.tile_row(band, tyy, txx, a.reshape(h, w))
 
-    def _burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn_partial(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         h, w = spec.tile_shape(tyy, txx)
         arr = _accumulate(pdf, h, w, tyy * ts, txx * ts, base=0.0)
@@ -829,7 +829,7 @@ def rasterize(
             rows.append(_partial_row(b + 1, tyy, txx, h, w, idx, a[idx]))
         return pd.DataFrame(rows)
 
-    def _merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge_partials(key, pdf):
         b, tyy, txx = int(key[0]), int(key[1]), int(key[2])
         h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
         total = np.full(h * w, float(spec.init), dtype=np.float64)
@@ -1339,7 +1339,7 @@ def mosaic(tile_tables: list[DataFrame], nodata: float = 0.0, method: str = "las
     for t in tagged[1:]:
         allt = allt.unionByName(t)
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(key, pdf):
         pdf = pdf.sort_values("_src", kind="stable")
         if method == "first":
             pdf = pdf.iloc[::-1]

@@ -380,7 +380,7 @@ def surf_descriptors(
     )
     cols = ["octave", "interval", "y", "x", "scale", "radius", "sign", "desc"]
 
-    def _desc(key, kpdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
+    def _desc(key, kpdf, tdf):
         if not len(kpdf):
             return pd.DataFrame(columns=cols)
         gty, gtx = int(key[0]), int(key[1])

@@ -1127,7 +1127,7 @@ def raster_tile(
     )
     joined = pairs.join(src, ["sty", "stx"], "inner")
 
-    def _warp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _warp(key, pdf):
         z, txx, tyy = int(key[0]), int(key[1]), int(key[2])
         if approx_error > 0.0:
             sx, sy = approx_scanline_coords(tms, z, txx, tyy, src_pipeline, src_spec, approx_error)
@@ -1365,7 +1365,7 @@ def overview_level(tiles: DataFrame, resampling: str = "average", tile_size: int
     )
     half = tile_size // 2
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(key, pdf):
         z, txx, tyy, band = (int(key[0]), int(key[1]), int(key[2]), int(key[3]))
         out = np.zeros((tile_size, tile_size), dtype=pdf["dtype"].iloc[0])
         for t, qy, qx in zip(tilecodec.decode_batch(pdf, tile_size), pdf["qy"].tolist(), pdf["qx"].tolist()):
@@ -1436,7 +1436,7 @@ def overview_gauss(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
         "z int, tx int, ty int, band int, dtype string, role int, qx int, qy int, payload binary",
     )
 
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge(key, pdf):
         z, txx, tyy, band = (int(key[0]), int(key[1]), int(key[2]), int(key[3]))
         dt = pdf["dtype"].iloc[0]
         has_b = (pdf["role"] == 1).any()

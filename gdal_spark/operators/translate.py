@@ -153,7 +153,7 @@ def translate(
 
     pieces = tiles.mapInPandas(_pieces, PIECE_SCHEMA)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         band, dty, dtx = int(key[0]), int(key[1]), int(key[2])
         h, w = dspec.tile_shape(dty, dtx)
         di = np.arange(dty * dts, dty * dts + h)
@@ -351,7 +351,7 @@ def nodata_to_alpha(
         raise ValueError(f"need {nb} nodata values, got {len(nod)}")
     alpha_band = nb + 1
 
-    def _alpha(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _alpha(key, pdf):
         tyy, txx = int(key[0]), int(key[1])
         m = None
         for b, t in zip(pdf["band"].tolist(), tilecodec.decode_batch(pdf)):

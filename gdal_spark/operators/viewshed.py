@@ -262,7 +262,7 @@ def _combine_tiles(masks: DataFrame, out_dtype: str) -> DataFrame:
     for a single observer, so sum == union; for cumulative mode the sum
     counts observers)."""
 
-    def _sum(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _sum(key, pdf):
         acc = sum(t.astype(np.int64) for t in tilecodec.decode_batch(pdf))
         return pd.DataFrame([tilecodec.tile_row(1, int(key[0]), int(key[1]), acc, out_dtype)])
 
@@ -299,7 +299,7 @@ def viewshed(
     )
     exploded = tiles.filter(F.col("band") == band).join(assign, ["tx", "ty"])
 
-    def _vis(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _vis(key, pdf):
         rows = _sector_masks(
             pdf, spec, int(key[0]), nsectors, ox, oy, observer_height, target_height
         )
@@ -342,7 +342,7 @@ def cumulative_viewshed(
     )
     exploded = tiles.filter(F.col("band") == band).join(assign, ["tx", "ty"])
 
-    def _vis(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _vis(key, pdf):
         ox_, oy_ = int(pdf["ox"].iloc[0]), int(pdf["oy"].iloc[0])
         out = _sector_masks(
             pdf, spec, int(key[1]), nsectors, ox_, oy_, observer_height, target_height

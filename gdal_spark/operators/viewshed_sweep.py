@@ -403,7 +403,7 @@ def viewshed_sweep(
         )
         dem_in = dem_in.unionByName(seed_df)
 
-    def _proc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _proc(key, pdf):
         txx, tyy = int(key[0]), int(key[1])
         X0, Y0 = txx * ts, tyy * ts
         dem_rows = pdf[pdf["kind"] == "dem"]

@@ -185,6 +185,16 @@ def get_spark(
         # Janino on every pass, 0 with this (4-CPU host). A class is a
         # few KB of metaspace.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # PySpark records the Python call site of every classic Column
+        # method and F.col in the JVM, for the "== DataFrame ==" context
+        # of ANSI errors: four py4j calls and a stack walk each.
+        # F.col("a") + F.lit(1.0) takes 7 py4j round trips without it
+        # and 27 with it, and building spatial_join_cells' plan 222 ms
+        # instead of 277 ms (4-CPU host). Without it such an error names
+        # a JVM frame instead of the Python file:line; pass
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"} to get the call sites back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in {**worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)

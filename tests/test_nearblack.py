@@ -56,6 +56,21 @@ def _border_raster(rng, nbands, h, w):
     return arr
 
 
+def _collar_raster(seed, n, ts):
+    """n x n uint8 tiles of ts built like perfbench's nearblack source:
+    each tile drawn from its own (seed, ty, tx) stream, content tiles
+    (40..254) in the middle and a near-black collar (0..11) at least
+    one tile wide."""
+    lo, hi = max(1, n // 8), n - max(1, n // 8)
+    arr = np.empty((1, n * ts, n * ts), dtype=np.uint8)
+    for ty in range(n):
+        for tx in range(n):
+            rng = np.random.default_rng((seed, ty, tx))
+            lo_v, hi_v = (40, 255) if lo <= ty < hi and lo <= tx < hi else (0, 12)
+            arr[0, ty * ts : (ty + 1) * ts, tx * ts : (tx + 1) * ts] = rng.integers(lo_v, hi_v, (ts, ts))
+    return arr
+
+
 class TestScalarSemantics:
     def test_all_black_replaced(self):
         arr = np.full((1, 6, 7), 9, dtype=np.uint8)
@@ -130,6 +145,33 @@ class TestDistributedParity:
         want_out, _ = nearblack_scalar(arr)
         got = nearblack(_tiles(spark, arr, spec), spec)
         np.testing.assert_array_equal(_mat(got, spec, 1)[:1], want_out)
+
+    def test_parity_max_non_black_254(self, spark):
+        # the largest -nb: the sidecar reaches 255 and the horizontal
+        # state machine its 256 states; 23 x 17 is no multiple of 7
+        rng = np.random.default_rng(254)
+        arr = _border_raster(rng, 2, 23, 17)
+        spec = _spec(arr, tile_size=7)
+        cfg = dict(near=10, max_non_black=254, set_alpha=True)
+        want_out, want_alpha = nearblack_scalar(arr, **cfg)
+        m = _mat(nearblack(_tiles(spark, arr, spec), spec, **cfg), spec, 3)
+        np.testing.assert_array_equal(m[:2], want_out)
+        np.testing.assert_array_equal(m[2], want_alpha)
+
+    def test_parity_collar_raster(self, spark):
+        # the shape of perfbench's nearblack source, which checks only
+        # the tile count: several tiles per axis, content block, collar
+        n, ts = 4, 32
+        arr = _collar_raster(5, n, ts)
+        spec = _spec(arr, tile_size=ts)
+        cfg = dict(near=15, max_non_black=2, set_alpha=True)
+        want_out, want_alpha = nearblack_scalar(arr, **cfg)
+        got = nearblack(_tiles(spark, arr, spec), spec, **cfg)
+        m = _mat(got, spec, 2)
+        np.testing.assert_array_equal(m[0], want_out[0])
+        np.testing.assert_array_equal(m[1], want_alpha)
+        assert got.filter("band = 1").count() == n * n
+        assert (want_out[0, :ts] == 0).all() and (want_out[0, ts + 2 : -ts - 2, ts + 2 : -ts - 2] >= 40).all()
 
     def test_sparse_input_densifies(self, spark):
         # absent tiles are init (0 = black): a raster whose only

@@ -37,6 +37,27 @@ def test_codegen_cache_outlives_a_round_of_distinct_plans(spark):
     assert compiles.getCount() - before == 0
 
 
+def test_column_building_skips_call_site_capture(spark, monkeypatch):
+    """PySpark's DataFrame debugging records the Python call site of
+    every classic Column method in the JVM: F.col("a") + F.lit(1.0)
+    took 27 py4j round trips with it and takes 7 without."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # py4j freeing proxies collected elsewhere
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    F.col("a") + F.lit(1.0)  # resolves the JVM classes once
+    monkeypatch.setattr(client, "send_command", counted)
+    F.col("a") + F.lit(1.0)
+    assert len(sent) <= 10, sent
+
+
 def _write_zip(path, modules):
     with zipfile.ZipFile(path, "w") as z:
         for name in modules:
